@@ -9,6 +9,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..session import persist_slot
+
 TOKEN_SPLIT_RE = r"[^\p{L}\p{Nd}]+"
 
 # Minimal per-language stopword sets for the n-gram/stopword language-ID
@@ -237,32 +239,6 @@ def hamming64(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
 
-# One-slot registry for the LM unigram persist: bigram_logprob_scores
-# returns a LAZY query that references the persisted table, so the
-# function cannot unpersist it before returning. Releasing the previous
-# call's handle on each new call bounds executor storage at one
-# vocabulary-sized table per session instead of one per call.
-_LM_UNIGRAM_SLOT: list = []
-
-
-def _persist_lm_unigram(df):
-    while _LM_UNIGRAM_SLOT:
-        old = _LM_UNIGRAM_SLOT.pop()
-        try:
-            # a repeated call with the same model corpus re-persists the
-            # SAME plan — CacheManager dedupes those into one entry, so
-            # keeping the old handle stays bounded and the new query
-            # reuses the already-materialized table instead of dropping
-            # and recomputing it
-            if not old.sameSemantics(df):
-                old.unpersist()
-        except Exception:  # noqa: BLE001 — a stopped session must not
-            pass           # break building the next session's query
-    df = df.persist()
-    _LM_UNIGRAM_SLOT.append(df)
-    return df
-
-
 def bigram_logprob_scores(
     docs,
     model_docs,
@@ -319,11 +295,13 @@ def bigram_logprob_scores(
     # corpus instead of two (broadcast subqueries do not participate
     # in exchange reuse, measured: ReusedExchange never fires here).
     # Lifetime: the returned query is lazy, so the persist cannot be
-    # released here; _persist_lm_unigram slot-tracks it and frees the
-    # PREVIOUS call's table, bounding a long-lived session at one
-    # pinned vocabulary table (a stale unpersist is always safe —
+    # released here; the "lm_unigram" persist slot tracks it and frees
+    # the session's PREVIOUS call's table, bounding a long-lived session
+    # at one pinned vocabulary table (a stale unpersist is always safe —
     # Spark recomputes if that query ever re-runs).
-    uni = _persist_lm_unigram(mtok.groupBy("w").agg(F.count("*").alias("cw")))
+    uni = persist_slot(
+        "lm_unigram", mtok.groupBy("w").agg(F.count("*").alias("cw"))
+    )
     # T = Σ cw exactly (bigint sum over the unigram table) — same
     # value the former count(*) over the token stream produced
     tot = uni.agg(F.sum("cw").cast("double").alias("T"))

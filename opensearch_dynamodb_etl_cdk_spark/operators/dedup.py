@@ -28,33 +28,7 @@ from ..functions.text import (
     shingles_from_tokens,
     tokens,
 )
-from ..session import min_partitions
-
-# Per-function one-slot registries for persists that the RETURNED lazy
-# query consumes (the function cannot unpersist before returning):
-# releasing the previous call's handles on each new call bounds a
-# long-lived session at one call's worth of pinned blocks per operator.
-# A stale unpersist is always safe — Spark recomputes if that query
-# re-runs.
-_PERSIST_SLOTS: dict[str, list] = {}
-
-
-def _persist_slot(key: str, *frames):
-    for old in _PERSIST_SLOTS.get(key, ()):
-        try:
-            # keep a previous frame alive when the new call re-persists
-            # the SAME plan: CacheManager dedupes identical plans into
-            # one entry, so retaining it stays bounded AND a repeated
-            # call (same inputs) reuses the already-materialized cache
-            # instead of dropping and recomputing it
-            if any(old.sameSemantics(f) for f in frames):
-                continue
-            old.unpersist()
-        except Exception:  # noqa: BLE001 — a stopped session must not
-            pass           # break building the next session's query
-    out = [f.persist() for f in frames]
-    _PERSIST_SLOTS[key] = out
-    return out if len(out) > 1 else out[0]
+from ..session import min_partitions, persist_slot
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -164,7 +138,7 @@ def minhash_lsh_pairs(
     r = num_hashes // bands
     # persisted: consumed three times (signature build + both verify
     # joins); shingling is interpreted array work, worth paying once
-    sh = _persist_slot(
+    sh = persist_slot(
         "minhash_shingles", _shingle_frame(df, text_col, id_col, shingle_k)
     )
     sig = _signature_cols(sh, id_col, num_hashes)
@@ -176,7 +150,7 @@ def minhash_lsh_pairs(
         )
         for b in range(bands)
     ]
-    banded = _persist_slot(
+    banded = persist_slot(
         "minhash_banded",
         sig.select(id_col, F.explode(F.array(*band_structs)).alias("bk"))
         .select(id_col, "bk.band", "bk.bucket"),
@@ -266,7 +240,7 @@ def simhash_pairs(
     """Near-dup pairs by SimHash: block on each of the four 16-bit chunks
     (pigeonhole: hamming ≤ 3 ⇒ at least one chunk identical), verify
     hamming over the full 64 bits."""
-    sh = _persist_slot("simhash_frame", simhash_frame(df, text_col, id_col))
+    sh = persist_slot("simhash_frame", simhash_frame(df, text_col, id_col))
     chunked = sh.select(
         id_col,
         "simhash",

@@ -4770,6 +4770,17 @@ def _p50_fn(body: dict):
     return lambda c: F.percentile(c, F.lit(0.5))
 
 
+def _bucket_missing(df: DataFrame, field: str, body: dict) -> DataFrame:
+    """Histogram-family rule: documents without ``field`` fall in no
+    bucket, as in OpenSearch, unless the agg sets ``missing`` — then
+    they bucket as that value (cast to the field's type)."""
+    if body.get("missing") is None:
+        return df.filter(F.col(field).isNotNull())
+    dtype = df.select(field).schema[0].dataType
+    return df.withColumn(field, F.coalesce(
+        F.col(field), F.lit(body["missing"]).cast(dtype)))
+
+
 def _run_agg(
     df: DataFrame, name: str, spec: dict, background: DataFrame | None = None,
     fg_pred: Column | None = None
@@ -5114,6 +5125,7 @@ def _run_agg(
 
     if kind == "date_histogram":
         field = body["field"]
+        df = _bucket_missing(df, field, body)
         fcol = F.col(field)
         tz = body.get("time_zone")
         if tz:
@@ -5272,7 +5284,7 @@ def _run_agg(
         metric_sub, pipe_sub = _split_pipeline_aggs(sub)
         metric_cols = [_metric_agg(n, s) for n, s in metric_sub.items()]
         agg_df = (
-            df.filter(F.col(field).isNotNull())
+            _bucket_missing(df, field, body)
             .groupBy(bucket)
             .agg(F.count("*").alias("doc_count"), *metric_cols)
         )

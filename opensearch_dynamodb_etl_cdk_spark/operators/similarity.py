@@ -419,8 +419,10 @@ def ivf_assign(
         # double literals that dominated each Lloyd iteration's driver
         # time. Non-finite centroids (json can't carry inf/nan) keep
         # the _sql_double path.
+        # coerced copy: numpy rows / scalars are not JSON-serializable
         cents_col = F.from_json(
-            F.lit(json.dumps(centroids)), _CENTS_TYPE
+            F.lit(json.dumps([[float(x) for x in c] for c in centroids])),
+            _CENTS_TYPE,
         )
     else:
         cents_col = F.expr("array(" + ", ".join(

@@ -17,6 +17,7 @@ chosen so the same code is correct on a large cluster:
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -62,6 +63,38 @@ def min_partitions(df, target: int | None = None):
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+# One-slot registries for persists that an operator's RETURNED lazy
+# query consumes (the operator cannot unpersist before returning):
+# each call releases the previous call's handles under the same key,
+# bounding a long-lived session at one call's worth of pinned blocks per
+# operator. Slots are per SparkSession, so concurrent callers on
+# different sessions never release each other's frames, and the swap
+# runs under a lock so no persisted frame is ever left without a handle.
+# A stale unpersist is always safe — Spark recomputes if that query
+# re-runs. Callers sharing ONE session still evict each other.
+_PERSIST_SLOTS: dict[SparkSession, dict[str, list]] = {}
+_PERSIST_LOCK = threading.Lock()
+
+
+def persist_slot(key: str, *frames):
+    with _PERSIST_LOCK:
+        slots = _PERSIST_SLOTS.setdefault(frames[0].sparkSession, {})
+        for old in slots.get(key, ()):
+            try:
+                # keep a previous frame alive when the new call
+                # re-persists the SAME plan: CacheManager dedupes
+                # identical plans into one entry, so retaining it stays
+                # bounded AND a repeated call reuses the materialized
+                # cache instead of dropping and recomputing it
+                if any(old.sameSemantics(f) for f in frames):
+                    continue
+                old.unpersist()
+            except Exception:  # noqa: BLE001 — a stopped session must
+                pass           # not break building the next query
+        out = slots[key] = [f.persist() for f in frames]
+    return out if len(out) > 1 else out[0]
 
 
 def _ns_timestamp_columns(path: str) -> set[str]:

@@ -33,16 +33,23 @@ Scale notes:
   and the merge takes the per-key max over union(stored, batch), so a
   late re-delivery with a lower sequence number loses to the stored
   image (true last-write-wins, not last-arrived-wins).
-- A batch whose deletes empty an entire hash bucket removes that
-  bucket's partition directory explicitly — dynamic partition
-  overwrite alone never rewrites a partition absent from the output,
-  which would silently resurrect deleted documents.
+- Every write is copy-on-write behind a per-route manifest
+  (``_manifest.json``: version, parquet files per bucket, schema,
+  bucket count). New part files land beside the old ones, the next
+  version is published atomically, then files only the old version
+  referenced are deleted — a bucket whose deletes emptied it simply
+  drops out of the manifest. Readers resolve a route from its
+  manifest (never by listing the directory), and reuse the resolved
+  frame until the manifest changes.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import re
+import shutil
+import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -67,6 +74,7 @@ CDC_SCHEMA = T.StructType(
 )
 
 N_BUCKETS = 16  # hash buckets for index-table partitioning
+MANIFEST = "_manifest.json"  # "_" keeps it invisible to parquet readers
 
 # Active role scopes, keyed by pipeline identity. A ContextVar (not an
 # instance attribute) so concurrent threads / interleaved generators
@@ -75,6 +83,22 @@ import contextvars as _contextvars
 
 _ACTIVE_ROLES: _contextvars.ContextVar[dict] = _contextvars.ContextVar(
     "spark_graft_active_roles", default={})
+
+
+def _load_json(path: str) -> dict:
+    try:
+        with open(path) as f:
+            return json.load(f)
+    except (FileNotFoundError, NotADirectoryError):
+        return {}
+
+
+def _save_json(path: str, obj) -> None:
+    """Atomic replace: readers never see a partial file."""
+    tmp = f"{path}.{uuid.uuid4().hex}.tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)
 
 
 def _describe_error(exc: Exception, limit: int = 4000) -> str:
@@ -217,6 +241,8 @@ class FlightsEtlPipeline:
         # stale role scope (the dict entry keeps the token alive, so
         # token identity can never be recycled while a scope holds it)
         self._role_token = object()
+        # resolved index frames: route dir → (manifest text, frame)
+        self._views: dict[str, tuple[str, DataFrame]] = {}
 
     # -- shared transform (one code path for bootstrap and tail, ST2) -------
 
@@ -255,21 +281,161 @@ class FlightsEtlPipeline:
         return os.path.join(self.cfg.index_root, route)
 
     def read_index(self, route: str) -> DataFrame | None:
-        path = self._index_path(route)
+        """The route's index table as a frame, or None when it was never
+        materialized.
+
+        Resolved from the route's published manifest, never by listing
+        the directory: the frame is ``read.schema(s).parquet(*files)``
+        over the manifest's file set, built once per manifest version
+        and reused until a write publishes the next one — a repeat read
+        of an unchanged route launches no Spark job. Each call re-reads
+        the small manifest file, so a write made through another
+        pipeline instance on the same ``index_root`` shows on the next
+        read. Concurrent readers can still race GC: a frame planned
+        against version N may hit a file the publish of N+1 deleted."""
+        return self._resolve(self._index_path(route))
+
+    def _resolve(self, root: str) -> DataFrame | None:
+        got = self._manifest(root)
+        if got is None:
+            return None
+        text, m = got
+        hit = self._views.get(root)
+        # the whole manifest text is the key, not just its version: a
+        # restore or a delete-and-recreate can reuse a version number
+        if hit is not None and hit[0] == text:
+            return hit[1]
+        schema = T.StructType.fromJson(m["schema"])
+        files = [os.path.join(root, f) for fs in m["files"].values() for f in fs]
+        df = (
+            self.spark.read.schema(schema).option("basePath", root)
+            .parquet(*files)
+            if files else self.spark.createDataFrame([], schema)
+        )
+        self._views[root] = (text, df)
+        return df
+
+    def _manifest(self, root: str) -> tuple[str, dict] | None:
+        """(raw text, parsed) of the manifest under ``root``. A
+        directory of parquet files with no manifest (written before
+        manifests existed) is adopted once: listed, and published as
+        version 1. No manifest and no files = not materialized."""
         try:
-            return self.spark.read.parquet(path)
-        except Exception:
-            return None  # not yet materialized
+            with open(os.path.join(root, MANIFEST)) as f:
+                text = f.read()
+            return text, json.loads(text)
+        except (FileNotFoundError, NotADirectoryError):
+            pass
+        files = self._list_parquet(root)
+        if not files:
+            return None
+        self._write_manifest(root, {
+            "version": 1, "files": files, "n_buckets": None,
+            "schema": self.spark.read.parquet(root).schema.jsonValue(),
+        })
+        return self._manifest(root)
+
+    @staticmethod
+    def _list_parquet(root: str) -> dict[str, list[str]]:
+        """Visible data files under ``root`` (the parquet reader's
+        hidden-path rule), root-relative, grouped by ``_bucket`` value
+        ("" for files outside any bucket dir)."""
+        out: dict[str, list[str]] = {}
+        for d, dirs, fs in os.walk(root):
+            dirs[:] = [x for x in dirs
+                       if not x.startswith(("_", ".")) or "=" in x]
+            rel = os.path.relpath(d, root)
+            bucket = "" if rel == "." else rel.split("=", 1)[1]
+            for fn in sorted(fs):
+                if not fn.startswith(("_", ".")):
+                    out.setdefault(bucket, []).append(
+                        fn if rel == "." else os.path.join(rel, fn))
+        return out
+
+    @staticmethod
+    def _write_manifest(root: str, manifest: dict) -> None:
+        os.makedirs(root, exist_ok=True)
+        _save_json(os.path.join(root, MANIFEST), manifest)
+
+    def _publish(self, route: str, df: DataFrame, replace=None,
+                 n_buckets: int | None = None) -> None:
+        """Copy-on-write write of ``df`` into the route: the one write
+        path of every index table.
+
+        Spark writes the rows to a private staging dir (partitioned by
+        ``_bucket`` when the frame has one); the part files are renamed
+        into the route's ``_bucket=<b>/`` dirs under new names, so no
+        file a reader may hold is ever overwritten. Manifest version
+        N+1 is then published atomically: buckets in ``replace``
+        (``None`` = every bucket, empty = a pure append) hold exactly
+        the new files, other buckets keep version N's files plus any
+        new ones, and the schema is the union of N's and ``df``'s (no
+        column vanishes from buckets the write did not touch). Last,
+        GC deletes the files N referenced and N+1 does not, and any
+        bucket dir that leaves empty. A reader still scanning version N
+        can race that GC (no version pinning)."""
+        root = self._index_path(route)
+        got = self._manifest(root)
+        prev = got[1] if got else {"version": 0, "files": {}, "schema": None}
+        stage = os.path.join(self.cfg.index_root, "_staging", uuid.uuid4().hex)
+        writer = df.write
+        if "_bucket" in df.columns:
+            writer = writer.partitionBy("_bucket")
+        writer.parquet(stage)
+        new = self._list_parquet(stage)
+        for f in (f for fs in new.values() for f in fs):
+            os.makedirs(os.path.dirname(os.path.join(root, f)), exist_ok=True)
+            os.rename(os.path.join(stage, f), os.path.join(root, f))
+        shutil.rmtree(stage)
+
+        old = prev["files"]
+        gone = {str(b) for b in replace} if replace is not None else set(old)
+        files = {b: fs for b, fs in old.items() if b not in gone}
+        for b, fs in new.items():
+            files[b] = files.get(b, []) + fs
+        # union schema, the written frame's types winning; the bucket
+        # partition column last, typed as partition inference types it
+        cols = {}
+        if prev["schema"] is not None:
+            cols = {f.name: f for f in T.StructType.fromJson(prev["schema"])}
+        cols.update((f.name, f) for f in df.schema)
+        bucketed = cols.pop("_bucket", None) is not None
+        fields = list(cols.values())
+        if bucketed:
+            fields.append(T.StructField("_bucket", T.IntegerType()))
+        self._write_manifest(root, {
+            "version": prev["version"] + 1,
+            "files": dict(sorted(files.items())),
+            "n_buckets": n_buckets,
+            "schema": T.StructType(fields).jsonValue(),
+        })
+
+        live = {f for fs in files.values() for f in fs}
+        for f in sorted({f for fs in old.values() for f in fs} - live):
+            d, name = os.path.split(os.path.join(root, f))
+            for path in (os.path.join(d, name), os.path.join(d, f".{name}.crc")):
+                try:
+                    os.remove(path)
+                except FileNotFoundError:
+                    pass
+            if d != root:
+                try:
+                    os.rmdir(d)  # only succeeds once the bucket is empty
+                except OSError:
+                    pass
 
     def _merge_route(self, route_df: DataFrame, route: str) -> None:
         """MERGE one route's slice of a micro-batch into its index table.
 
-        Only the hash buckets present in the batch are rewritten
-        (dynamic partition overwrite) — merge cost ∝ touched buckets.
-        Buckets the batch touched but the merge left empty (deletes
-        wiped every doc in them) are removed from disk explicitly:
-        dynamic overwrite only replaces partitions present in the
-        output, so without this step deleted documents would survive.
+        Only the hash buckets present in the batch are rewritten — merge
+        cost ∝ touched buckets. The merged rows of those buckets are
+        published copy-on-write (:meth:`_publish`): new part files, a
+        new manifest version in which the touched buckets hold only the
+        new files, then GC of the replaced ones. A bucket whose deletes
+        wiped every doc gets no new file and drops out of the manifest
+        and off disk. The merge reads files the write never overwrites,
+        so it needs no materialization barrier; a concurrent reader of
+        the old version can still race the GC.
         """
         # the route's LIVE bucket count governs placement — a resized
         # index (_split/_shrink) differs from cfg.n_buckets, so the
@@ -290,39 +456,12 @@ class FlightsEtlPipeline:
             merged = apply_cdc_batch(
                 current, batch, keep_tombstones=self.cfg.keep_tombstones
             )
-            # Materialize before writing: the merge plan reads the same
-            # parquet files the write is about to replace (no Delta txn log
-            # in this image) — localCheckpoint breaks the lineage so the
-            # overwrite never races its own input.
-            merged = merged.localCheckpoint(eager=True)
-            (
-                merged.repartition(max(1, len(touched)), "_bucket")
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_bucket")
-                .parquet(self._index_path(route))
+            self._publish(
+                route, merged.repartition(max(1, len(touched)), "_bucket"),
+                replace=touched, n_buckets=nb,
             )
-            surviving = {
-                # bounded: one row per hash bucket (<= n_buckets)
-                r._bucket for r in merged.select("_bucket").distinct().collect()
-            }
-            self._remove_buckets(route, set(touched) - surviving)
         finally:
             batch.unpersist()
-
-    def _remove_buckets(self, route: str, buckets: set) -> None:
-        """Drop emptied hash-bucket partition directories via the Hadoop
-        FileSystem API (portable across local/HDFS/object stores)."""
-        if not buckets:
-            return
-        jvm = self.spark._jvm
-        conf = self.spark._jsc.hadoopConfiguration()
-        for b in sorted(buckets):
-            p = jvm.org.apache.hadoop.fs.Path(
-                os.path.join(self._index_path(route), f"_bucket={b}")
-            )
-            fs = p.getFileSystem(conf)
-            fs.delete(p, True)
 
     def _write_dlq(self, failed: DataFrame, route: str, error: str) -> None:
         (
@@ -373,9 +512,8 @@ class FlightsEtlPipeline:
         if not fs.exists(p):
             return 0  # nothing ever parked for this route
         # snapshot the slice listing FIRST (Hadoop FS API — portable
-        # across local/HDFS/object stores, same mechanism as
-        # _remove_buckets); everything appended after this point stays
-        # parked for the next replay
+        # across local/HDFS/object stores); everything appended after
+        # this point stays parked for the next replay
         it = fs.listFiles(p, True)
         files = []
         # qualify the base the same way listFiles qualifies its results:
@@ -593,18 +731,11 @@ class FlightsEtlPipeline:
         ``_settings.json`` (written by :meth:`split_index` /
         :meth:`shrink_index`; the leading underscore keeps it invisible
         to the parquet reader), else the pipeline default."""
-        import json
-
-        path = os.path.join(self._index_path(route), "_settings.json")
-        try:
-            with open(path) as f:
-                settings = json.load(f)
-            # the file may carry only blocks (add_block on a never-
-            # resized index) — fall through to the default then
-            if "n_buckets" in settings:
-                return int(settings["n_buckets"])
-        except (FileNotFoundError, NotADirectoryError):
-            pass
+        settings = self._read_route_settings(route)
+        # the file may carry only blocks (add_block on a never-resized
+        # index) — fall through to the default then
+        if "n_buckets" in settings:
+            return int(settings["n_buckets"])
         if not os.path.isdir(self._index_path(route)):
             # first materialization: an index template matching this
             # name supplies the bucket count (the public create-time
@@ -618,24 +749,16 @@ class FlightsEtlPipeline:
                 return sim["n_buckets"]
         return self.cfg.n_buckets
 
-    def _read_route_settings(self, route: str) -> dict:
-        import json
+    def _settings_path(self, route: str) -> str:
+        return os.path.join(self._index_path(route), "_settings.json")
 
-        path = os.path.join(self._index_path(route), "_settings.json")
-        try:
-            with open(path) as f:
-                return json.load(f)
-        except (FileNotFoundError, NotADirectoryError):
-            return {}
+    def _read_route_settings(self, route: str) -> dict:
+        return _load_json(self._settings_path(route))
 
     def _write_route_settings(self, route: str, n_buckets: int) -> None:
-        import json
-
         settings = self._read_route_settings(route)
         settings["n_buckets"] = int(n_buckets)
-        path = os.path.join(self._index_path(route), "_settings.json")
-        with open(path, "w") as f:
-            json.dump(settings, f)
+        _save_json(self._settings_path(route), settings)
 
     # -- index blocks ---------------------------------------------------------
 
@@ -649,8 +772,6 @@ class FlightsEtlPipeline:
         replaying upstream truth, and wedging the checkpointed stream
         on a client-facing block would turn a soft guard into data
         loss; block the client verbs, drain the source instead."""
-        import json
-
         if block not in ("write", "read_only"):
             raise ValueError(f"unsupported block {block!r}")
         if not os.path.isdir(self._index_path(route)):
@@ -659,21 +780,15 @@ class FlightsEtlPipeline:
         blocks = set(settings.get("blocks") or [])
         blocks.add(block)
         settings["blocks"] = sorted(blocks)
-        path = os.path.join(self._index_path(route), "_settings.json")
-        with open(path, "w") as f:
-            json.dump(settings, f)
+        _save_json(self._settings_path(route), settings)
         return {"acknowledged": True, "blocks": settings["blocks"]}
 
     def remove_block(self, route: str, block: str) -> dict:
-        import json
-
         settings = self._read_route_settings(route)
         blocks = set(settings.get("blocks") or [])
         blocks.discard(block)
         settings["blocks"] = sorted(blocks)
-        path = os.path.join(self._index_path(route), "_settings.json")
-        with open(path, "w") as f:
-            json.dump(settings, f)
+        _save_json(self._settings_path(route), settings)
         return {"acknowledged": True, "blocks": settings["blocks"]}
 
     def close_index(self, route: str) -> dict:
@@ -683,20 +798,14 @@ class FlightsEtlPipeline:
         closed state is its OWN flag, not an added write block, so
         opening never clears a write block the user set independently
         (the public _open does not touch index.blocks.write)."""
-        import json
-
         if not os.path.isdir(self._index_path(route)):
             raise ValueError(f"no such index {route!r}")
         settings = self._read_route_settings(route)
         settings["closed"] = True
-        path = os.path.join(self._index_path(route), "_settings.json")
-        with open(path, "w") as f:
-            json.dump(settings, f)
+        _save_json(self._settings_path(route), settings)
         return {"acknowledged": True}
 
     def open_index(self, route: str) -> dict:
-        import json
-
         if not os.path.isdir(self._index_path(route)):
             # mirror close_index: opening a nonexistent index is a 404,
             # not an implicit create — an unchecked makedirs would leave
@@ -704,9 +813,7 @@ class FlightsEtlPipeline:
             raise ValueError(f"no such index {route!r}")
         settings = self._read_route_settings(route)
         settings.pop("closed", None)
-        path = os.path.join(self._index_path(route), "_settings.json")
-        with open(path, "w") as f:
-            json.dump(settings, f)
+        _save_json(self._settings_path(route), settings)
         return {"acknowledged": True}
 
     def _check_closed(self, route: str, op: str) -> None:
@@ -743,24 +850,11 @@ class FlightsEtlPipeline:
         current = self.read_index(route)
         if current is None:
             raise ValueError(f"resize: index {route!r} is not materialized")
-        before = {
-            # bounded: one row per hash bucket (<= n_buckets)
-            r._bucket for r in current.select("_bucket").distinct().collect()
-        }
-        snapshot = current.withColumn(
-            "_bucket", F.pmod(F.xxhash64("_id"), F.lit(new_n))
-        ).localCheckpoint(eager=True)  # break lineage vs the overwrite
-        (
-            snapshot.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_bucket")
-            .parquet(self._index_path(route))
+        self._publish(
+            route,
+            current.withColumn("_bucket", F.pmod(F.xxhash64("_id"), F.lit(new_n))),
+            n_buckets=new_n,
         )
-        after = {
-            # bounded: one row per hash bucket (<= n_buckets)
-            r._bucket for r in snapshot.select("_bucket").distinct().collect()
-        }
-        self._remove_buckets(route, before - after)
         self._write_route_settings(route, new_n)
         return {"acknowledged": True, "n_buckets": new_n}
 
@@ -804,34 +898,25 @@ class FlightsEtlPipeline:
         Every micro-batch MERGE rewrites its touched buckets, so steady
         streaming accumulates small files (the classic streaming-sink
         pathology: at scale, scan cost becomes file-count-bound, not
-        byte-bound). Compaction is the same dynamic-partition-overwrite
-        write the MERGE uses — one coalesced file set per bucket, same
-        data, run off the hot path. ``purge_tombstones`` drops
+        byte-bound). Compaction is the same copy-on-write publish the
+        MERGE uses (:meth:`_publish`) over every bucket: one coalesced
+        file set per bucket, same data, run off the hot path. The new
+        manifest version replaces every bucket's files and GC deletes
+        the old ones (a bucket a purge empties leaves disk); concurrent
+        readers can still race that GC. ``purge_tombstones`` drops
         ``_deleted`` rows (retention boundary: a stale upsert older than
         the purged tombstone CAN resurrect after the purge — run purges
         only past the source's maximum re-delivery horizon)."""
         current = self.read_index(route)
         if current is None:
             return
-        # bounded: one row per hash bucket (<= n_buckets)
-        before = {r._bucket for r in current.select("_bucket").distinct().collect()}
         if purge_tombstones and "_deleted" in current.columns:
             current = current.filter(~F.col("_deleted"))
-        snapshot = current.localCheckpoint(eager=True)  # break lineage vs overwrite
-        # bounded: one row per hash bucket (<= n_buckets)
-        after = {r._bucket for r in snapshot.select("_bucket").distinct().collect()}
-        (
-            snapshot.repartition(
-                self._route_n_buckets(route) * files_per_bucket, "_bucket"
-            )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_bucket")
-            .parquet(self._index_path(route))
+        nb = self._route_n_buckets(route)
+        self._publish(
+            route, current.repartition(nb * files_per_bucket, "_bucket"),
+            n_buckets=nb,
         )
-        # a purge can empty a bucket; dynamic overwrite never rewrites a
-        # partition absent from its output, so drop those dirs explicitly
-        self._remove_buckets(route, before - after)
 
     # -- query surface over the materialized indexes -------------------------
 
@@ -1334,10 +1419,12 @@ class FlightsEtlPipeline:
             new_index = f"{m.group(1)}-{int(m.group(2)) + 1:0{len(m.group(2))}d}"
         if os.path.isdir(self._index_path(new_index)):
             raise ValueError(f"rollover: {new_index!r} already exists")
-        # same schema, zero rows; repartition(1) guarantees one part
-        # file so the parquet footer carries the schema for readers
-        empty = self.spark.createDataFrame([], self.read_index(target).schema)
-        empty.repartition(1).write.parquet(self._index_path(new_index))
+        # same schema, zero rows: a manifest with no files carries the
+        # schema for readers
+        self._publish(
+            new_index,
+            self.spark.createDataFrame([], self.read_index(target).schema),
+        )
         # preserve a filtered alias's row scope across the flip — a
         # plain put_alias would replace the registry entry with a bare
         # pattern and silently widen every post-rollover search
@@ -1381,10 +1468,9 @@ class FlightsEtlPipeline:
             F.unix_micros(F.col(ts_field))
             - F.unix_micros(F.col(ts_field)) % micros
         )
-        dest_path = self._index_path(dest)
+        prev = self.read_index(dest)
         cursor = None
-        if os.path.isdir(dest_path):
-            prev = self.spark.read.parquet(dest_path)
+        if prev is not None:
             cursor = prev.agg(F.max("window")).collect()[0][0]
         # hold back the newest (still-filling) source window
         hi = src.agg(F.max(wcol).alias("h")).collect()[0]["h"]
@@ -1418,7 +1504,7 @@ class FlightsEtlPipeline:
         rolled = work.groupBy("window", *groups).agg(*aggs)
         n = rolled.count()
         if n:
-            rolled.write.mode("append").parquet(dest_path)
+            self._publish(dest, rolled, replace=())
         return n
 
     def delete_index(self, name: str) -> bool:
@@ -1427,8 +1513,6 @@ class FlightsEtlPipeline:
         them inconsistently; stop the pipeline and remove the route
         first (the public API refuses deletes on write-targeted backing
         indices for the same reason)."""
-        import shutil
-
         if name in self.cfg.routes:
             raise ValueError(
                 f"delete_index: {name!r} is a configured CDC route"
@@ -1592,21 +1676,13 @@ class FlightsEtlPipeline:
         return os.path.join(self.cfg.index_root, "_ingest_pipelines.json")
 
     def _read_ingest(self) -> dict:
-        import json
-
-        try:
-            with open(self._ingest_path()) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {}
+        return _load_json(self._ingest_path())
 
     def put_ingest_pipeline(self, pipeline_id: str, body: dict) -> dict:
         """``PUT /_ingest/pipeline/<id>`` analog: validate the
         processor kinds up front (unknown processors fail HERE, not at
         first use) and persist the chain (atomic tmp+rename, same as
         the alias registry)."""
-        import json
-
         processors = list(body.get("processors", []))
         for p in processors:
             (kind, spec), = p.items()
@@ -1618,10 +1694,7 @@ class FlightsEtlPipeline:
         reg[pipeline_id] = {"processors": processors,
                             "description": body.get("description", "")}
         os.makedirs(self.cfg.index_root, exist_ok=True)
-        tmp = self._ingest_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(reg, f)
-        os.replace(tmp, self._ingest_path())
+        _save_json(self._ingest_path(), reg)
         return {"acknowledged": True}
 
     def get_ingest_pipeline(self, pipeline_id: str | None = None) -> dict:
@@ -1633,15 +1706,10 @@ class FlightsEtlPipeline:
         return reg[pipeline_id]
 
     def delete_ingest_pipeline(self, pipeline_id: str) -> bool:
-        import json
-
         reg = self._read_ingest()
         existed = reg.pop(pipeline_id, None) is not None
         if existed:
-            tmp = self._ingest_path() + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(reg, f)
-            os.replace(tmp, self._ingest_path())
+            _save_json(self._ingest_path(), reg)
         return existed
 
     def _ingest_processors(self, pipeline: str | dict) -> list[dict]:
@@ -1670,26 +1738,13 @@ class FlightsEtlPipeline:
         ]
 
     def _write_aliases(self, aliases: dict[str, str]) -> None:
-        import json
-
         os.makedirs(self.cfg.index_root, exist_ok=True)
-        path = os.path.join(self.cfg.index_root, "_aliases.json")
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(aliases, f)
-        os.replace(tmp, path)  # atomic: readers never see a partial file
+        _save_json(os.path.join(self.cfg.index_root, "_aliases.json"), aliases)
 
     def _read_aliases_raw(self) -> dict:
         """Alias registry as stored: value = pattern string, or
         ``{"pattern", "filter"}`` for filtered aliases."""
-        import json
-
-        path = os.path.join(self.cfg.index_root, "_aliases.json")
-        try:
-            with open(path) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {}
+        return _load_json(os.path.join(self.cfg.index_root, "_aliases.json"))
 
     def get_aliases(self) -> dict[str, str]:
         """alias → index pattern (filtered aliases report their
@@ -1705,13 +1760,7 @@ class FlightsEtlPipeline:
         return os.path.join(self.cfg.index_root, "_stored_scripts.json")
 
     def _read_stored_scripts(self) -> dict:
-        import json
-
-        try:
-            with open(self._stored_scripts_path()) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {}
+        return _load_json(self._stored_scripts_path())
 
     def put_script(self, script_id: str, body: dict) -> dict:
         """``PUT /_scripts/<id>`` analog. The stored source is this
@@ -1721,8 +1770,6 @@ class FlightsEtlPipeline:
         same escape-hatch guard every call site applies, so a bad
         script fails HERE, not at first use; persisted atomically like
         the alias/ingest registries."""
-        import json
-
         spec = body.get("script", body)
         source = spec.get("source")
         if source is None:
@@ -1735,9 +1782,7 @@ class FlightsEtlPipeline:
             # with {{param}} placeholders — rendered at search time by
             # render_search_template, so no expression validation here
             if isinstance(source, str):
-                import json as _json
-
-                source = _json.loads(source)
+                source = json.loads(source)
             if not isinstance(source, dict):
                 raise ValueError(
                     "mustache template source must be a search body "
@@ -1759,10 +1804,7 @@ class FlightsEtlPipeline:
         reg = self._read_stored_scripts()
         reg[script_id] = {"lang": lang, "source": source}
         os.makedirs(self.cfg.index_root, exist_ok=True)
-        tmp = self._stored_scripts_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(reg, f)
-        os.replace(tmp, self._stored_scripts_path())
+        _save_json(self._stored_scripts_path(), reg)
         return {"acknowledged": True}
 
     def get_script(self, script_id: str) -> dict:
@@ -1772,15 +1814,10 @@ class FlightsEtlPipeline:
         return reg[script_id]
 
     def delete_script(self, script_id: str) -> bool:
-        import json
-
         reg = self._read_stored_scripts()
         existed = reg.pop(script_id, None) is not None
         if existed:
-            tmp = self._stored_scripts_path() + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(reg, f)
-            os.replace(tmp, self._stored_scripts_path())
+            _save_json(self._stored_scripts_path(), reg)
         return existed
 
     @staticmethod
@@ -1873,13 +1910,7 @@ class FlightsEtlPipeline:
         return os.path.join(self.cfg.index_root, "_index_templates.json")
 
     def _read_index_templates(self) -> dict:
-        import json
-
-        try:
-            with open(self._index_template_path()) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {}
+        return _load_json(self._index_template_path())
 
     def put_index_template(self, name: str, body: dict) -> dict:
         """``PUT /_index_template/<name>`` analog. The settings tier
@@ -1889,8 +1920,6 @@ class FlightsEtlPipeline:
         the public spelling) and a ``priority``; the highest-priority
         matching template supplies the bucket count for indexes that
         have no explicit per-index setting yet."""
-        import json
-
         patterns = list(body.get("index_patterns") or [])
         if not patterns:
             raise ValueError("index template needs index_patterns")
@@ -1907,10 +1936,7 @@ class FlightsEtlPipeline:
             "settings": settings,
         }
         os.makedirs(self.cfg.index_root, exist_ok=True)
-        tmp = self._index_template_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(reg, f)
-        os.replace(tmp, self._index_template_path())
+        _save_json(self._index_template_path(), reg)
         return {"acknowledged": True}
 
     def get_index_template(self, name: str | None = None) -> dict:
@@ -1922,15 +1948,10 @@ class FlightsEtlPipeline:
         return reg[name]
 
     def delete_index_template(self, name: str) -> bool:
-        import json
-
         reg = self._read_index_templates()
         existed = reg.pop(name, None) is not None
         if existed:
-            tmp = self._index_template_path() + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(reg, f)
-            os.replace(tmp, self._index_template_path())
+            _save_json(self._index_template_path(), reg)
         return existed
 
     def simulate_index_template(self, index_name: str) -> dict:
@@ -1984,8 +2005,6 @@ class FlightsEtlPipeline:
         part-file names, dropped buckets) are removed so the mirror
         stays byte-identical to the source. Returns (copied, skipped).
         """
-        import shutil
-
         src_files: dict[str, str] = {}
         for root, _dirs, files in os.walk(src):
             rel = os.path.relpath(root, src)
@@ -2032,8 +2051,6 @@ class FlightsEtlPipeline:
         File-level sync — no Spark job, no re-encode; at real scale
         this is the storage layer's conditional object copy."""
         import fnmatch
-        import shutil
-
         done = []
         self.last_snapshot_stats: dict[str, dict[str, int]] = {}
         for route in self._all_index_names():
@@ -2053,8 +2070,6 @@ class FlightsEtlPipeline:
         # every sibling JSON registry alongside the tables, dropping a
         # stale copy when the live side is empty — snapshots replace
         # wholesale.
-        import json as _json
-
         os.makedirs(snapshot_dir, exist_ok=True)
         for reg in ("_aliases.json", "_stored_scripts.json",
                     "_index_templates.json", "_ingest_pipelines.json",
@@ -2066,7 +2081,7 @@ class FlightsEtlPipeline:
             if os.path.isfile(live):
                 try:
                     with open(live) as f:
-                        populated = bool(_json.load(f))
+                        populated = bool(json.load(f))
                 except ValueError:
                     populated = False
             if populated:
@@ -2097,8 +2112,6 @@ class FlightsEtlPipeline:
         on alias conflicts)."""
         import fnmatch
         import re as _re
-        import shutil
-
         renaming = rename_pattern is not None
         if renaming and rename_replacement is None:
             raise ValueError(
@@ -2174,13 +2187,7 @@ class FlightsEtlPipeline:
         return os.path.join(self.cfg.index_root, "_roles.json")
 
     def _read_roles(self) -> dict:
-        import json
-
-        try:
-            with open(self._roles_path()) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {}
+        return _load_json(self._roles_path())
 
     def put_role(self, name: str, index_patterns: list[str],
                  actions: tuple[str, ...] = ("read",),
@@ -2199,8 +2206,6 @@ class FlightsEtlPipeline:
         search/count/mget/sql/ppl/aggregations all respect it, and the
         predicate compiles into each route's parquet scan (a DLS'd
         read costs a pushed filter, not a second pass)."""
-        import json
-
         if not name or not isinstance(name, str):
             raise ValueError("role name must be a non-empty string")
         if (not index_patterns
@@ -2225,25 +2230,17 @@ class FlightsEtlPipeline:
         if dls is not None:
             reg[name]["dls"] = dls.get("query", dls)
         os.makedirs(self.cfg.index_root, exist_ok=True)
-        tmp = self._roles_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(reg, f)
-        os.replace(tmp, self._roles_path())
+        _save_json(self._roles_path(), reg)
         return {"acknowledged": True}
 
     def get_roles(self) -> dict:
         return self._read_roles()
 
     def delete_role(self, name: str) -> dict:
-        import json
-
         reg = self._read_roles()
         reg.pop(name, None)
         if os.path.isfile(self._roles_path()):
-            tmp = self._roles_path() + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(reg, f)
-            os.replace(tmp, self._roles_path())
+            _save_json(self._roles_path(), reg)
         return {"acknowledged": True}
 
     def as_role(self, name: str):
@@ -2357,13 +2354,7 @@ class FlightsEtlPipeline:
         return os.path.join(self.cfg.index_root, "_field_masking.json")
 
     def _read_field_masking(self) -> dict:
-        import json
-
-        try:
-            with open(self._field_masking_path()) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {}
+        return _load_json(self._field_masking_path())
 
     def put_field_masking(self, route: str, fields: list[str],
                           mode: str = "hash", salt: str = "") -> dict:
@@ -2378,8 +2369,6 @@ class FlightsEtlPipeline:
         deleting the policy restores the original values. Composes
         with ``_source`` filtering and filtered aliases (row scope ∘
         field scope)."""
-        import json
-
         if mode not in ("hash", "redact"):
             raise ValueError("field masking mode must be 'hash' or 'redact'")
         if (not fields or not isinstance(fields, (list, tuple))
@@ -2410,10 +2399,7 @@ class FlightsEtlPipeline:
         reg[route] = {"fields": sorted(set(fields)), "mode": mode,
                       "salt": salt}
         os.makedirs(self.cfg.index_root, exist_ok=True)
-        tmp = self._field_masking_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(reg, f)
-        os.replace(tmp, self._field_masking_path())
+        _save_json(self._field_masking_path(), reg)
         return {"acknowledged": True}
 
     def get_field_masking(self, route: str | None = None) -> dict:
@@ -2421,15 +2407,10 @@ class FlightsEtlPipeline:
         return reg if route is None else reg.get(route, {})
 
     def delete_field_masking(self, route: str) -> dict:
-        import json
-
         reg = self._read_field_masking()
         reg.pop(route, None)
         if os.path.isfile(self._field_masking_path()):
-            tmp = self._field_masking_path() + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(reg, f)
-            os.replace(tmp, self._field_masking_path())
+            _save_json(self._field_masking_path(), reg)
         return {"acknowledged": True}
 
     def _check_masked_write(self, route: str, op: str) -> None:
@@ -2636,13 +2617,7 @@ class FlightsEtlPipeline:
         return os.path.join(self.cfg.index_root, "_search_pipelines.json")
 
     def _read_search_pipelines(self) -> dict:
-        import json
-
-        try:
-            with open(self._search_pipeline_path()) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {}
+        return _load_json(self._search_pipeline_path())
 
     def put_search_pipeline(self, pipeline_id: str, body: dict) -> dict:
         """``PUT /_search/pipeline/<id>`` analog: validate the processor
@@ -2653,8 +2628,6 @@ class FlightsEtlPipeline:
         mean-family combination for hybrid queries); response
         processors ``rename_field`` / ``truncate_hits`` / ``sort`` /
         ``collapse`` / ``rerank`` (by_field)."""
-        import json
-
         for p in body.get("request_processors", []):
             (kind, spec), = p.items()
             if kind != "filter_query":
@@ -2691,12 +2664,7 @@ class FlightsEtlPipeline:
         }
         reg[pipeline_id]["description"] = body.get("description", "")
         os.makedirs(self.cfg.index_root, exist_ok=True)
-        tmp = self._search_pipeline_path() + ".tmp"
-        import json as _json
-
-        with open(tmp, "w") as f:
-            _json.dump(reg, f)
-        os.replace(tmp, self._search_pipeline_path())
+        _save_json(self._search_pipeline_path(), reg)
         return {"acknowledged": True}
 
     def get_search_pipeline(self, pipeline_id: str | None = None) -> dict:
@@ -2708,15 +2676,10 @@ class FlightsEtlPipeline:
         return reg[pipeline_id]
 
     def delete_search_pipeline(self, pipeline_id: str) -> bool:
-        import json
-
         reg = self._read_search_pipelines()
         existed = reg.pop(pipeline_id, None) is not None
         if existed:
-            tmp = self._search_pipeline_path() + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(reg, f)
-            os.replace(tmp, self._search_pipeline_path())
+            _save_json(self._search_pipeline_path(), reg)
         return existed
 
     def _resolve_terms_lookup(self, body: dict) -> dict:
@@ -2925,13 +2888,7 @@ class FlightsEtlPipeline:
         return os.path.join(self.cfg.index_root, "_monitors.json")
 
     def _read_monitors(self) -> dict:
-        import json
-
-        try:
-            with open(self._monitors_path()) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {}
+        return _load_json(self._monitors_path())
 
     def put_monitor(self, name: str, body: dict) -> dict:
         """Alerting-plugin analog (``_plugins/_alerting/monitors``): a
@@ -2943,8 +2900,6 @@ class FlightsEtlPipeline:
         evaluates every monitor; fired triggers append alert documents
         to the ``.alerts`` table. The search body is validated by
         compiling its query at PUT time."""
-        import json
-
         search = body.get("search")
         trigger = body.get("trigger")
         if not isinstance(search, dict) or "index" not in search:
@@ -2961,22 +2916,14 @@ class FlightsEtlPipeline:
         reg[name] = {"search": search, "trigger": trigger,
                      "enabled": bool(body.get("enabled", True))}
         os.makedirs(self.cfg.index_root, exist_ok=True)
-        tmp = self._monitors_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(reg, f)
-        os.replace(tmp, self._monitors_path())
+        _save_json(self._monitors_path(), reg)
         return {"acknowledged": True}
 
     def delete_monitor(self, name: str) -> bool:
-        import json
-
         reg = self._read_monitors()
         existed = reg.pop(name, None) is not None
         if existed:
-            tmp = self._monitors_path() + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(reg, f)
-            os.replace(tmp, self._monitors_path())
+            _save_json(self._monitors_path(), reg)
         return existed
 
     @staticmethod
@@ -3060,10 +3007,7 @@ class FlightsEtlPipeline:
         status file is written atomically, so a poller never reads a
         half-state. Results persist until :meth:`delete_async_search`
         (the public keep_on_completion=true behavior)."""
-        import json
         import threading
-        import uuid
-
         aid = uuid.uuid4().hex
         adir = self._async_dir(aid)
         os.makedirs(adir, exist_ok=True)
@@ -3102,8 +3046,6 @@ class FlightsEtlPipeline:
     def get_async_search(self, aid: str) -> dict:
         """Poll an async search: ``state`` RUNNING/SUCCEEDED/FAILED;
         on success the persisted hits attach as a lazy frame."""
-        import json
-
         path = os.path.join(self._async_dir(aid), "status.json")
         try:
             with open(path) as f:
@@ -3118,8 +3060,6 @@ class FlightsEtlPipeline:
         return st
 
     def delete_async_search(self, aid: str) -> bool:
-        import shutil
-
         adir = self._async_dir(aid)
         if not os.path.isdir(adir):
             return False
@@ -3142,8 +3082,6 @@ class FlightsEtlPipeline:
         engine's pages re-read the live table, so a concurrent merge
         between pages may surface/hide rows. Use a snapshot dir
         (:meth:`snapshot`) when frozen iteration matters."""
-        import uuid
-
         body = dict(body or {})
         body.setdefault("sort", [{"_id": {"order": "asc"}}])
         body["size"] = int(size)
@@ -3332,8 +3270,6 @@ class FlightsEtlPipeline:
         scroll alone does not give on this engine (see
         :meth:`create_scroll`). At real scale the copy is the storage
         layer's cheap object clone."""
-        import uuid
-
         pit_id = uuid.uuid4().hex
         pit_dir = os.path.join(self.cfg.index_root, "_pits", pit_id)
         done = self.snapshot(pit_dir, pattern)
@@ -3353,7 +3289,9 @@ class FlightsEtlPipeline:
             path = os.path.join(pit_dir, name)
             if name.startswith("_") or not os.path.isdir(path):
                 continue
-            df = self.spark.read.parquet(path)
+            df = self._resolve(path)
+            if df is None:
+                continue
             if "_deleted" in df.columns:
                 df = df.filter(~F.col("_deleted")).drop("_deleted")
             df = df.withColumn("_index", F.lit(name))
@@ -3374,12 +3312,12 @@ class FlightsEtlPipeline:
 
     def close_pit(self, pit_id: str) -> bool:
         """``DELETE /_pit`` analog: drop the frozen copy."""
-        import shutil
-
         pit_dir = os.path.join(self.cfg.index_root, "_pits", pit_id)
         if not os.path.isdir(pit_dir):
             return False
         shutil.rmtree(pit_dir)
+        for key in [k for k in self._views if k.startswith(pit_dir + os.sep)]:
+            del self._views[key]
         return True
 
     # -- data streams --------------------------------------------------------
@@ -3388,22 +3326,11 @@ class FlightsEtlPipeline:
         return os.path.join(self.cfg.index_root, "_data_streams.json")
 
     def _read_data_streams(self) -> dict:
-        import json
-
-        try:
-            with open(self._ds_registry_path()) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {}
+        return _load_json(self._ds_registry_path())
 
     def _write_data_streams(self, reg: dict) -> None:
-        import json
-
         os.makedirs(self.cfg.index_root, exist_ok=True)
-        tmp = self._ds_registry_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(reg, f)
-        os.replace(tmp, self._ds_registry_path())
+        _save_json(self._ds_registry_path(), reg)
 
     @staticmethod
     def _ds_backing(name: str, gen: int) -> str:
@@ -3448,7 +3375,6 @@ class FlightsEtlPipeline:
         gen = reg[name]["generation"]
         base = reg[name]["next_seq"]
         backing = self._ds_backing(name, gen)
-        path = self._index_path(backing)
         rows = [
             {"_id": f"{name}-{base + i}",
              **{k: v for k, v in d.items()}}
@@ -3466,7 +3392,7 @@ class FlightsEtlPipeline:
                     f"data stream append schema drift: {sorted(missing)}"
                 )
             df = df.select(*existing.columns)
-        df.write.mode("append").parquet(path)
+        self._publish(backing, df, replace=())
         reg[name]["next_seq"] = base + len(docs)
         self._write_data_streams(reg)
         return len(docs)
@@ -3503,8 +3429,6 @@ class FlightsEtlPipeline:
         """``DELETE /_data_stream/<name>``: drops the stream AND its
         backing indexes (the public semantics — unlike deleting an
         alias)."""
-        import shutil
-
         reg = self._read_data_streams()
         if name not in reg:
             return False

@@ -853,3 +853,24 @@ def test_binary_hamming_recall_and_packing(spark, sf_dir):
         assert [r["w0"], r["w1"]] == _binary_words_py(
             [float(x) for x in r["embedding"]]
         )
+
+
+def test_ivf_assign_accepts_numpy_centroids(spark):
+    """Centroids straight out of numpy (float64 rows, a float32 entry)
+    assign exactly like the same centroids as plain floats."""
+    import numpy as np
+
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.1]), (2, [0.1, 1.0]), (3, [-1.0, 0.0])],
+        "id int, embedding array<double>",
+    )
+    plain = [[1.0, 0.0], [0.0, 1.0], [-1.0, 0.5]]
+    cents = [np.array(c, dtype=np.float64) for c in plain]
+    cents[2][1] = np.float32(0.5)
+
+    def assign(cs):
+        return sorted(
+            (r["id"], r["_cluster"]) for r in S.ivf_assign(df, cs).collect()
+        )
+
+    assert assign(cents) == assign(plain) == [(1, 0), (2, 1), (3, 2)]

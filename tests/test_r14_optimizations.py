@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 import opensearch_dynamodb_etl_cdk_spark.operators.multimodal as M
 from opensearch_dynamodb_etl_cdk_spark.functions import text as TXT
+from opensearch_dynamodb_etl_cdk_spark import session as SES
 from opensearch_dynamodb_etl_cdk_spark.operators import dedup as D
 
 
@@ -32,9 +33,8 @@ def test_minhash_slot_releases_previous_call(spark):
     d = _docs(spark, texts)
     first = D.minhash_lsh_pairs(d, num_hashes=8, bands=4)
     rows1 = sorted(map(tuple, first.collect()))  # materialize persists
-    held = list(D._PERSIST_SLOTS["minhash_shingles"]) + list(
-        D._PERSIST_SLOTS["minhash_banded"]
-    )
+    slots = SES._PERSIST_SLOTS[spark]
+    held = list(slots["minhash_shingles"]) + list(slots["minhash_banded"])
     assert all(f.storageLevel.useMemory for f in held)
     d2 = _docs(spark, texts + ["an extra different document"])
     D.minhash_lsh_pairs(d2, num_hashes=8, bands=4)
@@ -44,10 +44,26 @@ def test_minhash_slot_releases_previous_call(spark):
     assert sorted(map(tuple, first.collect())) == rows1
 
 
+def test_persist_slots_are_per_session(spark):
+    """Two sessions sharing one SparkContext keep separate slots: a call
+    on the second session must not release the first session's frames."""
+    s1, s2 = spark.newSession(), spark.newSession()
+    texts = [f"the quick brown fox jumps over dog {i % 3}" for i in range(12)]
+    D.minhash_lsh_pairs(_docs(s1, texts), num_hashes=8, bands=4).count()
+    held = list(SES._PERSIST_SLOTS[s1]["minhash_shingles"])
+    assert all(f.storageLevel.useMemory for f in held)
+    D.minhash_lsh_pairs(
+        _docs(s2, texts + ["an extra different document"]),
+        num_hashes=8, bands=4,
+    ).count()
+    assert all(f.storageLevel.useMemory for f in held)
+    assert SES._PERSIST_SLOTS[s2]["minhash_shingles"] != held
+
+
 def test_simhash_slot_releases_previous_call(spark):
     d = _docs(spark, ["alpha beta gamma delta"] * 6)
     D.simhash_pairs(d).count()
-    held = list(D._PERSIST_SLOTS["simhash_frame"])
+    held = list(SES._PERSIST_SLOTS[spark]["simhash_frame"])
     assert all(f.storageLevel.useMemory for f in held)
     D.simhash_pairs(_docs(spark, ["epsilon zeta eta theta"] * 5))
     assert all(not f.storageLevel.useMemory for f in held)
@@ -58,7 +74,7 @@ def test_lm_unigram_slot_releases_previous_call(spark):
     model = _docs(spark, ["a b c d a b", "c d a b c d"])
     r1 = TXT.bigram_logprob_scores(docs, model)
     rows1 = sorted((r.doc_id, r.n_bigrams, r.avg_logp) for r in r1.collect())
-    held = list(TXT._LM_UNIGRAM_SLOT)
+    held = list(SES._PERSIST_SLOTS[spark]["lm_unigram"])
     assert held and all(f.storageLevel.useMemory for f in held)
     model2 = _docs(spark, ["a b c d a b", "c d a b c d", "e f"])
     TXT.bigram_logprob_scores(docs, model2)

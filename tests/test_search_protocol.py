@@ -2025,3 +2025,26 @@ def test_role_bound_document_level_security(spark, tmp_path_factory):
     with pytest.raises(Exception):
         p.put_role("bad", ["fare"], dls={"frobnicate": {"x": 1}})
     assert "bad" not in p.get_roles()
+
+
+def test_date_histogram_skips_docs_missing_the_field(booted):
+    """Fare docs carry no ``depart_ts``: over ``fare,flight`` they fall
+    in no bucket (OpenSearch skips docs missing the field), while an
+    explicit ``missing`` still buckets them under that value."""
+    def buckets(body):
+        res = booted.search("fare,flight", {"size": 0, "aggs": {"d": {
+            "date_histogram": {"field": "depart_ts",
+                               "calendar_interval": "day", **body}}}})
+        return res["aggregations"]["d"]["buckets"]
+
+    got = buckets({})
+    assert got and all(b["key"] is not None for b in got)
+    n_flights = booted.count("flight", {"exists": {"field": "depart_ts"}})
+    assert sum(b["doc_count"] for b in got) == n_flights
+    filled = buckets({"missing": "2000-01-01T00:00:00"})
+    assert [b["doc_count"] for b in filled if b["key"].year == 2000] == [
+        booted.count("fare,flight") - n_flights]
+
+    hist = booted.search("fare,flight", {"size": 0, "aggs": {"h": {
+        "histogram": {"field": "seg_id", "interval": 1}}}})["aggregations"]
+    assert all(b["key"] is not None for b in hist["h"]["buckets"])
