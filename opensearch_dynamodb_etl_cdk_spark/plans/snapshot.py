@@ -13,9 +13,15 @@ any uncommitted plan change, so a timing drift with a matching
 PLANS.md is PROVABLY plan-neutral, and a plan change without a
 PLANS.md update fails CI loudly.
 
-Regenerate after an intentional plan change:
+Regenerate after an intentional plan change, or check the committed
+file (exit status 1 and the stale query names when it differs):
 
-    python -m opensearch_dynamodb_etl_cdk_spark.plans.snapshot
+    python -m opensearch_dynamodb_etl_cdk_spark.plans.snapshot [--check]
+
+Both render at ``SNAPSHOT_CPUS`` whatever the host's core count: the
+session's parallelism sets shuffle partition counts, and AQE's
+join/coalesce choices follow them, so digests taken at another
+parallelism differ while every operator census still matches.
 
 Snapshots are taken at sf0.001 (plan SHAPE is scale-invariant here:
 the catalog pins broadcast/bucket decisions by construction, and the
@@ -31,6 +37,7 @@ import os
 import re
 
 SNAPSHOT_SF_DIR = "/root/testdata/sf0.001"
+SNAPSHOT_CPUS = 32  # the local[N] parallelism PLANS.md is rendered at
 PLANS_PATH = os.path.join(
     os.path.dirname(os.path.abspath(__file__)), "..", "..", "PLANS.md"
 )
@@ -140,19 +147,54 @@ def render(spark, sf_dir: str = SNAPSHOT_SF_DIR) -> str:
     return _HEADER + "\n" + "\n".join(snapshot_blocks(spark, sf_dir))
 
 
-def main() -> None:
+def stale_queries(committed: str, current: str) -> list[str]:
+    """Query names whose digest block differs between two renders
+    (present in only one counts as differing)."""
+    def blocks(text):
+        out = {}
+        for chunk in text.split("\n## ")[1:]:
+            name, *rest = chunk.splitlines()
+            out[name.strip()] = "\n".join(rest)
+        return out
+
+    a, b = blocks(committed), blocks(current)
+    return sorted(set(a) ^ set(b) | {k for k in set(a) & set(b)
+                                     if a[k] != b[k]})
+
+
+def main(argv: list[str] | None = None) -> int:
+    import argparse
     import sys
 
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--check", action="store_true",
+                    help="compare with PLANS.md instead of writing it")
+    args = ap.parse_args(argv)
+    os.environ["SPARK_GRAFT_CPUS"] = str(SNAPSHOT_CPUS)
     sys.path.insert(0, os.path.dirname(os.path.abspath(PLANS_PATH)))
     from ..session import get_spark
 
     spark = get_spark("plan-snapshot")
-    text = render(spark)
+    try:
+        text = render(spark)
+    finally:
+        spark.stop()
+    if args.check:
+        with open(PLANS_PATH) as f:
+            stale = stale_queries(f.read(), text)
+        if stale:
+            print(f"PLANS.md is stale for {stale} — if the plan change is "
+                  "intentional, regenerate with `python -m "
+                  "opensearch_dynamodb_etl_cdk_spark.plans.snapshot` and "
+                  "commit the diff")
+            return 1
+        print("PLANS.md matches the current plans")
+        return 0
     with open(PLANS_PATH, "w") as f:
         f.write(text)
     print(f"wrote {os.path.normpath(PLANS_PATH)}")
-    spark.stop()
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main())

@@ -61,6 +61,7 @@ from ..functions.scripts import safe_expr
 from ..operators.routing import UNROUTED, Router, type_route
 from ..operators.upsert import apply_cdc_batch, derive_action, latest_by_key
 from ..sources.flights import ALIASES, SUPERSET_ATTRS
+from .meta import REGISTRIES, MetaStore, load_json, save_json
 
 CDC_SCHEMA = T.StructType(
     [
@@ -83,22 +84,6 @@ import contextvars as _contextvars
 
 _ACTIVE_ROLES: _contextvars.ContextVar[dict] = _contextvars.ContextVar(
     "spark_graft_active_roles", default={})
-
-
-def _load_json(path: str) -> dict:
-    try:
-        with open(path) as f:
-            return json.load(f)
-    except (FileNotFoundError, NotADirectoryError):
-        return {}
-
-
-def _save_json(path: str, obj) -> None:
-    """Atomic replace: readers never see a partial file."""
-    tmp = f"{path}.{uuid.uuid4().hex}.tmp"
-    with open(tmp, "w") as f:
-        json.dump(obj, f)
-    os.replace(tmp, path)
 
 
 def _describe_error(exc: Exception, limit: int = 4000) -> str:
@@ -241,6 +226,7 @@ class FlightsEtlPipeline:
         # stale role scope (the dict entry keeps the token alive, so
         # token identity can never be recycled while a scope holds it)
         self._role_token = object()
+        self.meta = MetaStore(config.index_root)
         # resolved index frames: route dir → (manifest text, frame)
         self._views: dict[str, tuple[str, DataFrame]] = {}
 
@@ -329,7 +315,7 @@ class FlightsEtlPipeline:
         files = self._list_parquet(root)
         if not files:
             return None
-        self._write_manifest(root, {
+        save_json(os.path.join(root, MANIFEST), {
             "version": 1, "files": files, "n_buckets": None,
             "schema": self.spark.read.parquet(root).schema.jsonValue(),
         })
@@ -352,11 +338,6 @@ class FlightsEtlPipeline:
                         fn if rel == "." else os.path.join(rel, fn))
         return out
 
-    @staticmethod
-    def _write_manifest(root: str, manifest: dict) -> None:
-        os.makedirs(root, exist_ok=True)
-        _save_json(os.path.join(root, MANIFEST), manifest)
-
     def _publish(self, route: str, df: DataFrame, replace=None,
                  n_buckets: int | None = None) -> None:
         """Copy-on-write write of ``df`` into the route: the one write
@@ -369,8 +350,9 @@ class FlightsEtlPipeline:
         N+1 is then published atomically: buckets in ``replace``
         (``None`` = every bucket, empty = a pure append) hold exactly
         the new files, other buckets keep version N's files plus any
-        new ones, and the schema is the union of N's and ``df``'s (no
-        column vanishes from buckets the write did not touch). Last,
+        new ones, the schema is the union of N's and ``df``'s (no
+        column vanishes from buckets the write did not touch), and the
+        bucket count is ``n_buckets``, else N's. Last,
         GC deletes the files N referenced and N+1 does not, and any
         bucket dir that leaves empty. A reader still scanning version N
         can race that GC (no version pinning)."""
@@ -403,10 +385,12 @@ class FlightsEtlPipeline:
         fields = list(cols.values())
         if bucketed:
             fields.append(T.StructField("_bucket", T.IntegerType()))
-        self._write_manifest(root, {
+        os.makedirs(root, exist_ok=True)  # a write of no rows has no files
+        save_json(os.path.join(root, MANIFEST), {
             "version": prev["version"] + 1,
             "files": dict(sorted(files.items())),
-            "n_buckets": n_buckets,
+            "n_buckets": prev.get("n_buckets") if n_buckets is None
+            else n_buckets,
             "schema": T.StructType(fields).jsonValue(),
         })
 
@@ -727,38 +711,27 @@ class FlightsEtlPipeline:
     # -- maintenance -----------------------------------------------------------
 
     def _route_n_buckets(self, route: str) -> int:
-        """The route's live hash-bucket count: per-index override from
-        ``_settings.json`` (written by :meth:`split_index` /
-        :meth:`shrink_index`; the leading underscore keeps it invisible
-        to the parquet reader), else the pipeline default."""
-        settings = self._read_route_settings(route)
-        # the file may carry only blocks (add_block on a never-resized
-        # index) — fall through to the default then
-        if "n_buckets" in settings:
-            return int(settings["n_buckets"])
-        if not os.path.isdir(self._index_path(route)):
-            # first materialization: an index template matching this
-            # name supplies the bucket count (the public create-time
-            # settings application); pin it to _settings.json so a
-            # template added LATER never silently re-buckets a live
-            # index
-            sim = self.simulate_index_template(route)
-            if sim["matched"]:
-                os.makedirs(self._index_path(route), exist_ok=True)
-                self._write_route_settings(route, sim["n_buckets"])
-                return sim["n_buckets"]
-        return self.cfg.n_buckets
+        """The route's live hash-bucket count. The route's manifest is
+        its only record: every bucketed publish stores the count it
+        placed rows by, and :meth:`split_index` / :meth:`shrink_index`
+        publish the new one. A manifest without a count (an adopted
+        directory, a rollover's empty generation) means the pipeline
+        default. A route not yet materialized takes the count from a
+        matching index template (the public create-time settings
+        application), else the default; its first publish records it,
+        so a template added LATER never re-buckets a live index."""
+        got = self._manifest(self._index_path(route))
+        if got is not None:
+            return int(got[1].get("n_buckets") or self.cfg.n_buckets)
+        return self.simulate_index_template(route)["n_buckets"]
 
     def _settings_path(self, route: str) -> str:
         return os.path.join(self._index_path(route), "_settings.json")
 
     def _read_route_settings(self, route: str) -> dict:
-        return _load_json(self._settings_path(route))
-
-    def _write_route_settings(self, route: str, n_buckets: int) -> None:
-        settings = self._read_route_settings(route)
-        settings["n_buckets"] = int(n_buckets)
-        _save_json(self._settings_path(route), settings)
+        """The route's ``blocks`` and ``closed`` flag (``{}`` when
+        neither was ever set)."""
+        return load_json(self._settings_path(route))
 
     # -- index blocks ---------------------------------------------------------
 
@@ -767,11 +740,12 @@ class FlightsEtlPipeline:
         document writes (bulk / doc CRUD / update_by_query /
         delete_by_query / reindex-into), ``read_only`` additionally
         freezes metadata ops (split/shrink). Blocks persist in the
-        per-route ``_settings.json`` beside the bucket count. The CDC
-        stream itself is NOT gated — it is the system of record
-        replaying upstream truth, and wedging the checkpointed stream
-        on a client-facing block would turn a soft guard into data
-        loss; block the client verbs, drain the source instead."""
+        per-route ``_settings.json`` (the bucket count lives in the
+        route's manifest, not there). The CDC stream itself is NOT
+        gated — it is the system of record replaying upstream truth,
+        and wedging the checkpointed stream on a client-facing block
+        would turn a soft guard into data loss; block the client verbs,
+        drain the source instead."""
         if block not in ("write", "read_only"):
             raise ValueError(f"unsupported block {block!r}")
         if not os.path.isdir(self._index_path(route)):
@@ -780,7 +754,7 @@ class FlightsEtlPipeline:
         blocks = set(settings.get("blocks") or [])
         blocks.add(block)
         settings["blocks"] = sorted(blocks)
-        _save_json(self._settings_path(route), settings)
+        save_json(self._settings_path(route), settings)
         return {"acknowledged": True, "blocks": settings["blocks"]}
 
     def remove_block(self, route: str, block: str) -> dict:
@@ -788,7 +762,7 @@ class FlightsEtlPipeline:
         blocks = set(settings.get("blocks") or [])
         blocks.discard(block)
         settings["blocks"] = sorted(blocks)
-        _save_json(self._settings_path(route), settings)
+        save_json(self._settings_path(route), settings)
         return {"acknowledged": True, "blocks": settings["blocks"]}
 
     def close_index(self, route: str) -> dict:
@@ -802,7 +776,7 @@ class FlightsEtlPipeline:
             raise ValueError(f"no such index {route!r}")
         settings = self._read_route_settings(route)
         settings["closed"] = True
-        _save_json(self._settings_path(route), settings)
+        save_json(self._settings_path(route), settings)
         return {"acknowledged": True}
 
     def open_index(self, route: str) -> dict:
@@ -813,7 +787,7 @@ class FlightsEtlPipeline:
             raise ValueError(f"no such index {route!r}")
         settings = self._read_route_settings(route)
         settings.pop("closed", None)
-        _save_json(self._settings_path(route), settings)
+        save_json(self._settings_path(route), settings)
         return {"acknowledged": True}
 
     def _check_closed(self, route: str, op: str) -> None:
@@ -855,7 +829,6 @@ class FlightsEtlPipeline:
             current.withColumn("_bucket", F.pmod(F.xxhash64("_id"), F.lit(new_n))),
             n_buckets=new_n,
         )
-        self._write_route_settings(route, new_n)
         return {"acknowledged": True, "n_buckets": new_n}
 
     def split_index(self, route: str, factor: int = 2) -> dict:
@@ -867,8 +840,8 @@ class FlightsEtlPipeline:
         new buckets, so the rewrite is MAP-ONLY (no shuffle, no
         cross-bucket data movement), exactly why the public API
         restricts split targets to multiples of the source shard
-        count. Subsequent merges pick up the new count from the
-        per-route settings."""
+        count. The new count is published in the route's manifest, the
+        one record of it, so subsequent merges place rows by it."""
         if factor < 2:
             raise ValueError("split factor must be >= 2")
         return self._resize_index(
@@ -1033,9 +1006,7 @@ class FlightsEtlPipeline:
         materialization)."""
         from ..operators.search import _analyze, _analyze_text
 
-        masked = set(
-            self._read_field_masking().get(route, {}).get("fields", [])
-        )
+        masked = set(self.get_field_masking(route).get("fields", []))
         bad = sorted(set(fields) & masked)
         if bad:
             # analyzed terms + corpus statistics of a masked field ARE
@@ -1428,7 +1399,7 @@ class FlightsEtlPipeline:
         # preserve a filtered alias's row scope across the flip — a
         # plain put_alias would replace the registry entry with a bare
         # pattern and silently widen every post-rollover search
-        prev = self._read_aliases_raw().get(alias)
+        prev = self.meta.read("aliases").get(alias)
         flt = prev.get("filter") if isinstance(prev, dict) else None
         self.put_alias(alias, new_index, filter=flt)
         return {"rolled_over": True, "old_index": target,
@@ -1635,8 +1606,9 @@ class FlightsEtlPipeline:
         """``POST /_aliases`` add-action analog: name an index pattern.
         Aliases resolve inside :meth:`multi_index_view`, so a search
         against an alias is a search against its pattern's union —
-        filter pushdown per route unchanged. Persisted as a JSON file
-        next to the index tables (atomic tmp+rename write); alias names
+        filter pushdown per route unchanged. Persisted in the
+        ``aliases`` registry (stored value: the pattern string, or
+        ``{"pattern", "filter"}`` for a filtered alias); alias names
         colliding with a real index are rejected, as the public API
         does.
 
@@ -1655,34 +1627,21 @@ class FlightsEtlPipeline:
             from ..operators.search import compile_query
 
             compile_query(dict(filter))  # PUT-time validation
-        aliases = self._read_aliases_raw()
-        aliases[alias] = (
+        self.meta.put("aliases", alias, (
             {"pattern": pattern, "filter": filter}
             if filter is not None else pattern
-        )
-        self._write_aliases(aliases)
+        ))
 
     def delete_alias(self, alias: str) -> None:
-        # raw registry, not get_aliases(): a rewrite from the flattened
-        # view would silently strip every other alias's filter
-        self._write_aliases(
-            {k: v for k, v in self._read_aliases_raw().items()
-             if k != alias}
-        )
+        self.meta.pop("aliases", alias)
 
     # -- ingest pipelines ---------------------------------------------------
-
-    def _ingest_path(self) -> str:
-        return os.path.join(self.cfg.index_root, "_ingest_pipelines.json")
-
-    def _read_ingest(self) -> dict:
-        return _load_json(self._ingest_path())
 
     def put_ingest_pipeline(self, pipeline_id: str, body: dict) -> dict:
         """``PUT /_ingest/pipeline/<id>`` analog: validate the
         processor kinds up front (unknown processors fail HERE, not at
-        first use) and persist the chain (atomic tmp+rename, same as
-        the alias registry)."""
+        first use) and persist the chain in the ``ingest_pipelines``
+        registry."""
         processors = list(body.get("processors", []))
         for p in processors:
             (kind, spec), = p.items()
@@ -1690,27 +1649,18 @@ class FlightsEtlPipeline:
                             "uppercase", "trim", "convert", "gsub",
                             "split", "join", "grok", "date", "script"):
                 raise ValueError(f"unsupported ingest processor {kind!r}")
-        reg = self._read_ingest()
-        reg[pipeline_id] = {"processors": processors,
-                            "description": body.get("description", "")}
-        os.makedirs(self.cfg.index_root, exist_ok=True)
-        _save_json(self._ingest_path(), reg)
+        self.meta.put("ingest_pipelines", pipeline_id, {
+            "processors": processors,
+            "description": body.get("description", "")})
         return {"acknowledged": True}
 
     def get_ingest_pipeline(self, pipeline_id: str | None = None) -> dict:
-        reg = self._read_ingest()
         if pipeline_id is None:
-            return reg
-        if pipeline_id not in reg:
-            raise ValueError(f"no such ingest pipeline {pipeline_id!r}")
-        return reg[pipeline_id]
+            return self.meta.read("ingest_pipelines")
+        return self.meta.get("ingest_pipelines", pipeline_id)
 
     def delete_ingest_pipeline(self, pipeline_id: str) -> bool:
-        reg = self._read_ingest()
-        existed = reg.pop(pipeline_id, None) is not None
-        if existed:
-            _save_json(self._ingest_path(), reg)
-        return existed
+        return self.meta.pop("ingest_pipelines", pipeline_id)
 
     def _ingest_processors(self, pipeline: str | dict) -> list[dict]:
         if isinstance(pipeline, dict):
@@ -1737,30 +1687,15 @@ class FlightsEtlPipeline:
             for r in rows
         ]
 
-    def _write_aliases(self, aliases: dict[str, str]) -> None:
-        os.makedirs(self.cfg.index_root, exist_ok=True)
-        _save_json(os.path.join(self.cfg.index_root, "_aliases.json"), aliases)
-
-    def _read_aliases_raw(self) -> dict:
-        """Alias registry as stored: value = pattern string, or
-        ``{"pattern", "filter"}`` for filtered aliases."""
-        return _load_json(os.path.join(self.cfg.index_root, "_aliases.json"))
-
     def get_aliases(self) -> dict[str, str]:
         """alias → index pattern (filtered aliases report their
         pattern; the filter rides only the view resolution)."""
         return {
             k: (v["pattern"] if isinstance(v, dict) else v)
-            for k, v in self._read_aliases_raw().items()
+            for k, v in self.meta.read("aliases").items()
         }
 
     # -- stored scripts -----------------------------------------------------
-
-    def _stored_scripts_path(self) -> str:
-        return os.path.join(self.cfg.index_root, "_stored_scripts.json")
-
-    def _read_stored_scripts(self) -> dict:
-        return _load_json(self._stored_scripts_path())
 
     def put_script(self, script_id: str, body: dict) -> dict:
         """``PUT /_scripts/<id>`` analog. The stored source is this
@@ -1768,8 +1703,8 @@ class FlightsEtlPipeline:
         (query / script_score contexts) or a column→expression dict
         (update-script contexts). Validated at PUT time through the
         same escape-hatch guard every call site applies, so a bad
-        script fails HERE, not at first use; persisted atomically like
-        the alias/ingest registries."""
+        script fails HERE, not at first use; persisted in the
+        ``stored_scripts`` registry."""
         spec = body.get("script", body)
         source = spec.get("source")
         if source is None:
@@ -1801,24 +1736,15 @@ class FlightsEtlPipeline:
                     validate_script(str(expr))
             else:
                 validate_script(str(source))
-        reg = self._read_stored_scripts()
-        reg[script_id] = {"lang": lang, "source": source}
-        os.makedirs(self.cfg.index_root, exist_ok=True)
-        _save_json(self._stored_scripts_path(), reg)
+        self.meta.put("stored_scripts", script_id,
+                      {"lang": lang, "source": source})
         return {"acknowledged": True}
 
     def get_script(self, script_id: str) -> dict:
-        reg = self._read_stored_scripts()
-        if script_id not in reg:
-            raise ValueError(f"no such stored script {script_id!r}")
-        return reg[script_id]
+        return self.meta.get("stored_scripts", script_id)
 
     def delete_script(self, script_id: str) -> bool:
-        reg = self._read_stored_scripts()
-        existed = reg.pop(script_id, None) is not None
-        if existed:
-            _save_json(self._stored_scripts_path(), reg)
-        return existed
+        return self.meta.pop("stored_scripts", script_id)
 
     @staticmethod
     def _sql_param_literal(v) -> str:
@@ -1906,12 +1832,6 @@ class FlightsEtlPipeline:
 
     # -- index templates ----------------------------------------------------
 
-    def _index_template_path(self) -> str:
-        return os.path.join(self.cfg.index_root, "_index_templates.json")
-
-    def _read_index_templates(self) -> dict:
-        return _load_json(self._index_template_path())
-
     def put_index_template(self, name: str, body: dict) -> dict:
         """``PUT /_index_template/<name>`` analog. The settings tier
         this engine has is the hash-bucket count (the shard analog), so
@@ -1929,30 +1849,20 @@ class FlightsEtlPipeline:
         )
         if n is not None and int(n) < 1:
             raise ValueError(f"number_of_buckets must be positive, got {n}")
-        reg = self._read_index_templates()
-        reg[name] = {
+        self.meta.put("index_templates", name, {
             "index_patterns": patterns,
             "priority": int(body.get("priority", 0)),
             "settings": settings,
-        }
-        os.makedirs(self.cfg.index_root, exist_ok=True)
-        _save_json(self._index_template_path(), reg)
+        })
         return {"acknowledged": True}
 
     def get_index_template(self, name: str | None = None) -> dict:
-        reg = self._read_index_templates()
         if name is None:
-            return reg
-        if name not in reg:
-            raise ValueError(f"no such index template {name!r}")
-        return reg[name]
+            return self.meta.read("index_templates")
+        return self.meta.get("index_templates", name)
 
     def delete_index_template(self, name: str) -> bool:
-        reg = self._read_index_templates()
-        existed = reg.pop(name, None) is not None
-        if existed:
-            _save_json(self._index_template_path(), reg)
-        return existed
+        return self.meta.pop("index_templates", name)
 
     def simulate_index_template(self, index_name: str) -> dict:
         """``POST /_index_template/_simulate_index/<name>`` analog:
@@ -1964,7 +1874,7 @@ class FlightsEtlPipeline:
         matches = sorted(
             (
                 (tpl["priority"], name, tpl)
-                for name, tpl in self._read_index_templates().items()
+                for name, tpl in self.get_index_template().items()
                 if any(fnmatch.fnmatchcase(index_name, p)
                        for p in tpl["index_patterns"])
             ),
@@ -2065,32 +1975,18 @@ class FlightsEtlPipeline:
                 "copied": copied, "skipped": skipped,
             }
             done.append(route)
-        # OpenSearch snapshots include cluster state (aliases, stored
-        # scripts, templates, pipelines, monitors) by default; carry
-        # every sibling JSON registry alongside the tables, dropping a
-        # stale copy when the live side is empty — snapshots replace
-        # wholesale.
+        # OpenSearch snapshots include cluster state by default: carry
+        # every registry alongside the tables. An empty registry is the
+        # same as none, so its stale snapshot copy is dropped —
+        # snapshots replace wholesale.
         os.makedirs(snapshot_dir, exist_ok=True)
-        for reg in ("_aliases.json", "_stored_scripts.json",
-                    "_index_templates.json", "_ingest_pipelines.json",
-                    "_search_pipelines.json", "_monitors.json",
-                    "_field_masking.json", "_roles.json"):
-            live = os.path.join(self.cfg.index_root, reg)
-            snap = os.path.join(snapshot_dir, reg)
-            populated = False
-            if os.path.isfile(live):
-                try:
-                    with open(live) as f:
-                        populated = bool(json.load(f))
-                except ValueError:
-                    populated = False
-            if populated:
-                shutil.copy2(live, snap)
-            elif os.path.isfile(snap):
-                # an emptied registry (delete_alias leaves `{}`) is the
-                # same as no registry: drop the stale snapshot copy so
-                # re-snapshots replace wholesale
-                os.remove(snap)
+        snap = MetaStore(snapshot_dir)
+        for name in REGISTRIES:
+            reg = self.meta.read(name)
+            if reg:
+                save_json(snap.path(name), reg)
+            elif os.path.isfile(snap.path(name)):
+                os.remove(snap.path(name))
         return done
 
     def restore(self, snapshot_dir: str, pattern: str = "*",
@@ -2098,9 +1994,10 @@ class FlightsEtlPipeline:
                 rename_replacement: str | None = None) -> list[str]:
         """Restore snapshotted index tables over the live ones (the
         public restore contract: the index returns to the snapshot
-        state; writes after the snapshot are gone). Alias state rides
-        along when the snapshot carries it (``include_aliases`` public
-        default), replacing the live registry wholesale.
+        state; writes after the snapshot are gone). Each registry the
+        snapshot carries (aliases — the ``include_aliases`` public
+        default — and the rest of :data:`~.meta.REGISTRIES`) replaces
+        the live one wholesale.
 
         ``rename_pattern``/``rename_replacement`` (a regex and its
         substitution, the public knobs) restore each matching index
@@ -2158,14 +2055,11 @@ class FlightsEtlPipeline:
             done.append(dest_name)
         if renaming:
             return done
-        for reg in ("_aliases.json", "_stored_scripts.json",
-                    "_index_templates.json", "_ingest_pipelines.json",
-                    "_search_pipelines.json", "_monitors.json",
-                    "_field_masking.json", "_roles.json"):
-            snap = os.path.join(snapshot_dir, reg)
-            if os.path.isfile(snap):
+        snap = MetaStore(snapshot_dir)
+        for name in REGISTRIES:
+            if os.path.isfile(snap.path(name)):
                 os.makedirs(self.cfg.index_root, exist_ok=True)
-                shutil.copy2(snap, os.path.join(self.cfg.index_root, reg))
+                save_json(self.meta.path(name), snap.read(name))
         return done
 
     # -- roles (index-level permission model; reference security analog:
@@ -2182,12 +2076,6 @@ class FlightsEtlPipeline:
     #    unscoped — this models DATA access, like the reference's
     #    policies. No active role = the admin caller (everything
     #    allowed), so existing behavior is unchanged. ---------------------
-
-    def _roles_path(self) -> str:
-        return os.path.join(self.cfg.index_root, "_roles.json")
-
-    def _read_roles(self) -> dict:
-        return _load_json(self._roles_path())
 
     def put_role(self, name: str, index_patterns: list[str],
                  actions: tuple[str, ...] = ("read",),
@@ -2224,23 +2112,18 @@ class FlightsEtlPipeline:
             from ..operators.search import compile_query
 
             compile_query(dls.get("query", dls))
-        reg = self._read_roles()
-        reg[name] = {"index_patterns": list(index_patterns),
-                     "actions": sorted(set(actions))}
+        role = {"index_patterns": list(index_patterns),
+                "actions": sorted(set(actions))}
         if dls is not None:
-            reg[name]["dls"] = dls.get("query", dls)
-        os.makedirs(self.cfg.index_root, exist_ok=True)
-        _save_json(self._roles_path(), reg)
+            role["dls"] = dls.get("query", dls)
+        self.meta.put("roles", name, role)
         return {"acknowledged": True}
 
     def get_roles(self) -> dict:
-        return self._read_roles()
+        return self.meta.read("roles")
 
     def delete_role(self, name: str) -> dict:
-        reg = self._read_roles()
-        reg.pop(name, None)
-        if os.path.isfile(self._roles_path()):
-            _save_json(self._roles_path(), reg)
+        self.meta.pop("roles", name)
         return {"acknowledged": True}
 
     def as_role(self, name: str):
@@ -2268,7 +2151,7 @@ class FlightsEtlPipeline:
         """
         import contextlib
 
-        spec = self._read_roles().get(name)
+        spec = self.get_roles().get(name)
         if spec is None:
             raise ValueError(f"unknown role {name!r}")
         pipeline = self
@@ -2350,12 +2233,6 @@ class FlightsEtlPipeline:
     #    level: per-index policies that hash or redact named columns
     #    in every response surface) --------------------------------------
 
-    def _field_masking_path(self) -> str:
-        return os.path.join(self.cfg.index_root, "_field_masking.json")
-
-    def _read_field_masking(self) -> dict:
-        return _load_json(self._field_masking_path())
-
     def put_field_masking(self, route: str, fields: list[str],
                           mode: str = "hash", salt: str = "") -> dict:
         """Attach a field-masking policy to an index: responses through
@@ -2395,22 +2272,16 @@ class FlightsEtlPipeline:
                 f"field masking: unknown fields {unknown} on index "
                 f"{route!r}"
             )
-        reg = self._read_field_masking()
-        reg[route] = {"fields": sorted(set(fields)), "mode": mode,
-                      "salt": salt}
-        os.makedirs(self.cfg.index_root, exist_ok=True)
-        _save_json(self._field_masking_path(), reg)
+        self.meta.put("field_masking", route, {
+            "fields": sorted(set(fields)), "mode": mode, "salt": salt})
         return {"acknowledged": True}
 
     def get_field_masking(self, route: str | None = None) -> dict:
-        reg = self._read_field_masking()
+        reg = self.meta.read("field_masking")
         return reg if route is None else reg.get(route, {})
 
     def delete_field_masking(self, route: str) -> dict:
-        reg = self._read_field_masking()
-        reg.pop(route, None)
-        if os.path.isfile(self._field_masking_path()):
-            _save_json(self._field_masking_path(), reg)
+        self.meta.pop("field_masking", route)
         return {"acknowledged": True}
 
     def _check_masked_write(self, route: str, op: str) -> None:
@@ -2421,7 +2292,7 @@ class FlightsEtlPipeline:
         probe channel search/count close), and a script could copy a
         masked column into an unmasked one (full exfiltration).
         Plain by-id writes don't read values and stay allowed."""
-        if self._read_field_masking().get(route):
+        if self.get_field_masking(route):
             raise ValueError(
                 f"{op} on index {route!r} with a field-masking policy "
                 "is rejected: the operation would read unmasked values "
@@ -2439,7 +2310,7 @@ class FlightsEtlPipeline:
         values."""
         if df is None:
             return df
-        spec = self._read_field_masking().get(route)
+        spec = self.get_field_masking(route)
         if not spec:
             return df
         mode = spec.get("mode", "hash")
@@ -2466,10 +2337,10 @@ class FlightsEtlPipeline:
         termvector rejection set."""
         import fnmatch
 
-        reg = self._read_field_masking()
+        reg = self.get_field_masking()
         if not reg:
             return set()
-        raw_aliases = self._read_aliases_raw()
+        raw_aliases = self.meta.read("aliases")
         parts: list[str] = []
         for raw in pattern.split(","):
             raw = raw.strip()
@@ -2505,7 +2376,7 @@ class FlightsEtlPipeline:
         search body still push into each route's parquet scan."""
         import fnmatch
 
-        raw_aliases = self._read_aliases_raw()
+        raw_aliases = self.meta.read("aliases")
         parts: list[str] = []
         filtered_frames: list[DataFrame] = []
         for raw in pattern.split(","):
@@ -2613,16 +2484,10 @@ class FlightsEtlPipeline:
 
     # -- search pipelines ---------------------------------------------------
 
-    def _search_pipeline_path(self) -> str:
-        return os.path.join(self.cfg.index_root, "_search_pipelines.json")
-
-    def _read_search_pipelines(self) -> dict:
-        return _load_json(self._search_pipeline_path())
-
     def put_search_pipeline(self, pipeline_id: str, body: dict) -> dict:
         """``PUT /_search/pipeline/<id>`` analog: validate the processor
-        kinds up front and persist (atomic tmp+rename, same registry
-        pattern as ingest pipelines). Supported: request processor
+        kinds up front and persist in the ``search_pipelines``
+        registry. Supported: request processor
         ``filter_query``; phase-results processor
         ``normalization-processor`` (min_max/l2 score normalization +
         mean-family combination for hybrid queries); response
@@ -2656,31 +2521,22 @@ class FlightsEtlPipeline:
             if c not in ("arithmetic_mean", "geometric_mean",
                          "harmonic_mean"):
                 raise ValueError(f"unsupported combination {c!r}")
-        reg = self._read_search_pipelines()
-        reg[pipeline_id] = {
+        spec = {
             k: list(body.get(k, []))
             for k in ("request_processors", "phase_results_processors",
                       "response_processors")
         }
-        reg[pipeline_id]["description"] = body.get("description", "")
-        os.makedirs(self.cfg.index_root, exist_ok=True)
-        _save_json(self._search_pipeline_path(), reg)
+        spec["description"] = body.get("description", "")
+        self.meta.put("search_pipelines", pipeline_id, spec)
         return {"acknowledged": True}
 
     def get_search_pipeline(self, pipeline_id: str | None = None) -> dict:
-        reg = self._read_search_pipelines()
         if pipeline_id is None:
-            return reg
-        if pipeline_id not in reg:
-            raise ValueError(f"no such search pipeline {pipeline_id!r}")
-        return reg[pipeline_id]
+            return self.meta.read("search_pipelines")
+        return self.meta.get("search_pipelines", pipeline_id)
 
     def delete_search_pipeline(self, pipeline_id: str) -> bool:
-        reg = self._read_search_pipelines()
-        existed = reg.pop(pipeline_id, None) is not None
-        if existed:
-            _save_json(self._search_pipeline_path(), reg)
-        return existed
+        return self.meta.pop("search_pipelines", pipeline_id)
 
     def _resolve_terms_lookup(self, body: dict) -> dict:
         """Terms-lookup pre-resolve: a ``terms`` query whose spec is
@@ -2839,7 +2695,7 @@ class FlightsEtlPipeline:
             if view is not None:
                 view.createOrReplaceTempView(route)
                 registered = True
-        for alias in self._read_aliases_raw():
+        for alias in self.meta.read("aliases"):
             # resolve by ALIAS name, not its flattened pattern — a
             # filtered alias's row scope must hold on the SQL surface
             # too (resolving the bare pattern would leak rows outside
@@ -2884,12 +2740,6 @@ class FlightsEtlPipeline:
 
     # -- alerting monitors ----------------------------------------------------
 
-    def _monitors_path(self) -> str:
-        return os.path.join(self.cfg.index_root, "_monitors.json")
-
-    def _read_monitors(self) -> dict:
-        return _load_json(self._monitors_path())
-
     def put_monitor(self, name: str, body: dict) -> dict:
         """Alerting-plugin analog (``_plugins/_alerting/monitors``): a
         registered query-level monitor = an index pattern, a search
@@ -2912,19 +2762,13 @@ class FlightsEtlPipeline:
 
         compile_query(dict((search.get("body") or {}).get("query")
                            or {"match_all": {}}))
-        reg = self._read_monitors()
-        reg[name] = {"search": search, "trigger": trigger,
-                     "enabled": bool(body.get("enabled", True))}
-        os.makedirs(self.cfg.index_root, exist_ok=True)
-        _save_json(self._monitors_path(), reg)
+        self.meta.put("monitors", name, {
+            "search": search, "trigger": trigger,
+            "enabled": bool(body.get("enabled", True))})
         return {"acknowledged": True}
 
     def delete_monitor(self, name: str) -> bool:
-        reg = self._read_monitors()
-        existed = reg.pop(name, None) is not None
-        if existed:
-            _save_json(self._monitors_path(), reg)
-        return existed
+        return self.meta.pop("monitors", name)
 
     @staticmethod
     def _trigger_fires(trigger: dict, res: dict) -> tuple[bool, float]:
@@ -2950,13 +2794,14 @@ class FlightsEtlPipeline:
         any scheduler, like the ISM tick): each monitor's search runs
         through the normal interpreter (counts are bounded count jobs,
         agg triggers read the already-collected aggregation), and fired
-        triggers append one alert document to the ``.alerts`` table —
-        queryable like any index. Returns the fired alerts."""
+        triggers append one alert document to the ``.alerts`` index —
+        published like every index write, so searches see each tick's
+        alerts. Returns the fired alerts."""
         from pyspark.sql import Row
 
         fired = []
         errors = []
-        for name, m in sorted(self._read_monitors().items()):
+        for name, m in sorted(self.meta.read("monitors").items()):
             if not m.get("enabled", True):
                 continue
             try:
@@ -2981,15 +2826,11 @@ class FlightsEtlPipeline:
         if fired:
             alerts = self.spark.createDataFrame(
                 [Row(**f) for f in fired])
-            alerts.write.mode("append").parquet(
-                os.path.join(self.cfg.index_root, ".alerts"))
+            self._publish(".alerts", alerts, replace=())
         return fired + errors
 
     def get_alerts(self) -> DataFrame | None:
-        path = os.path.join(self.cfg.index_root, ".alerts")
-        if not os.path.isdir(path):
-            return None
-        return self.spark.read.parquet(path)
+        return self.read_index(".alerts")
 
     # -- asynchronous search --------------------------------------------------
 
@@ -3011,15 +2852,8 @@ class FlightsEtlPipeline:
         aid = uuid.uuid4().hex
         adir = self._async_dir(aid)
         os.makedirs(adir, exist_ok=True)
-
-        def _write_status(doc: dict) -> None:
-            tmp = os.path.join(adir, "status.json.tmp")
-            with open(tmp, "w") as f:
-                json.dump(doc, f, default=str)
-            os.replace(tmp, os.path.join(adir, "status.json"))
-
-        _write_status({"id": aid, "state": "RUNNING",
-                       "pattern": pattern})
+        status = os.path.join(adir, "status.json")
+        save_json(status, {"id": aid, "state": "RUNNING", "pattern": pattern})
 
         def run() -> None:
             try:
@@ -3031,14 +2865,14 @@ class FlightsEtlPipeline:
                         os.path.join(adir, "hits"))
                     n = self.spark.read.parquet(
                         os.path.join(adir, "hits")).count()
-                _write_status({
+                save_json(status, {
                     "id": aid, "state": "SUCCEEDED", "pattern": pattern,
                     "n_hits": n,
                     "aggregations": res.get("aggregations") or {},
-                })
+                }, default=str)
             except Exception as exc:  # surfaced to the poller, not lost
-                _write_status({"id": aid, "state": "FAILED",
-                               "pattern": pattern, "error": str(exc)})
+                save_json(status, {"id": aid, "state": "FAILED",
+                                   "pattern": pattern, "error": str(exc)})
 
         threading.Thread(target=run, daemon=True).start()
         return aid
@@ -3046,11 +2880,8 @@ class FlightsEtlPipeline:
     def get_async_search(self, aid: str) -> dict:
         """Poll an async search: ``state`` RUNNING/SUCCEEDED/FAILED;
         on success the persisted hits attach as a lazy frame."""
-        path = os.path.join(self._async_dir(aid), "status.json")
-        try:
-            with open(path) as f:
-                st = json.load(f)
-        except FileNotFoundError:
+        st = load_json(os.path.join(self._async_dir(aid), "status.json"))
+        if not st:
             raise ValueError(f"no such async search {aid!r}")
         hits_dir = os.path.join(self._async_dir(aid), "hits")
         if st["state"] == "SUCCEEDED" and os.path.isdir(hits_dir):
@@ -3322,16 +3153,6 @@ class FlightsEtlPipeline:
 
     # -- data streams --------------------------------------------------------
 
-    def _ds_registry_path(self) -> str:
-        return os.path.join(self.cfg.index_root, "_data_streams.json")
-
-    def _read_data_streams(self) -> dict:
-        return _load_json(self._ds_registry_path())
-
-    def _write_data_streams(self, reg: dict) -> None:
-        os.makedirs(self.cfg.index_root, exist_ok=True)
-        _save_json(self._ds_registry_path(), reg)
-
     @staticmethod
     def _ds_backing(name: str, gen: int) -> str:
         return f".ds-{name}-{gen:06d}"
@@ -3348,11 +3169,9 @@ class FlightsEtlPipeline:
             # path separators / leading dots would nest or escape the
             # backing-index layout under index_root
             raise ValueError(f"invalid data stream name {name!r}")
-        reg = self._read_data_streams()
-        if name in reg:
+        if name in self.meta.read("data_streams"):
             raise ValueError(f"data stream {name!r} already exists")
-        reg[name] = {"generation": 1, "next_seq": 0}
-        self._write_data_streams(reg)
+        self.meta.put("data_streams", name, {"generation": 1, "next_seq": 0})
         return {"acknowledged": True}
 
     def data_stream_append(self, name: str, docs: list[dict]) -> int:
@@ -3362,9 +3181,7 @@ class FlightsEtlPipeline:
         append-only contract is exactly what makes data streams cheap:
         rollover bounds any file-count growth per generation). ``_id``s
         are synthesized from a persisted monotonic sequence."""
-        reg = self._read_data_streams()
-        if name not in reg:
-            raise ValueError(f"no such data stream {name!r}")
+        meta = self.meta.get("data_streams", name)
         if not docs:
             return 0
         for d in docs:
@@ -3372,8 +3189,8 @@ class FlightsEtlPipeline:
                 raise ValueError(
                     "data stream documents must carry @timestamp"
                 )
-        gen = reg[name]["generation"]
-        base = reg[name]["next_seq"]
+        gen = meta["generation"]
+        base = meta["next_seq"]
         backing = self._ds_backing(name, gen)
         rows = [
             {"_id": f"{name}-{base + i}",
@@ -3393,30 +3210,26 @@ class FlightsEtlPipeline:
                 )
             df = df.select(*existing.columns)
         self._publish(backing, df, replace=())
-        reg[name]["next_seq"] = base + len(docs)
-        self._write_data_streams(reg)
+        self.meta.put("data_streams", name,
+                      {**meta, "next_seq": base + len(docs)})
         return len(docs)
 
     def rollover_data_stream(self, name: str) -> dict:
         """``POST /<stream>/_rollover``: bump the write generation; the
         next append materializes the new backing index. Old generations
         stay readable through the stream's search pattern."""
-        reg = self._read_data_streams()
-        if name not in reg:
-            raise ValueError(f"no such data stream {name!r}")
-        old = reg[name]["generation"]
-        reg[name]["generation"] = old + 1
-        self._write_data_streams(reg)
+        meta = self.meta.get("data_streams", name)
+        old = meta["generation"]
+        self.meta.put("data_streams", name, {**meta, "generation": old + 1})
         return {"rolled_over": True,
                 "old_index": self._ds_backing(name, old),
                 "new_index": self._ds_backing(name, old + 1)}
 
     def get_data_stream(self, name: str | None = None) -> dict:
-        reg = self._read_data_streams()
-        if name is not None and name not in reg:
-            raise ValueError(f"no such data stream {name!r}")
+        reg = (self.meta.read("data_streams") if name is None
+               else {name: self.meta.get("data_streams", name)})
         out = {}
-        for n, meta in reg.items() if name is None else [(name, reg[name])]:
+        for n, meta in reg.items():
             backing = [
                 i for i in self._all_index_names()
                 if i.startswith(f".ds-{n}-")
@@ -3429,24 +3242,20 @@ class FlightsEtlPipeline:
         """``DELETE /_data_stream/<name>``: drops the stream AND its
         backing indexes (the public semantics — unlike deleting an
         alias)."""
-        reg = self._read_data_streams()
-        if name not in reg:
+        if name not in self.meta.read("data_streams"):
             return False
         for idx in self.get_data_stream(name)[name]["indices"]:
             p = self._index_path(idx)
             if os.path.isdir(p):
                 shutil.rmtree(p)
-        del reg[name]
-        self._write_data_streams(reg)
-        return True
+        return self.meta.pop("data_streams", name)
 
     def search_data_stream(self, name: str, body: dict | None = None) -> dict:
         """Search spans EVERY generation (the stream's backing pattern);
         per-generation predicates still push into each scan, and a
         @timestamp range prunes whole generations at the parquet
         row-group level."""
-        if name not in self._read_data_streams():
-            raise ValueError(f"no such data stream {name!r}")
+        self.meta.get("data_streams", name)  # raises for an unknown stream
         return self.search(f".ds-{name}-*", body)
 
     # -- bulk write API ----------------------------------------------------

@@ -1,0 +1,143 @@
+"""One metadata store: the JSON registries beside the index tables, the
+route manifests as the only record of a route's bucket count, and the
+metadata that rides along in snapshots."""
+
+from __future__ import annotations
+
+import json
+import os
+
+import pytest
+from pyspark.sql import functions as F
+
+from opensearch_dynamodb_etl_cdk_spark.sources.fixture_gen import gen_corpus
+from opensearch_dynamodb_etl_cdk_spark.streaming.pipeline import (
+    FlightsEtlPipeline,
+    PipelineConfig,
+)
+
+
+def _pipeline(spark, tmp_path, **kw):
+    return FlightsEtlPipeline(spark, PipelineConfig(
+        index_root=str(tmp_path / "i"),
+        checkpoint_root=str(tmp_path / "c"), **kw))
+
+
+def _items(spark):
+    return spark.createDataFrame(
+        [(s,) for s in gen_corpus()], "item_json string")
+
+
+def test_alerts_index_stays_fresh_across_ticks(spark, tmp_path):
+    p = _pipeline(spark, tmp_path)
+    p.bootstrap(_items(spark))
+    p.put_monitor("always", {
+        "search": {"index": "fare", "body": {}},
+        "trigger": {"count": {"gt": 0}},
+    })
+    assert [a["monitor"] for a in p.monitor_tick(now="t1")] == ["always"]
+    assert p.search(".alerts", {})["hits"].count() == 1
+    p.monitor_tick(now="t2")
+    # the first search must not freeze the alerts index at one alert
+    hits = p.search(".alerts", {})["hits"]
+    assert sorted(r["ts"] for r in hits.collect()) == ["t1", "t2"]
+    assert p.get_alerts().count() == 2
+
+
+def test_data_stream_survives_snapshot_delete_restore(spark, tmp_path):
+    p = _pipeline(spark, tmp_path)
+    p.create_data_stream("logs")
+    p.data_stream_append("logs", [
+        {"@timestamp": "2026-01-01T00:00:00", "msg": "a"},
+        {"@timestamp": "2026-01-01T00:01:00", "msg": "b"},
+    ])
+    snap = str(tmp_path / "snap")
+    p.snapshot(snap)
+    assert p.delete_data_stream("logs")
+    with pytest.raises(ValueError, match="no such data stream"):
+        p.get_data_stream("logs")
+
+    p.restore(snap)
+    assert p.get_data_stream("logs") == {"logs": {
+        "generation": 1, "indices": [".ds-logs-000001"]}}
+    hits = p.search_data_stream("logs", {})["hits"]
+    assert sorted(r["msg"] for r in hits.collect()) == ["a", "b"]
+    # the restored sequence cursor keeps new _ids unique
+    p.data_stream_append("logs", [
+        {"@timestamp": "2026-01-01T00:02:00", "msg": "c"}])
+    ids = [r["_id"] for r in
+           p.search_data_stream("logs", {})["hits"].collect()]
+    assert sorted(ids) == ["logs-0", "logs-1", "logs-2"]
+
+
+def test_bucket_count_lives_in_the_manifest(spark, tmp_path):
+    p = _pipeline(spark, tmp_path / "split", n_buckets=4)
+    p.bootstrap(_items(spark))
+    p.add_block("fare", "write")
+    p.remove_block("fare", "write")
+    assert p.split_index("fare", 2)["n_buckets"] == 8
+    settings = os.path.join(p._index_path("fare"), "_settings.json")
+    with open(settings) as f:
+        assert "n_buckets" not in json.load(f)
+    assert p._route_n_buckets("fare") == 8
+
+    p.bulk("fare", [{"index": {"_id": f"new-{i}", "doc": {"pk": "NEW"}}}
+                    for i in range(12)])
+    idx = p.read_index("fare")
+    assert idx.filter(F.col("pk") == "NEW").count() == 12
+    # every row, old and new, sits at its hash under the split count
+    assert idx.filter(
+        F.col("_bucket") != F.pmod(F.xxhash64("_id"), F.lit(8))
+    ).count() == 0
+
+    # a template-bucketed first bootstrap touches no route whose slice
+    # is empty: the bucket count is recorded only by a publish
+    q = _pipeline(spark, tmp_path / "tpl")
+    q.put_index_template("all", {
+        "index_patterns": ["*"],
+        "template": {"settings": {"number_of_buckets": 2}},
+    })
+    fares = _items(spark).filter(
+        F.get_json_object("item_json", "$.type.S") == "fare")
+    assert fares.count() > 0
+    q.bootstrap(fares)
+    assert q._route_n_buckets("fare") == 2
+    assert q.read_index("fare").select("_bucket").distinct().count() <= 2
+    assert not os.path.exists(q._index_path("flight"))
+    assert q.read_index("flight") is None
+
+
+def test_registry_store_put_pop_get(tmp_path):
+    from opensearch_dynamodb_etl_cdk_spark.streaming.meta import MetaStore
+
+    store = MetaStore(str(tmp_path / "root"))
+    assert store.read("roles") == {}
+    store.put("roles", "r", {"actions": ["read"]})
+    assert store.get("roles", "r") == {"actions": ["read"]}
+    with open(store.path("roles")) as f:
+        assert json.load(f) == {"r": {"actions": ["read"]}}
+    with pytest.raises(ValueError, match="no such stored script 'x'"):
+        store.get("stored_scripts", "x")
+    assert store.pop("roles", "r") is True
+    assert store.read("roles") == {}
+    # popping an absent key writes nothing
+    assert store.pop("monitors", "m") is False
+    assert not os.path.exists(store.path("monitors"))
+    with pytest.raises(KeyError):
+        store.read("not_a_registry")
+
+
+def test_failed_metadata_write_leaves_nothing_behind(tmp_path):
+    from opensearch_dynamodb_etl_cdk_spark.streaming.meta import (
+        MetaStore,
+        save_json,
+    )
+
+    store = MetaStore(str(tmp_path))
+    store.put("aliases", "a", "fare")
+    with pytest.raises(TypeError):
+        store.put("aliases", "b", object())
+    assert os.listdir(tmp_path) == ["_aliases.json"]
+    assert store.read("aliases") == {"a": "fare"}
+    save_json(str(tmp_path / "status.json"), {"n": object()}, default=str)
+    assert sorted(os.listdir(tmp_path)) == ["_aliases.json", "status.json"]

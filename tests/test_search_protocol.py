@@ -1313,7 +1313,7 @@ def test_review_r6b_regressions(spark, tmp_path_factory):
     assert p.rollover("gen_write", None)["rolled_over"]
     # new generation is empty; the filter must still apply (not widen)
     assert p.search("gen_write", {})["hits"].count() == 0
-    raw = p._read_aliases_raw()["gen_write"]
+    raw = p.meta.read("aliases")["gen_write"]
     assert isinstance(raw, dict) and raw["filter"] == {
         "term": {"pk": "DEN"}}
     assert scoped_before == want
@@ -1663,7 +1663,7 @@ def test_snapshot_carries_all_registries(spark, tmp_path_factory):
     p.restore(snap)
     assert p.get_script("s1")["source"] == "pk = 'DEN'"
     assert p.get_index_template("t1")["index_patterns"] == ["x*"]
-    assert "m1" in p._read_monitors()
+    assert "m1" in p.meta.read("monitors")
 
 
 def test_sql_explain_head(spark, tmp_path_factory):
