@@ -5,21 +5,19 @@ key with action index/upsert/delete derived from the CDC event type
 (custom_resource.py:350-351,370-371; NEW_IMAGE stream view). The
 materialized index is therefore the per-key latest image. Spark-first:
 
-- within a batch: window ``row_number() == 1`` over
-  ``partitionBy(key).orderBy(desc(seq))`` — never rely on task order
-  (SURVEY §7.3 known-hard #1);
-- across batches: merge = current index anti-joined by superseded keys,
-  unioned with the batch's surviving upserts (MERGE emulation without
-  Delta, SURVEY §7.3 #3).
+- per key, the row with the highest sequence number wins:
+  ``max_by(struct(*), seq)`` grouped by key — never task order (SURVEY
+  §7.3 known-hard #1);
+- across batches: merge = ONE such reduction over the union of the
+  stored rows of the touched buckets and the raw batch (MERGE emulation
+  without Delta, SURVEY §7.3 #3).
 
-Scale notes: the window and the anti-join both shuffle on the key —
-unavoidable for keyed semantics, and proportional to |batch| + |touched
-index partitions|, not |index|, once the index is stored partitioned by
-a stable hash of the key (see streaming/pipeline.py). AQE handles key
-skew; the per-key latest reduction is also expressible as
-``max_by(struct, seq)`` groupBy for map-side partial aggregation — used
-here because it combines before the shuffle (less shuffle volume than
-row_number over raw rows).
+Scale notes: a bucketed merge (input carries ``_bucket``) is
+hash-partitioned by ``_bucket`` first and reduced per (``_bucket``,
+key). A hash partitioning on a subset of the grouping keys satisfies
+the aggregate, so the plan holds ONE shuffle, proportional to |batch| +
+|touched index buckets| (not |index|), and its output is already laid
+out one bucket per task for the bucketed write (streaming/pipeline.py).
 """
 
 from __future__ import annotations
@@ -30,6 +28,7 @@ from pyspark.sql import functions as F
 ACTION_COL = "_action"
 SEQ_COL = "_seq"
 DELETED_COL = "_deleted"
+BUCKET_COL = "_bucket"
 
 
 def derive_action(event_name: Column) -> Column:
@@ -54,13 +53,14 @@ def latest_by_key(
     Duplicate (key, seq) deliveries (at-least-once) collapse to one row
     because max_by picks a single struct.
     """
-    cols = [c for c in df.columns]
+    return _max_by_seq(df, [key], seq)
+
+
+def _max_by_seq(df: DataFrame, keys: list[str], seq: str) -> DataFrame:
     packed = df.select(
-        F.col(key).alias("__k"),
-        F.col(seq).alias("__s"),
-        F.struct(*cols).alias("__row"),
+        *keys, F.col(seq).alias("__s"), F.struct(*df.columns).alias("__row")
     )
-    latest = packed.groupBy("__k").agg(F.max_by("__row", "__s").alias("__row"))
+    latest = packed.groupBy(*keys).agg(F.max_by("__row", "__s").alias("__row"))
     return latest.select("__row.*")
 
 
@@ -85,6 +85,11 @@ def apply_cdc_batch(
     batch (exactly-once effect, SURVEY K2): a replayed (key, seq) ties
     with the stored row carrying an identical image.
 
+    Stored rows and the raw batch go through ONE ``max_by`` reduction.
+    When the frames carry ``_bucket`` (a hash of the key), the union is
+    hash-partitioned by it first and reduced per (``_bucket``, key): one
+    shuffle, and the result is laid out one bucket per task.
+
     Default (matches the reference sink): deletes are not stored as
     tombstones, so an upsert with a lower seq re-delivered *after* the
     delete's batch re-creates the document — same behavior as an
@@ -95,9 +100,9 @@ def apply_cdc_batch(
     ``max_by`` and stays dead. Read paths must filter ``_deleted``;
     compaction can purge (see streaming/pipeline.py).
     """
-    latest = latest_by_key(batch, key=key, seq=seq)
-    prior = index
-    if prior is not None:
+    rows = batch
+    if index is not None:
+        prior = index
         if seq not in prior.columns:  # legacy index written without seq
             prior = prior.withColumn(seq, F.lit(-1).cast("long"))
         if DELETED_COL in prior.columns:
@@ -107,9 +112,12 @@ def apply_cdc_batch(
             ).drop(DELETED_COL)
         else:
             prior = prior.withColumn(action, F.lit("index"))
-        merged = latest_by_key(prior.unionByName(latest), key=key, seq=seq)
-    else:
-        merged = latest
+        rows = prior.unionByName(batch)
+    keys = [key]
+    if BUCKET_COL in rows.columns:
+        rows = rows.repartition(BUCKET_COL)
+        keys = [BUCKET_COL, key]
+    merged = _max_by_seq(rows, keys, seq)
     if keep_tombstones:
         return merged.withColumn(
             DELETED_COL, F.col(action) == "delete"

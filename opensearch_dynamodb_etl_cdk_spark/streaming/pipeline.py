@@ -420,6 +420,14 @@ class FlightsEtlPipeline:
         and off disk. The merge reads files the write never overwrites,
         so it needs no materialization barrier; a concurrent reader of
         the old version can still race the GC.
+
+        Spark work per route: one global ``collect_set`` brings the
+        touched buckets (at most ``n_buckets`` values) to the driver,
+        then the write runs the merge with a single shuffle — the union
+        of the touched stored buckets and the batch is hash-partitioned
+        by ``_bucket`` and reduced once (:func:`apply_cdc_batch`), so
+        each write task holds whole buckets and writes one file per
+        bucket.
         """
         # the route's LIVE bucket count governs placement — a resized
         # index (_split/_shrink) differs from cfg.n_buckets, so the
@@ -430,8 +438,8 @@ class FlightsEtlPipeline:
             "_bucket", F.pmod(F.xxhash64("_id"), F.lit(nb))
         ).persist()
         try:
-            # bounded: one row per distinct hash bucket (<= n_buckets)
-            touched = [r._bucket for r in batch.select("_bucket").distinct().collect()]
+            # bounded: at most n_buckets values reach the driver
+            touched = batch.agg(F.collect_set("_bucket")).first()[0]
             if not touched:
                 return
             current = self.read_index(route)
@@ -440,10 +448,7 @@ class FlightsEtlPipeline:
             merged = apply_cdc_batch(
                 current, batch, keep_tombstones=self.cfg.keep_tombstones
             )
-            self._publish(
-                route, merged.repartition(max(1, len(touched)), "_bucket"),
-                replace=touched, n_buckets=nb,
-            )
+            self._publish(route, merged, replace=touched, n_buckets=nb)
         finally:
             batch.unpersist()
 
@@ -476,11 +481,11 @@ class FlightsEtlPipeline:
           replay runs are neither replayed nor deleted, and a replay
           that fails leaves every slice parked for the next attempt
           (and raises);
-        - a metrics row (epoch ``epoch_id``, default -2) is APPENDED so
-          consecutive replays of different routes (or repeated replays
-          of one route after separate outages) each keep their audit
-          row — dynamic partition overwrite on the shared replay epoch
-          would erase the earlier one.
+        - a metrics row (epoch ``epoch_id``, default -2) is APPENDED, as
+          its own uniquely named file, so consecutive replays of
+          different routes (or repeated replays of one route after
+          separate outages) each keep their audit row — replacing the
+          shared replay epoch's file would erase the earlier one.
 
         Returns the number of replayed rows (0 = empty DLQ, a no-op).
         Only a genuinely absent DLQ directory is treated as "nothing
@@ -552,17 +557,8 @@ class FlightsEtlPipeline:
         except Exception:
             pass
         if n:
-            mdf = self.spark.createDataFrame(
-                [(epoch_id, route, n, n, n, n_delete, 0)],
-                "epoch long, route string, rows_in long, rows_routed long, "
-                "rows_merged long, rows_deleted long, rows_dlq long",
-            )
-            (
-                mdf.coalesce(1)
-                .write.mode("append")
-                .partitionBy("epoch")
-                .parquet(os.path.join(self.cfg.index_root, "_metrics"))
-            )
+            self._put_metrics(
+                epoch_id, [(route, n, n, n, n_delete, 0)], append=True)
         return n
 
     # -- batch entry points ----------------------------------------------------
@@ -611,51 +607,73 @@ class FlightsEtlPipeline:
     def _write_metrics(
         self, batch: DataFrame, epoch_id: int, dlq_counts: dict[str, int]
     ) -> None:
-        """Append one row per route (plus the audited drop) to the
+        """Write one row per route (plus the audited drop) to the
         ``_metrics`` table: rows in / routed / merged / deleted / DLQ'd
-        per micro-batch. One extra aggregation job over the already-
-        persisted batch — counts, never data, reach the driver."""
-        tagged = self.router.tag(
-            batch.filter(F.col("_action") != "delete"), "_route"
-        )
-        route_counts = {
-            r["_route"]: r["n"]
-            for r in tagged.groupBy("_route").agg(F.count("*").alias("n")).collect()
+        per micro-batch. The counts come from ONE aggregation over the
+        already-persisted batch (deletes group under a null route), and
+        only counts reach the driver, which writes the few rows itself
+        (:meth:`_put_metrics`) — no Spark job for the write."""
+        counts = {
+            r[0]: r[1]
+            for r in self.router.tag(batch, "_route")
+            .groupBy(F.when(F.col("_action") != "delete", F.col("_route")))
+            .count().collect()
         }
-        n_delete = batch.filter(F.col("_action") == "delete").count()
-        n_in = sum(route_counts.values()) + n_delete
+        n_delete = counts.pop(None, 0)
+        n_in = sum(counts.values()) + n_delete
         rows = []
         for route in self.cfg.routes:
-            routed = route_counts.get(route, 0)
+            routed = counts.get(route, 0)
             dlq = dlq_counts.get(route, 0)
             merged = 0 if dlq else routed
-            rows.append((epoch_id, route, n_in, routed, merged, n_delete, dlq))
-        rows.append(
-            (epoch_id, "dropped", n_in, route_counts.get(UNROUTED, 0), 0, 0, 0)
-        )
-        mdf = self.spark.createDataFrame(
-            rows,
-            "epoch long, route string, rows_in long, rows_routed long, "
-            "rows_merged long, rows_deleted long, rows_dlq long",
-        )
-        # partitioned by epoch + dynamic overwrite: re-delivery of a
-        # failed micro-batch rewrites its own epoch's rows instead of
-        # appending duplicates — metrics stay exactly-once like the data.
-        (
-            mdf.coalesce(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch")
-            .parquet(os.path.join(self.cfg.index_root, "_metrics"))
-        )
+            rows.append((route, n_in, routed, merged, n_delete, dlq))
+        rows.append(("dropped", n_in, counts.get(UNROUTED, 0), 0, 0, 0))
+        self._put_metrics(epoch_id, rows)
+
+    def _put_metrics(self, epoch_id: int, rows: list[tuple],
+                     append: bool = False) -> None:
+        """Write ``_metrics`` rows for one epoch from the driver, as one
+        parquet file in ``_metrics/epoch=<epoch_id>/`` (local FS, like
+        :meth:`_publish`). The file is written under a hidden tmp name
+        and renamed into place. By default it is ``part-00000.parquet``
+        and every other data file of the epoch is then deleted: a
+        re-delivered micro-batch replaces its epoch's rows instead of
+        appending duplicates, so metrics stay exactly-once like the
+        data. ``append`` gives the file a unique name and keeps the
+        epoch's other files."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        d = os.path.join(self.cfg.index_root, "_metrics", f"epoch={epoch_id}")
+        os.makedirs(d, exist_ok=True)
+        name = (f"part-{uuid.uuid4().hex}.parquet" if append
+                else "part-00000.parquet")
+        tmp = os.path.join(d, f".{name}.tmp")
+        cols = ("route", "rows_in", "rows_routed", "rows_merged",
+                "rows_deleted", "rows_dlq")
+        schema = pa.schema([(c, pa.string() if c == "route" else pa.int64())
+                            for c in cols])
+        pq.write_table(pa.Table.from_pylist(
+            [dict(zip(cols, r)) for r in rows], schema=schema), tmp)
+        os.replace(tmp, os.path.join(d, name))
+        if append:
+            return
+        for fn in os.listdir(d):
+            if fn != name and not fn.startswith(("_", ".")):
+                for f in (fn, f".{fn}.crc"):
+                    try:
+                        os.remove(os.path.join(d, f))
+                    except FileNotFoundError:
+                        pass
 
     def read_metrics(self) -> DataFrame | None:
-        try:
-            return self.spark.read.parquet(
-                os.path.join(self.cfg.index_root, "_metrics")
-            )
-        except Exception:
+        """The ``_metrics`` table (``epoch`` is its integer partition
+        column), or None when no batch has written one yet. Any other
+        read failure — a corrupt file, say — propagates."""
+        path = os.path.join(self.cfg.index_root, "_metrics")
+        if not os.path.exists(path):
             return None
+        return self.spark.read.parquet(path)
 
     # -- streaming entry point ---------------------------------------------------
 

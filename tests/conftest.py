@@ -44,21 +44,13 @@ SLOW_TESTS = frozenset((
     "tests/test_plans.py::test_no_cartesian_products_anywhere",
     "tests/test_dedup_similarity.py::test_pq_rerank_recall_on_embeddings",
     "tests/test_streaming.py::test_tombstones_block_stale_resurrection",
-    "tests/test_streaming.py::test_metrics_golden_counts",
     "tests/test_connectors.py::test_sharded_stream_source_offset_resume",
-    "tests/test_streaming.py::test_lower_seq_in_later_batch_does_not_clobber",
     "tests/test_connectors.py::test_bulk_http_sink_failures_land_in_dlq",
-    "tests/test_streaming.py::test_deletes_that_empty_buckets_remove_partitions",
     "tests/test_connectors.py::test_sharded_stream_source_latest_start_position",
     "tests/test_connectors.py::test_bulk_ndjson_sink_renders_public_bulk_bodies",
     "tests/test_search_protocol.py::test_field_masking_policies",
     "tests/test_streaming.py::test_stream_restart_checkpoint_no_reapply",
-    "tests/test_streaming.py::test_compact_bounds_files_and_preserves_data",
-    "tests/test_dlq_and_edges.py::test_replay_dlq_recovers_failed_route_then_noops",
-    "tests/test_dlq_and_edges.py::test_replay_dlq_metrics_survive_second_route",
     "tests/test_connectors.py::test_bulk_http_sink_delivers_bootstrap_and_tail",
-    "tests/test_streaming.py::test_update_by_query_bumps_seq_and_applies_script",
-    "tests/test_dlq_and_edges.py::test_replay_dlq_leaves_concurrently_parked_rows",
     "tests/test_search_protocol.py::test_bulk_create_and_upsert_semantics",
     "tests/test_analytics.py::test_connected_components_chain_and_island",
     "tests/test_connectors.py::test_stub_connector_bootstrap_and_tail_end_to_end",
@@ -66,35 +58,26 @@ SLOW_TESTS = frozenset((
     "tests/test_catalog_oracle.py::test_oracle_match[minhash_near_dup_pairs]",
     "tests/test_search_protocol.py::test_bulk_scripted_update_and_scripted_upsert",
     "tests/test_search_protocol.py::test_stored_scripts_registry_and_resolution",
-    "tests/test_streaming.py::test_stream_tail_applies_cdc",
     "tests/test_catalog_oracle.py::test_oracle_match[near_dup_components]",
     "tests/test_bench_rechunk.py::test_headline_query_invariant_under_rechunk[near_dup_components]",
     "tests/test_search_protocol.py::test_cluster_stats_and_forcemerge",
     "tests/test_search_protocol.py::test_bulk_index_update_delete_in_order",
     "tests/test_ann_index_publish.py::test_lsh_index_interleaved_rebuild_consistent",
     "tests/test_dedup_similarity.py::test_refresh_lsh_index_matches_full_rebuild",
-    "tests/test_dlq_and_edges.py::test_replay_dlq_skips_inflight_committer_temp_files",
     "tests/test_catalog_oracle.py::test_oracle_match[near_dup_survivor_count]",
     "tests/test_bench_rechunk.py::test_headline_query_invariant_under_rechunk[dedup_keep_best]",
-    "tests/test_streaming.py::test_incremental_snapshot_reuses_unchanged_buckets",
     "tests/test_search_protocol.py::test_single_document_crud",
     "tests/test_search_protocol.py::test_ism_policy_tick",
     "tests/test_search_protocol.py::test_role_based_index_permissions",
-    "tests/test_streaming.py::test_snapshot_replaces_stale_files_and_covers_reindexed",
-    "tests/test_streaming.py::test_reindex_filtered_transformed_copy",
     "tests/test_search_protocol.py::test_role_bound_document_level_security",
     "tests/test_dedup_similarity.py::test_lsh_multiquery_matches_per_query",
     "tests/test_catalog_oracle.py::test_oracle_match[dedup_keep_best]",
     "tests/test_search_protocol.py::test_review_r6b_regressions",
     "tests/test_search_protocol.py::test_bulk_same_id_chained_actions",
-    "tests/test_streaming.py::test_aliases_and_snapshot_restore",
     "tests/test_search_protocol.py::test_termvectors_and_cluster_health",
     "tests/test_search_protocol.py::test_monitors_and_alerts",
     "tests/test_search_protocol.py::test_rollover_lifecycle",
-    "tests/test_streaming.py::test_count_and_mget",
     "tests/test_bench_rechunk.py::test_headline_query_invariant_under_rechunk[ann_pq_rerank_topk]",
-    "tests/test_streaming.py::test_delete_by_query_through_merge_path",
-    "tests/test_streaming.py::test_reindexed_tables_searchable_and_alias_collision_blocked",
     "tests/test_search_protocol.py::test_index_blocks",
 ))
 
