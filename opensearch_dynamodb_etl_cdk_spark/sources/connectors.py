@@ -84,12 +84,13 @@ class FileSource(SourceConnector):
     def read_export(self, spark: SparkSession, options: dict) -> DataFrame:
         path = options.get("export_path")
         if not path:
-            raise ValueError("file source: options['export_path'] required")
-        fmt = options.get("format", "parquet")
-        df = spark.read.format(fmt).load(path)
+            raise ValueError(
+                f"{self.name} source: options['export_path'] required")
+        df = spark.read.format(options.get("format", "parquet")).load(path)
         if "item_json" not in df.columns:
             raise ValueError(
-                "file source: export frame must carry an item_json column"
+                f"{self.name} source: export frame must carry an "
+                "item_json column"
             )
         return df
 
@@ -102,7 +103,7 @@ class FileSource(SourceConnector):
         return spark.readStream.schema(CDC_SCHEMA).json(path)
 
 
-class ShardedStreamSource(SourceConnector):
+class ShardedStreamSource(FileSource):
     """Offset-resumable stream source (the reference's real read path:
     a per-shard-iterator tail, custom_resource.py:331-332). Backed by
     the PySpark Python Data Source in ``sources/stream_source.py``:
@@ -114,23 +115,9 @@ class ShardedStreamSource(SourceConnector):
     options: ``shards_root`` (dir of ``*.jsonl`` shard files),
     ``start_position`` (``TRIM_HORIZON`` default, or ``LATEST`` — the
     reference's mode), and ``export_path`` for the bootstrap half
-    (same contract as the ``file`` source)."""
+    (the ``file`` source's export reader, inherited)."""
 
     name = "sharded-stream"
-
-    def read_export(self, spark: SparkSession, options: dict) -> DataFrame:
-        path = options.get("export_path")
-        if not path:
-            raise ValueError(
-                "sharded-stream source: options['export_path'] required"
-            )
-        df = spark.read.format(options.get("format", "parquet")).load(path)
-        if "item_json" not in df.columns:
-            raise ValueError(
-                "sharded-stream source: export frame must carry an "
-                "item_json column"
-            )
-        return df
 
     def read_stream(self, spark: SparkSession, options: dict) -> DataFrame:
         from .stream_source import register_sharded_stream

@@ -204,6 +204,46 @@ def _agg_field_refs(spec) -> set[str]:
     return out
 
 
+def _bucket_of(n_buckets: int) -> Column:
+    """A document's hash bucket: the one placement rule of every
+    bucketed write."""
+    return F.pmod(F.xxhash64("_id"), F.lit(n_buckets))
+
+
+# merge bookkeeping columns no mapping or field capability shows
+_HIDDEN_COLS = frozenset({"_bucket", "_seq", "_deleted"})
+_SCALAR_TYPES = {
+    "string": "keyword", "long": "long", "int": "integer",
+    "double": "double", "float": "float", "boolean": "boolean",
+    "timestamp": "date", "timestamp_ntz": "date", "date": "date",
+    "binary": "binary",
+}
+
+
+def _field_mapping(dt) -> dict:
+    """A Spark type rendered as an OpenSearch field mapping (public
+    field-type names). Arrays map to their element type (OpenSearch
+    fields are multi-valued by nature); structs become ``object``
+    properties."""
+    s = dt.simpleString()
+    if s.startswith("array<"):
+        return _field_mapping(dt.elementType)
+    if s.startswith("struct<"):
+        return {"type": "object", "properties": {
+            f.name: _field_mapping(f.dataType) for f in dt.fields}}
+    return {"type": _SCALAR_TYPES.get(s, "keyword")}
+
+
+def _resolved_names(resolved) -> list[str]:
+    """Every index name in a :meth:`FlightsEtlPipeline._resolve_pattern`
+    result, filtered-alias members included, first-seen order."""
+    names, filtered = resolved
+    out = list(names)
+    for _flt, sub in filtered:
+        out += [n for n in _resolved_names(sub) if n not in out]
+    return out
+
+
 class FlightsEtlPipeline:
     def __init__(self, spark: SparkSession, config: PipelineConfig,
                  sink="index"):
@@ -246,7 +286,7 @@ class FlightsEtlPipeline:
             (F.col("seq").cast("long") * 2).alias("_seq"),
             derive_action(F.col("event_name")).alias("_action"),
             *unmarshal(parsed, self.cfg.attrs, aliases=self.cfg.aliases),
-        ).withColumn("_bucket", F.pmod(F.xxhash64("_id"), F.lit(self.cfg.n_buckets)))
+        )
 
     def transform_export(self, items: DataFrame, base_seq: int = 0) -> DataFrame:
         """Export snapshot rows (item_json) → same shape as a CDC batch of
@@ -430,13 +470,10 @@ class FlightsEtlPipeline:
         bucket.
         """
         # the route's LIVE bucket count governs placement — a resized
-        # index (_split/_shrink) differs from cfg.n_buckets, so the
-        # batch's precomputed _bucket is recomputed here, the one place
-        # bucket placement is decided
+        # index (_split/_shrink) differs from cfg.n_buckets — so
+        # incoming rows are bucketed here, at write time
         nb = self._route_n_buckets(route)
-        batch = route_df.withColumn(
-            "_bucket", F.pmod(F.xxhash64("_id"), F.lit(nb))
-        ).persist()
+        batch = route_df.withColumn("_bucket", _bucket_of(nb)).persist()
         try:
             # bounded: at most n_buckets values reach the driver
             touched = batch.agg(F.collect_set("_bucket")).first()[0]
@@ -683,8 +720,9 @@ class FlightsEtlPipeline:
                      options: dict | None = None):
         """Tail CDC events. Two entry shapes, ONE downstream path:
 
-        * ``start_stream(cdc_path)`` — the built-in file source (test
-          stand-in for the DynamoDB-Streams poller).
+        * ``start_stream(cdc_path)`` — the built-in file source
+          (``FileSource`` in sources/connectors.py, the test stand-in
+          for the DynamoDB-Streams poller) over ``cdc_path``.
         * ``start_stream(source="kinesis", options={...})`` — any
           REGISTERED source connector (sources/connectors.py); its
           ``read_stream`` must return a streaming frame with the CDC
@@ -694,23 +732,19 @@ class FlightsEtlPipeline:
         Either way the stream runs the same transform → route → sink
         merge with the same checkpointing.
         """
-        from ..sources.connectors import get_source_connector
+        from ..sources.connectors import FileSource, get_source_connector
 
         if source is not None:
-            stream = get_source_connector(source).read_stream(
-                self.spark, options or {}
-            )
-            if stream is None or not stream.isStreaming:
-                raise TypeError(
-                    f"source {source!r} read_stream must return a "
-                    "streaming DataFrame"
-                )
+            conn = get_source_connector(source)
+        elif cdc_path is not None:
+            conn, options = FileSource(), {"stream_path": cdc_path}
         else:
-            if cdc_path is None:
-                raise ValueError("start_stream needs cdc_path or source=")
-            stream = (
-                self.spark.readStream.schema(CDC_SCHEMA)
-                .json(cdc_path)
+            raise ValueError("start_stream needs cdc_path or source=")
+        stream = conn.read_stream(self.spark, options or {})
+        if stream is None or not stream.isStreaming:
+            raise TypeError(
+                f"source {source!r} read_stream must return a "
+                "streaming DataFrame"
             )
         transformed = self.transform_cdc(stream)
 
@@ -844,7 +878,7 @@ class FlightsEtlPipeline:
             raise ValueError(f"resize: index {route!r} is not materialized")
         self._publish(
             route,
-            current.withColumn("_bucket", F.pmod(F.xxhash64("_id"), F.lit(new_n))),
+            current.withColumn("_bucket", _bucket_of(new_n)),
             n_buckets=new_n,
         )
         return {"acknowledged": True, "n_buckets": new_n}
@@ -912,39 +946,46 @@ class FlightsEtlPipeline:
     # -- query surface over the materialized indexes -------------------------
 
     def index_view(self, route: str, _system: bool = False) -> DataFrame | None:
-        """Live documents only: tombstone rows (``_deleted``) are an
-        implementation detail of the merge, never part of query results.
-        Role-scoped: under ``as_role(...)`` reading an index outside
-        the role's grants raises (the public security_exception).
-        ``_system`` marks the pipeline's own internal reads (e.g. the
-        current-image fetch inside a by-id bulk write) — those run with
-        the engine's authority, like the public plugin's system reads,
-        so a write-only role can ingest without a read grant."""
+        """Live documents of one index, UNMASKED, for internal callers
+        (merges, maintenance, by-query writes); public reads add field
+        masking (:meth:`_read_view`). Tombstone rows (``_deleted``) are
+        a merge detail, never part of results. Role-scoped: under
+        ``as_role(...)`` an index outside the role's grants raises (the
+        public security_exception) and the role's DLS query filters the
+        rows. ``_system`` marks the pipeline's own internal reads (e.g.
+        the current-image fetch inside a by-id bulk write), run with the
+        engine's authority like the public plugin's system reads, so a
+        write-only role can ingest. No side effect: only :meth:`sql`
+        registers SQL views."""
+        return self._live(route, self.read_index, _system)
+
+    def _live(self, name: str, read, system: bool = False):
+        """:meth:`index_view` over ``read(name)``."""
         dls = None
-        if not _system:
-            self._check_role("read", route)
-            dls = self._active_dls_query(route)
-        df = self.read_index(route)
+        if not system:
+            self._check_role("read", name)
+            dls = self._active_dls_query(name)
+        df = read(name)
         if df is None:
             return None
         if "_deleted" in df.columns:
             df = df.filter(~F.col("_deleted")).drop("_deleted")
         if dls is not None:
             # document-level security: the role's query filter scopes
-            # EVERY read surface here (search/count/mget/sql/ppl all
+            # EVERY read surface here (search/count/mget/sql/ppl/PIT all
             # assemble from this view) and compiles into the scan as a
             # pushed predicate, like a filtered alias
             from ..operators.search import compile_query
 
             df = df.filter(compile_query(dls))
-        # SQL-friendly convenience view; index names may carry chars
-        # (rollover generations like logs-000002) invalid in view names.
-        # The view registers MASKED (it is a public SQL surface — for
-        # ANY index, not just configured routes); the returned frame
-        # stays raw for internal merge/maintenance callers.
-        view_name = re.sub(r"[^A-Za-z0-9_]", "_", f"{route}_index")
-        self._apply_field_masking(df, route).createOrReplaceTempView(view_name)
         return df
+
+    def _read_view(self, name: str, read=None) -> DataFrame | None:
+        """The per-index step of every public read: :meth:`index_view`
+        over ``read`` (default :meth:`read_index`; a PIT passes its
+        frozen tables), then field masking."""
+        return self._apply_field_masking(
+            self._live(name, read or self.read_index), name)
 
     def count(self, pattern: str, query: dict | None = None) -> int:
         """``GET /<index>/_count`` analog: documents matching a DSL
@@ -994,7 +1035,7 @@ class FlightsEtlPipeline:
         min/max pruning). Missing ids are simply absent, as the public
         response marks them found=false."""
         self._check_closed(route, "mget")
-        idx = self._apply_field_masking(self.index_view(route), route)
+        idx = self._read_view(route)
         if idx is None:
             return None
         return idx.filter(F.col("_id").isin(list(ids)))
@@ -1325,7 +1366,7 @@ class FlightsEtlPipeline:
         # _reindex runs with the reader's DLS/FLS/masking scope) —
         # copying originals out of a masked index would be the obvious
         # bypass channel
-        src = self._apply_field_masking(self.index_view(source), source)
+        src = self._read_view(source)
         if src is None:
             raise ValueError(f"no such index: {source!r}")
         self._validate_set_fields(src.columns, set_fields or {}, "reindex")
@@ -1591,30 +1632,9 @@ class FlightsEtlPipeline:
         df = self.index_view(route)
         if df is None:
             raise ValueError(f"no such index: {route!r}")
-
-        def field_mapping(dt) -> dict:
-            s = dt.simpleString()
-            if s.startswith("array<"):
-                return field_mapping(dt.elementType)
-            if s.startswith("struct<"):
-                return {
-                    "type": "object",
-                    "properties": {
-                        f.name: field_mapping(f.dataType) for f in dt.fields
-                    },
-                }
-            scalar = {
-                "string": "keyword", "long": "long", "int": "integer",
-                "double": "double", "float": "float", "boolean": "boolean",
-                "timestamp": "date", "timestamp_ntz": "date", "date": "date",
-                "binary": "binary",
-            }
-            return {"type": scalar.get(s, "keyword")}
-
-        hidden = {"_bucket", "_seq", "_deleted"}
         return {route: {"mappings": {"properties": {
-            f.name: field_mapping(f.dataType)
-            for f in df.schema.fields if f.name not in hidden
+            f.name: _field_mapping(f.dataType)
+            for f in df.schema.fields if f.name not in _HIDDEN_COLS
         }}}}
 
     # -- aliases + snapshots (operational surface) -------------------------
@@ -2349,113 +2369,108 @@ class FlightsEtlPipeline:
             )
         return df
 
-    def _masked_fields_for_pattern(self, pattern: str) -> set[str]:
-        """Union of masked field names across the indexes a search
-        pattern can resolve to (one alias level expanded) — the agg/
-        termvector rejection set."""
+    def _reject_masked_aggs(self, body: dict, names) -> None:
+        """Aggregating a masked field enumerates its values: reject it.
+        ``names()`` (the indexes read) runs only when an aggregation
+        names a field some policy masks."""
+        refs = _agg_field_refs(
+            body.get("aggs") or body.get("aggregations") or {})
+        reg = self.get_field_masking() if refs else {}
+        if not refs & {f for p in reg.values() for f in p.get("fields", [])}:
+            return
+        bad = sorted(refs & {f for n in names()
+                             for f in reg.get(n, {}).get("fields", [])})
+        if bad:
+            raise ValueError(
+                f"aggregations on masked fields {bad} are rejected")
+
+    def _resolve_pattern(self, pattern: str) -> tuple[list, list]:
+        """Which indexes an index pattern reads: the one resolver
+        behind every read surface. Returns ``(names, filtered)``:
+        index names (first-seen order, no duplicates) and one
+        ``(filter, (names, filtered))`` per filtered alias, whose
+        filter applies to the union of its own resolution. Comma lists
+        split; aliases, plain or filtered, expand recursively (a cycle
+        raises ``ValueError``); a wildcard matches index names, skipping
+        closed ones and, under a role, unreadable ones (the public
+        ``expand_wildcards=open`` and security-plugin rules); a literal
+        closed index raises ``PermissionError``, an unknown name
+        ``ValueError`` (OpenSearch 404). A literal the role cannot read
+        raises in :meth:`_read_view`. One alias-registry read and one
+        index listing per call."""
         import fnmatch
 
-        reg = self.get_field_masking()
-        if not reg:
-            return set()
-        raw_aliases = self.meta.read("aliases")
-        parts: list[str] = []
-        for raw in pattern.split(","):
-            raw = raw.strip()
-            if not raw:
-                continue
-            spec = raw_aliases.get(raw)
-            if isinstance(spec, dict):
-                parts.extend(spec.get("pattern", "").split(","))
-            elif spec is not None:
-                parts.extend(spec.split(","))
-            else:
-                parts.append(raw)
-        out: set[str] = set()
-        for route, spec in reg.items():
-            if any(fnmatch.fnmatchcase(route, p.strip()) for p in parts):
-                out.update(spec.get("fields", []))
+        aliases = self.meta.read("aliases")
+        indexes = self._all_index_names()  # routes + reindex-created
+
+        def expand(pattern: str, seen: tuple) -> tuple[list, list]:
+            names: list[str] = []
+            filtered: list = []
+            for p in (q.strip() for q in pattern.split(",")):
+                if not p:
+                    continue
+                spec = aliases.get(p)
+                if spec is not None:
+                    if p in seen:
+                        raise ValueError(
+                            "alias cycle: " + " -> ".join((*seen, p)))
+                    if not isinstance(spec, dict):
+                        spec = {"pattern": spec}
+                    sub = expand(spec["pattern"], (*seen, p))
+                    if spec.get("filter") is not None:
+                        filtered.append((spec["filter"], sub))
+                        continue
+                    new, more = sub
+                    filtered += more
+                elif "*" in p or "?" in p:
+                    new = [
+                        r for r in indexes
+                        if fnmatch.fnmatchcase(r, p) and r not in names
+                        and not self._read_route_settings(r).get("closed")
+                        and self._role_allows("read", r)
+                    ]
+                elif p in indexes:
+                    self._check_closed(p, "search")
+                    new = [p]
+                else:
+                    raise ValueError(f"no such index: {p!r}")
+                names += [n for n in new if n not in names]
+            return names, filtered
+
+        return expand(pattern, ())
+
+    def _union(self, resolved: tuple, read=None) -> DataFrame | None:
+        """A :meth:`_resolve_pattern` result as one frame: each index
+        through :meth:`_read_view` plus an ``_index`` column, then each
+        filtered alias's own union, filtered; unioned by name (missing
+        columns null)."""
+        from ..operators.search import compile_query
+
+        names, filtered = resolved
+        frames = [df.withColumn("_index", F.lit(n)) for n in names
+                  if (df := self._read_view(n, read)) is not None]
+        frames += [df.filter(compile_query(flt)) for flt, sub in filtered
+                   if (df := self._union(sub, read)) is not None]
+        out: DataFrame | None = None
+        for df in frames:
+            out = df if out is None else out.unionByName(
+                df, allowMissingColumns=True)
         return out
 
     def multi_index_view(self, pattern: str = "*") -> DataFrame | None:
         """OpenSearch multi-index search target (``GET /fare,flight/
-        _search``, ``GET /f*/_search``): the union of the matching live
-        index views, schema-merged by name (missing columns null) with
-        an ``_index`` column naming each hit's source index — the
-        response metadata OpenSearch attaches per hit. Comma-separated
-        names and ``*``/``?`` wildcards per the public index-pattern
-        rules; unknown literal names raise (OpenSearch 404), while a
-        wildcard matching no route — or only routes whose indexes are
-        not yet materialized — returns ``None`` (no frame to schema an
-        empty result from; callers treat ``None`` as the empty index,
-        exactly as :meth:`index_view` callers already do).
+        _search``, ``GET /f*/_search``, aliases): the union of the live
+        views of the indexes :meth:`_resolve_pattern` names, with an
+        ``_index`` column naming each hit's source index — the response
+        metadata OpenSearch attaches per hit. Each index is role-checked,
+        DLS-filtered and masked on the way in (:meth:`_read_view`).
+        ``None`` when nothing matched or nothing is materialized yet (no
+        frame to schema an empty result from; callers treat ``None`` as
+        the empty index).
 
         Remains a pure union plan: per-route filters compiled from a
         search body still push into each route's parquet scan."""
-        import fnmatch
-
-        raw_aliases = self.meta.read("aliases")
-        parts: list[str] = []
-        filtered_frames: list[DataFrame] = []
-        for raw in pattern.split(","):
-            raw = raw.strip()
-            if not raw:
-                continue
-            spec = raw_aliases.get(raw)
-            if isinstance(spec, dict) and spec.get("filter") is not None:
-                # filtered alias: resolve its own pattern, then apply
-                # the stored DSL filter — the predicate compiles into
-                # each route's scan like any query clause, so the
-                # row-scoped view costs nothing extra
-                from ..operators.search import compile_query
-
-                sub = self.multi_index_view(spec["pattern"])
-                if sub is not None:
-                    filtered_frames.append(
-                        sub.filter(compile_query(spec["filter"]))
-                    )
-                continue
-            if spec is not None:  # plain alias → its pattern's parts
-                pat = spec["pattern"] if isinstance(spec, dict) else spec
-                parts.extend(q.strip() for q in pat.split(",") if q.strip())
-            else:
-                parts.append(raw)
-        names = self._all_index_names()  # routes + reindex-created tables
-        routes: list[str] = []
-        for p in parts:
-            if "*" in p or "?" in p:
-                # the public expand_wildcards=open default: wildcards
-                # silently skip closed indexes — and, under a role,
-                # indexes the role cannot read (the security plugin's
-                # wildcard resolution); a LITERAL disallowed name still
-                # raises below, in index_view
-                routes.extend(
-                    r for r in names
-                    if fnmatch.fnmatchcase(r, p) and r not in routes
-                    and not self._read_route_settings(r).get("closed")
-                    and self._role_allows("read", r)
-                )
-            elif p in names:
-                # a literal name addressing a closed index errors
-                self._check_closed(p, "search")
-                if p not in routes:
-                    routes.append(p)
-            else:
-                raise ValueError(f"no such index: {p!r}")
-        out: DataFrame | None = None
-        for r in routes:
-            df = self._apply_field_masking(self.index_view(r), r)
-            if df is None:
-                continue
-            df = df.withColumn("_index", F.lit(r))
-            out = df if out is None else out.unionByName(
-                df, allowMissingColumns=True
-            )
-        for ff in filtered_frames:  # filtered-alias parts (carry _index)
-            out = ff if out is None else out.unionByName(
-                ff, allowMissingColumns=True
-            )
-        return out
+        return self._union(self._resolve_pattern(pattern))
 
     # -- search-protocol conveniences (msearch / scroll / field_caps) ------
 
@@ -2488,16 +2503,8 @@ class FlightsEtlPipeline:
         # attachment — so an agg spec introduced by those steps cannot
         # bypass it. (The only supported request processor,
         # filter_query, cannot add aggs.)
-        masked = self._masked_fields_for_pattern(pattern)
-        if masked:
-            aggs = body.get("aggs") or body.get("aggregations") or {}
-            bad = sorted(_agg_field_refs(aggs) & masked)
-            if bad:
-                # bucketing/aggregating a masked field enumerates its
-                # values — reject instead of returning hash buckets
-                raise ValueError(
-                    f"aggregations on masked fields {bad} are rejected"
-                )
+        self._reject_masked_aggs(
+            body, lambda: _resolved_names(self._resolve_pattern(pattern)))
         return execute_search(view, body)
 
     # -- search pipelines ---------------------------------------------------
@@ -2648,8 +2655,13 @@ class FlightsEtlPipeline:
 
     def sql(self, query: str) -> DataFrame:
         """``POST /_plugins/_sql`` analog: read-only SQL over the live
-        indexes. Every materialized route registers as a temp view under
-        its index name (plus current aliases), then the statement runs
+        indexes. Every call, and nothing else, registers the session
+        temp views a statement can name — each configured route by its
+        bare name, every index under ``index_root`` as ``<name>_index``
+        (other than ``[A-Za-z0-9_]`` becomes ``_``), each alias via
+        :meth:`multi_index_view` — masked and DLS-scoped like any read,
+        and drops those closed, unreadable under the role or not
+        materialized. The statement then runs
         through Spark SQL — the engine's dialect is Spark's ANSI-ish
         SQL, a superset of the plugin's. The plugin's full-text
         functions are supported by textual rewrite into the SAME
@@ -2689,30 +2701,27 @@ class FlightsEtlPipeline:
                     "sql: EXPLAIN accepts read-only SELECT statements"
                 )
         validate_script(q)
+
+        def register(view_name: str, view: DataFrame | None) -> None:
+            if view is None:
+                self.spark.catalog.dropTempView(view_name)
+            else:
+                view.createOrReplaceTempView(view_name)
+
         registered = False
-        for route in self.cfg.routes:
-            if self._read_route_settings(route).get("closed"):
-                # a closed index is unreadable on EVERY surface; drop a
-                # stale registration so earlier sessions' views don't
-                # leak through
-                self.spark.catalog.dropTempView(route)
-                continue
-            # the `<route>_index` convenience view registers masked
-            # inside index_view() itself (for every index, configured
-            # or not); this masks the plain `route` name too. Under a
-            # role, unreadable routes simply don't register (the
-            # security plugin lists only permitted tables) — and any
-            # STALE registration from an unscoped session is dropped.
-            if not self._role_allows("read", route):
-                self.spark.catalog.dropTempView(route)
-                self.spark.catalog.dropTempView(
-                    re.sub(r"[^A-Za-z0-9_]", "_", f"{route}_index")
-                )
-                continue
-            view = self._apply_field_masking(self.index_view(route), route)
-            if view is not None:
-                view.createOrReplaceTempView(route)
-                registered = True
+        for name in self._all_index_names():
+            # a closed index is unreadable on EVERY surface, and under a
+            # role only readable tables exist (the security plugin lists
+            # only permitted tables): their views are dropped, so no
+            # earlier call's registration leaks through
+            view = None
+            if (not self._read_route_settings(name).get("closed")
+                    and self._role_allows("read", name)):
+                view = self._read_view(name)
+            register(re.sub(r"[^A-Za-z0-9_]", "_", f"{name}_index"), view)
+            if name in self.cfg.routes:
+                register(name, view)
+                registered |= view is not None
         for alias in self.meta.read("aliases"):
             # resolve by ALIAS name, not its flattened pattern — a
             # filtered alias's row scope must hold on the SQL surface
@@ -2721,12 +2730,10 @@ class FlightsEtlPipeline:
             try:
                 view = self.multi_index_view(alias)
             except PermissionError:
-                # an alias whose pattern names an index the active role
-                # cannot read is unavailable under that role
-                self.spark.catalog.dropTempView(alias)
-                continue
-            if view is not None:
-                view.createOrReplaceTempView(alias)
+                # an alias naming an index that is closed or that the
+                # active role cannot read is unavailable
+                view = None
+            register(alias, view)
         if not registered:
             raise ValueError("sql: no index is materialized (bootstrap first)")
         return self.spark.sql(q)
@@ -2928,9 +2935,12 @@ class FlightsEtlPipeline:
 
         Divergence from the public contract, documented: OpenSearch
         scroll pins a point-in-time snapshot via segment refs; this
-        engine's pages re-read the live table, so a concurrent merge
-        between pages may surface/hide rows. Use a snapshot dir
-        (:meth:`snapshot`) when frozen iteration matters."""
+        engine's pages still read LIVE data — each page re-resolves the
+        pattern through :meth:`multi_index_view`, so a concurrent merge
+        between pages may surface/hide rows, and each page sees the
+        closed flags, role and masking current when it runs. Use
+        :meth:`open_pit` / :meth:`search_pit` when frozen iteration
+        matters."""
         body = dict(body or {})
         body.setdefault("sort", [{"_id": {"order": "asc"}}])
         body["size"] = int(size)
@@ -3042,51 +3052,22 @@ class FlightsEtlPipeline:
 
     def field_caps(self, pattern: str = "*") -> dict:
         """``GET /<pattern>/_field_caps`` analog: per-field capability
-        map across the matching indices — type (public mapping names,
-        via the same scalar table as :meth:`get_mapping`), searchable/
-        aggregatable flags, and the index list per type so type
-        CONFLICTS across indices are visible exactly as the public
-        response shapes them. Pure schema metadata: no data is read."""
-        import fnmatch as _fn
-
-        aliases = self.get_aliases()
-        parts: list[str] = []
-        for raw in pattern.split(","):
-            raw = raw.strip()
-            if not raw:
-                continue
-            if raw in aliases:  # alias → its pattern's parts
-                parts.extend(
-                    q.strip() for q in aliases[raw].split(",") if q.strip()
-                )
-            else:
-                parts.append(raw)
-        names = [
-            r for r in self._all_index_names()
-            if any(_fn.fnmatchcase(r, p) or r == p for p in parts)
-        ]
-        scalar = {
-            "string": "keyword", "long": "long", "int": "integer",
-            "double": "double", "float": "float", "boolean": "boolean",
-            "timestamp": "date", "timestamp_ntz": "date", "date": "date",
-            "binary": "binary",
-        }
-        hidden = {"_bucket", "_seq", "_deleted"}
+        map across the indices the pattern resolves to (as for
+        :meth:`search`) — type (public mapping names, rendered exactly
+        as :meth:`get_mapping` does), searchable/aggregatable flags, and
+        the index list per type so type CONFLICTS across indices are
+        visible exactly as the public response shapes them. Pure schema
+        metadata: no data is read."""
+        names = sorted(_resolved_names(self._resolve_pattern(pattern)))
         fields: dict[str, dict[str, dict]] = {}
         for idx_name in names:
             df = self.index_view(idx_name)
             if df is None:
                 continue
             for f in df.schema.fields:
-                if f.name in hidden:
+                if f.name in _HIDDEN_COLS:
                     continue
-                s = f.dataType.simpleString()
-                if s.startswith("array<"):
-                    s = f.dataType.elementType.simpleString()
-                ftype = (
-                    "object" if s.startswith("struct<")
-                    else scalar.get(s, "keyword")
-                )
+                ftype = _field_mapping(f.dataType)["type"]
                 cap = fields.setdefault(f.name, {}).setdefault(ftype, {
                     "type": ftype,
                     "searchable": True,
@@ -3111,57 +3092,67 @@ class FlightsEtlPipeline:
         ]}
 
     def open_pit(self, pattern: str = "*") -> str:
-        """``POST /<pattern>/_pit`` analog: freeze a point-in-time view.
-        Implementation = a snapshot (file-level copy, no Spark job) of
-        the matching index tables under the index root; searches through
-        :meth:`search_pit` read the frozen files, so concurrent merges
-        never change a PIT reader's results — the consistency guarantee
-        scroll alone does not give on this engine (see
+        """``POST /<pattern>/_pit`` analog: freeze a point-in-time view
+        of the indexes ``pattern`` resolves to (as for :meth:`search`).
+        Implementation = a file-level copy (no Spark job) of just those
+        index tables; searches
+        through :meth:`search_pit` read the frozen files, so concurrent
+        merges never change a PIT reader's results — the consistency
+        guarantee scroll alone does not give on this engine (see
         :meth:`create_scroll`). At real scale the copy is the storage
-        layer's cheap object clone."""
-        pit_id = uuid.uuid4().hex
-        pit_dir = os.path.join(self.cfg.index_root, "_pits", pit_id)
-        done = self.snapshot(pit_dir, pattern)
-        if not done:
+        layer's cheap object clone. A filtered alias in the pattern
+        raises ``ValueError``: alias filters are not frozen."""
+        names, filtered = self._resolve_pattern(pattern)
+        if filtered:
+            raise ValueError(
+                f"open_pit: {pattern!r} names a filtered alias, which a "
+                "point-in-time view cannot freeze")
+        names = [n for n in names if os.path.isdir(self._index_path(n))]
+        if not names:
             raise ValueError(f"pattern {pattern!r} matches no index")
+        pit_id = uuid.uuid4().hex
+        for name in names:
+            self._sync_tree(self._index_path(name),
+                            os.path.join(self._pit_dir(pit_id), name))
         return pit_id
 
-    def pit_view(self, pit_id: str) -> DataFrame | None:
-        """The frozen multi-index view of a PIT: union of the snapshot
-        tables with per-hit ``_index``, tombstones dropped — the same
-        shape :meth:`multi_index_view` serves for live searches."""
-        pit_dir = os.path.join(self.cfg.index_root, "_pits", pit_id)
+    def _pit_dir(self, pit_id: str) -> str:
+        return os.path.join(self.cfg.index_root, "_pits", pit_id)
+
+    def _pit_tables(self, pit_id: str) -> list[str]:
+        pit_dir = self._pit_dir(pit_id)
         if not os.path.isdir(pit_dir):
             raise ValueError(f"no such pit {pit_id!r}")
-        out: DataFrame | None = None
-        for name in sorted(os.listdir(pit_dir)):
-            path = os.path.join(pit_dir, name)
-            if name.startswith("_") or not os.path.isdir(path):
-                continue
-            df = self._resolve(path)
-            if df is None:
-                continue
-            if "_deleted" in df.columns:
-                df = df.filter(~F.col("_deleted")).drop("_deleted")
-            df = df.withColumn("_index", F.lit(name))
-            out = df if out is None else out.unionByName(
-                df, allowMissingColumns=True
-            )
-        return out
+        return sorted(n for n in os.listdir(pit_dir) if not n.startswith("_")
+                      and os.path.isdir(os.path.join(pit_dir, n)))
+
+    def pit_view(self, pit_id: str) -> DataFrame | None:
+        """The frozen multi-index view of a PIT: the union and
+        per-index step of :meth:`multi_index_view` (role check, DLS,
+        tombstone drop, masking, ``_index``) over the frozen tables.
+        Only the data is frozen: role and masking apply as they are
+        at search time."""
+        pit_dir = self._pit_dir(pit_id)
+        return self._union((self._pit_tables(pit_id), []), lambda n: (
+            self._resolve(os.path.join(pit_dir, n))))
 
     def search_pit(self, pit_id: str, body: dict | None = None) -> dict:
         """``_search`` with a ``pit`` id: the DSL body runs against the
-        frozen view — repeatable pages under a changing live index."""
+        frozen view — repeatable pages under a changing live index.
+        Aggregations on masked fields are rejected, as in
+        :meth:`search`."""
         from ..operators.search import execute_search
 
         view = self.pit_view(pit_id)
         if view is None:
             return {"hits": None, "aggregations": {}}
-        return execute_search(view, body or {})
+        body = body or {}
+        self._reject_masked_aggs(body, lambda: self._pit_tables(pit_id))
+        return execute_search(view, body)
 
     def close_pit(self, pit_id: str) -> bool:
         """``DELETE /_pit`` analog: drop the frozen copy."""
-        pit_dir = os.path.join(self.cfg.index_root, "_pits", pit_id)
+        pit_dir = self._pit_dir(pit_id)
         if not os.path.isdir(pit_dir):
             return False
         shutil.rmtree(pit_dir)
@@ -3511,8 +3502,5 @@ class FlightsEtlPipeline:
         batch = frames[0]
         for f in frames[1:]:
             batch = batch.unionByName(f)
-        batch = batch.withColumn(
-            "_bucket", F.pmod(F.xxhash64("_id"), F.lit(self.cfg.n_buckets))
-        )
         self._merge_route(batch, route)
         return {"items": len(actions), **counts}
