@@ -2,8 +2,7 @@
 
 All pipeline metadata is small JSON documents written through
 :func:`save_json`: the registries below (one file each under the index
-root), each route's ``_manifest.json`` (file set, schema, bucket count)
-and ``_settings.json`` (index blocks, closed flag), and the
+root), each route's ``_manifest.json`` (:mod:`.store`) and the
 async-search status documents. The write serializes first, then
 replaces the target atomically through a private tmp file — a reader
 never sees a partial document, and a value that fails to serialize

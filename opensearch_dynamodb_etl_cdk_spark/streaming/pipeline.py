@@ -33,18 +33,17 @@ Scale notes:
   and the merge takes the per-key max over union(stored, batch), so a
   late re-delivery with a lower sequence number loses to the stored
   image (true last-write-wins, not last-arrived-wins).
-- Every write is copy-on-write behind a per-route manifest
-  (``_manifest.json``: version, parquet files per bucket, schema,
-  bucket count). New part files land beside the old ones, the next
-  version is published atomically, then files only the old version
-  referenced are deleted — a bucket whose deletes emptied it simply
-  drops out of the manifest. Readers resolve a route from its
-  manifest (never by listing the directory), and reuse the resolved
-  frame until the manifest changes.
+- Index storage is :class:`~.store.IndexStore` (``streaming/store.py``):
+  one ``_manifest.json`` per route holds its file set, schema, bucket
+  count, blocks and closed flag. Every write publishes the next
+  manifest version copy-on-write under the route's lock; a read opens
+  the manifest once and reuses the resolved frame until the file set
+  changes.
 """
 
 from __future__ import annotations
 
+import fnmatch
 import json
 import os
 import re
@@ -62,6 +61,7 @@ from ..operators.routing import UNROUTED, Router, type_route
 from ..operators.upsert import apply_cdc_batch, derive_action, latest_by_key
 from ..sources.flights import ALIASES, SUPERSET_ATTRS
 from .meta import REGISTRIES, MetaStore, load_json, save_json
+from .store import IndexStore
 
 CDC_SCHEMA = T.StructType(
     [
@@ -75,7 +75,6 @@ CDC_SCHEMA = T.StructType(
 )
 
 N_BUCKETS = 16  # hash buckets for index-table partitioning
-MANIFEST = "_manifest.json"  # "_" keeps it invisible to parquet readers
 
 # Active role scopes, keyed by pipeline identity. A ContextVar (not an
 # instance attribute) so concurrent threads / interleaved generators
@@ -122,15 +121,13 @@ class PipelineConfig:
     keep_tombstones: bool = False
 
 
-import re as _sql_re
-
 # OpenSearch SQL-plugin full-text functions → the interpreter's analyzer
 # algebra as plain SQL text (codegen-evaluable, no UDF). Longest names
 # first so MATCH_PHRASE is not half-eaten by MATCH.
-_SQL_FT_RE = _sql_re.compile(
+_SQL_FT_RE = re.compile(
     r"\b(MATCH_PHRASE|MATCHPHRASE|MATCH_QUERY|MATCHQUERY|MATCH)\s*\(\s*"
     r"([A-Za-z_][A-Za-z0-9_.]*)\s*,\s*'([^']*)'\s*\)",
-    _sql_re.IGNORECASE,
+    re.IGNORECASE,
 )
 
 
@@ -161,7 +158,7 @@ def _rewrite_sql_fulltext(q: str) -> str:
 
     spans = _sql_literal_spans(q)
 
-    def repl(m: _sql_re.Match) -> str:
+    def repl(m: re.Match) -> str:
         if any(s <= m.start() < e for s, e in spans):
             return m.group(0)  # inside a string literal — leave verbatim
         fn, field, text = m.group(1).upper(), m.group(2), m.group(3)
@@ -267,8 +264,7 @@ class FlightsEtlPipeline:
         # token identity can never be recycled while a scope holds it)
         self._role_token = object()
         self.meta = MetaStore(config.index_root)
-        # resolved index frames: route dir → (manifest text, frame)
-        self._views: dict[str, tuple[str, DataFrame]] = {}
+        self.store = IndexStore(spark, config.index_root, config.routes)
 
     # -- shared transform (one code path for bootstrap and tail, ST2) -------
 
@@ -303,163 +299,23 @@ class FlightsEtlPipeline:
 
     # -- index table I/O ------------------------------------------------------
 
-    def _index_path(self, route: str) -> str:
-        return os.path.join(self.cfg.index_root, route)
-
     def read_index(self, route: str) -> DataFrame | None:
         """The route's index table as a frame, or None when it was never
-        materialized.
-
-        Resolved from the route's published manifest, never by listing
-        the directory: the frame is ``read.schema(s).parquet(*files)``
-        over the manifest's file set, built once per manifest version
-        and reused until a write publishes the next one — a repeat read
-        of an unchanged route launches no Spark job. Each call re-reads
-        the small manifest file, so a write made through another
-        pipeline instance on the same ``index_root`` shows on the next
-        read. Concurrent readers can still race GC: a frame planned
-        against version N may hit a file the publish of N+1 deleted."""
-        return self._resolve(self._index_path(route))
-
-    def _resolve(self, root: str) -> DataFrame | None:
-        got = self._manifest(root)
-        if got is None:
-            return None
-        text, m = got
-        hit = self._views.get(root)
-        # the whole manifest text is the key, not just its version: a
-        # restore or a delete-and-recreate can reuse a version number
-        if hit is not None and hit[0] == text:
-            return hit[1]
-        schema = T.StructType.fromJson(m["schema"])
-        files = [os.path.join(root, f) for fs in m["files"].values() for f in fs]
-        df = (
-            self.spark.read.schema(schema).option("basePath", root)
-            .parquet(*files)
-            if files else self.spark.createDataFrame([], schema)
-        )
-        self._views[root] = (text, df)
-        return df
-
-    def _manifest(self, root: str) -> tuple[str, dict] | None:
-        """(raw text, parsed) of the manifest under ``root``. A
-        directory of parquet files with no manifest (written before
-        manifests existed) is adopted once: listed, and published as
-        version 1. No manifest and no files = not materialized."""
-        try:
-            with open(os.path.join(root, MANIFEST)) as f:
-                text = f.read()
-            return text, json.loads(text)
-        except (FileNotFoundError, NotADirectoryError):
-            pass
-        files = self._list_parquet(root)
-        if not files:
-            return None
-        save_json(os.path.join(root, MANIFEST), {
-            "version": 1, "files": files, "n_buckets": None,
-            "schema": self.spark.read.parquet(root).schema.jsonValue(),
-        })
-        return self._manifest(root)
-
-    @staticmethod
-    def _list_parquet(root: str) -> dict[str, list[str]]:
-        """Visible data files under ``root`` (the parquet reader's
-        hidden-path rule), root-relative, grouped by ``_bucket`` value
-        ("" for files outside any bucket dir)."""
-        out: dict[str, list[str]] = {}
-        for d, dirs, fs in os.walk(root):
-            dirs[:] = [x for x in dirs
-                       if not x.startswith(("_", ".")) or "=" in x]
-            rel = os.path.relpath(d, root)
-            bucket = "" if rel == "." else rel.split("=", 1)[1]
-            for fn in sorted(fs):
-                if not fn.startswith(("_", ".")):
-                    out.setdefault(bucket, []).append(
-                        fn if rel == "." else os.path.join(rel, fn))
-        return out
-
-    def _publish(self, route: str, df: DataFrame, replace=None,
-                 n_buckets: int | None = None) -> None:
-        """Copy-on-write write of ``df`` into the route: the one write
-        path of every index table.
-
-        Spark writes the rows to a private staging dir (partitioned by
-        ``_bucket`` when the frame has one); the part files are renamed
-        into the route's ``_bucket=<b>/`` dirs under new names, so no
-        file a reader may hold is ever overwritten. Manifest version
-        N+1 is then published atomically: buckets in ``replace``
-        (``None`` = every bucket, empty = a pure append) hold exactly
-        the new files, other buckets keep version N's files plus any
-        new ones, the schema is the union of N's and ``df``'s (no
-        column vanishes from buckets the write did not touch), and the
-        bucket count is ``n_buckets``, else N's. Last,
-        GC deletes the files N referenced and N+1 does not, and any
-        bucket dir that leaves empty. A reader still scanning version N
-        can race that GC (no version pinning)."""
-        root = self._index_path(route)
-        got = self._manifest(root)
-        prev = got[1] if got else {"version": 0, "files": {}, "schema": None}
-        stage = os.path.join(self.cfg.index_root, "_staging", uuid.uuid4().hex)
-        writer = df.write
-        if "_bucket" in df.columns:
-            writer = writer.partitionBy("_bucket")
-        writer.parquet(stage)
-        new = self._list_parquet(stage)
-        for f in (f for fs in new.values() for f in fs):
-            os.makedirs(os.path.dirname(os.path.join(root, f)), exist_ok=True)
-            os.rename(os.path.join(stage, f), os.path.join(root, f))
-        shutil.rmtree(stage)
-
-        old = prev["files"]
-        gone = {str(b) for b in replace} if replace is not None else set(old)
-        files = {b: fs for b, fs in old.items() if b not in gone}
-        for b, fs in new.items():
-            files[b] = files.get(b, []) + fs
-        # union schema, the written frame's types winning; the bucket
-        # partition column last, typed as partition inference types it
-        cols = {}
-        if prev["schema"] is not None:
-            cols = {f.name: f for f in T.StructType.fromJson(prev["schema"])}
-        cols.update((f.name, f) for f in df.schema)
-        bucketed = cols.pop("_bucket", None) is not None
-        fields = list(cols.values())
-        if bucketed:
-            fields.append(T.StructField("_bucket", T.IntegerType()))
-        os.makedirs(root, exist_ok=True)  # a write of no rows has no files
-        save_json(os.path.join(root, MANIFEST), {
-            "version": prev["version"] + 1,
-            "files": dict(sorted(files.items())),
-            "n_buckets": prev.get("n_buckets") if n_buckets is None
-            else n_buckets,
-            "schema": T.StructType(fields).jsonValue(),
-        })
-
-        live = {f for fs in files.values() for f in fs}
-        for f in sorted({f for fs in old.values() for f in fs} - live):
-            d, name = os.path.split(os.path.join(root, f))
-            for path in (os.path.join(d, name), os.path.join(d, f".{name}.crc")):
-                try:
-                    os.remove(path)
-                except FileNotFoundError:
-                    pass
-            if d != root:
-                try:
-                    os.rmdir(d)  # only succeeds once the bucket is empty
-                except OSError:
-                    pass
+        materialized (:meth:`~.store.IndexStore.frame`). Each call
+        re-reads the manifest, so a write through another pipeline on
+        the same ``index_root`` shows on the next read."""
+        return self.store.frame(route)
 
     def _merge_route(self, route_df: DataFrame, route: str) -> None:
         """MERGE one route's slice of a micro-batch into its index table.
 
         Only the hash buckets present in the batch are rewritten — merge
-        cost ∝ touched buckets. The merged rows of those buckets are
-        published copy-on-write (:meth:`_publish`): new part files, a
-        new manifest version in which the touched buckets hold only the
-        new files, then GC of the replaced ones. A bucket whose deletes
-        wiped every doc gets no new file and drops out of the manifest
-        and off disk. The merge reads files the write never overwrites,
-        so it needs no materialization barrier; a concurrent reader of
-        the old version can still race the GC.
+        cost ∝ touched buckets — and published copy-on-write with
+        ``replace`` = those buckets (:meth:`~.store.IndexStore.commit`),
+        so a bucket whose deletes wiped every doc drops out of the
+        manifest and off disk. The whole read-merge-publish holds the
+        route's lock: a concurrent writer (a client bulk racing a
+        micro-batch) waits instead of publishing over it.
 
         Spark work per route: one global ``collect_set`` brings the
         touched buckets (at most ``n_buckets`` values) to the driver,
@@ -469,25 +325,28 @@ class FlightsEtlPipeline:
         each write task holds whole buckets and writes one file per
         bucket.
         """
-        # the route's LIVE bucket count governs placement — a resized
-        # index (_split/_shrink) differs from cfg.n_buckets — so
-        # incoming rows are bucketed here, at write time
-        nb = self._route_n_buckets(route)
-        batch = route_df.withColumn("_bucket", _bucket_of(nb)).persist()
-        try:
-            # bounded: at most n_buckets values reach the driver
-            touched = batch.agg(F.collect_set("_bucket")).first()[0]
-            if not touched:
-                return
-            current = self.read_index(route)
-            if current is not None:
-                current = current.filter(F.col("_bucket").isin(touched))
-            merged = apply_cdc_batch(
-                current, batch, keep_tombstones=self.cfg.keep_tombstones
-            )
-            self._publish(route, merged, replace=touched, n_buckets=nb)
-        finally:
-            batch.unpersist()
+        with self.store.lock(route):
+            m = self.store.manifest(route)
+            # the route's LIVE bucket count governs placement — a resized
+            # index (_split/_shrink) differs from cfg.n_buckets — so
+            # incoming rows are bucketed here, at write time
+            nb = self._route_n_buckets(route, m)
+            batch = route_df.withColumn("_bucket", _bucket_of(nb)).persist()
+            try:
+                # bounded: at most n_buckets values reach the driver
+                touched = batch.agg(F.collect_set("_bucket")).first()[0]
+                if not touched:
+                    return
+                current = self.store.frame(route, m)
+                if current is not None:
+                    current = current.filter(F.col("_bucket").isin(touched))
+                merged = apply_cdc_batch(
+                    current, batch, keep_tombstones=self.cfg.keep_tombstones
+                )
+                self.store.publish(route, merged, replace=touched,
+                                   n_buckets=nb)
+            finally:
+                batch.unpersist()
 
     def _write_dlq(self, failed: DataFrame, route: str, error: str) -> None:
         (
@@ -671,7 +530,7 @@ class FlightsEtlPipeline:
                      append: bool = False) -> None:
         """Write ``_metrics`` rows for one epoch from the driver, as one
         parquet file in ``_metrics/epoch=<epoch_id>/`` (local FS, like
-        :meth:`_publish`). The file is written under a hidden tmp name
+        the index publish). The file is written under a hidden tmp name
         and renamed into place. By default it is ``part-00000.parquet``
         and every other data file of the epoch is then deleted: a
         re-delivered micro-batch replaces its epoch's rows instead of
@@ -762,28 +621,18 @@ class FlightsEtlPipeline:
 
     # -- maintenance -----------------------------------------------------------
 
-    def _route_n_buckets(self, route: str) -> int:
-        """The route's live hash-bucket count. The route's manifest is
-        its only record: every bucketed publish stores the count it
-        placed rows by, and :meth:`split_index` / :meth:`shrink_index`
-        publish the new one. A manifest without a count (an adopted
-        directory, a rollover's empty generation) means the pipeline
-        default. A route not yet materialized takes the count from a
-        matching index template (the public create-time settings
-        application), else the default; its first publish records it,
-        so a template added LATER never re-buckets a live index."""
-        got = self._manifest(self._index_path(route))
-        if got is not None:
-            return int(got[1].get("n_buckets") or self.cfg.n_buckets)
+    def _route_n_buckets(self, route: str, m: dict | None = None) -> int:
+        """The route's live hash-bucket count, from its manifest (``m``,
+        read when not given): every bucketed publish records the count
+        it placed rows by. No count there (an adopted directory, a
+        rollover's empty generation) means the pipeline default. A route
+        not yet materialized takes a matching index template's count
+        (the public create-time settings), else the default; its first
+        publish records it, so a later template never re-buckets it."""
+        m = m or self.store.manifest(route)
+        if m is not None:
+            return int(m["n_buckets"] or self.cfg.n_buckets)
         return self.simulate_index_template(route)["n_buckets"]
-
-    def _settings_path(self, route: str) -> str:
-        return os.path.join(self._index_path(route), "_settings.json")
-
-    def _read_route_settings(self, route: str) -> dict:
-        """The route's ``blocks`` and ``closed`` flag (``{}`` when
-        neither was ever set)."""
-        return load_json(self._settings_path(route))
 
     # -- index blocks ---------------------------------------------------------
 
@@ -792,95 +641,71 @@ class FlightsEtlPipeline:
         document writes (bulk / doc CRUD / update_by_query /
         delete_by_query / reindex-into), ``read_only`` additionally
         freezes metadata ops (split/shrink). Blocks persist in the
-        per-route ``_settings.json`` (the bucket count lives in the
-        route's manifest, not there). The CDC stream itself is NOT
+        route's manifest beside its bucket count, and a later data
+        publish carries them over. The CDC stream itself is NOT
         gated — it is the system of record replaying upstream truth,
         and wedging the checkpointed stream on a client-facing block
         would turn a soft guard into data loss; block the client verbs,
         drain the source instead."""
         if block not in ("write", "read_only"):
             raise ValueError(f"unsupported block {block!r}")
-        if not os.path.isdir(self._index_path(route)):
-            raise ValueError(f"no such index {route!r}")
-        settings = self._read_route_settings(route)
-        blocks = set(settings.get("blocks") or [])
-        blocks.add(block)
-        settings["blocks"] = sorted(blocks)
-        save_json(self._settings_path(route), settings)
-        return {"acknowledged": True, "blocks": settings["blocks"]}
+        m = self.store.update(route, lambda m: m.update(
+            blocks=sorted({*m["blocks"], block})))
+        return {"acknowledged": True, "blocks": m["blocks"]}
 
     def remove_block(self, route: str, block: str) -> dict:
-        settings = self._read_route_settings(route)
-        blocks = set(settings.get("blocks") or [])
-        blocks.discard(block)
-        settings["blocks"] = sorted(blocks)
-        save_json(self._settings_path(route), settings)
-        return {"acknowledged": True, "blocks": settings["blocks"]}
+        m = self.store.update(route, lambda m: m.update(
+            blocks=sorted(set(m["blocks"]) - {block})))
+        return {"acknowledged": True, "blocks": m["blocks"]}
 
     def close_index(self, route: str) -> dict:
         """``POST /<index>/_close`` analog: the index refuses reads AND
-        writes but keeps its data (a settings-file marker — no data
-        move, instant either way); :meth:`open_index` reverses. The
+        writes but keeps its data (the manifest's ``closed`` flag — no
+        data move, instant either way); :meth:`open_index` reverses. The
         closed state is its OWN flag, not an added write block, so
         opening never clears a write block the user set independently
         (the public _open does not touch index.blocks.write)."""
-        if not os.path.isdir(self._index_path(route)):
-            raise ValueError(f"no such index {route!r}")
-        settings = self._read_route_settings(route)
-        settings["closed"] = True
-        save_json(self._settings_path(route), settings)
+        self.store.update(route, lambda m: m.update(closed=True))
         return {"acknowledged": True}
 
     def open_index(self, route: str) -> dict:
-        if not os.path.isdir(self._index_path(route)):
-            # mirror close_index: opening a nonexistent index is a 404,
-            # not an implicit create — an unchecked makedirs would leave
-            # a phantom empty index visible to wildcard resolution
-            raise ValueError(f"no such index {route!r}")
-        settings = self._read_route_settings(route)
-        settings.pop("closed", None)
-        save_json(self._settings_path(route), settings)
+        self.store.update(route, lambda m: m.update(closed=False))
         return {"acknowledged": True}
 
-    def _check_closed(self, route: str, op: str) -> None:
-        if self._read_route_settings(route).get("closed"):
+    def _open_manifest(self, route: str, op: str) -> dict | None:
+        """The route's manifest (None = not materialized), or
+        ``PermissionError`` when the index is closed."""
+        m = self.store.manifest(route)
+        if m is not None and m["closed"]:
             raise PermissionError(
                 f"{op}: index {route!r} is closed "
                 "(the public index_closed_exception)"
             )
+        return m
 
     def _check_write_block(self, route: str, op: str) -> None:
         self._check_role("write", route)
-        settings = self._read_route_settings(route)
-        if settings.get("closed"):
-            raise PermissionError(
-                f"{op}: index {route!r} is closed "
-                "(the public index_closed_exception)"
-            )
-        blocks = set(settings.get("blocks") or [])
-        if blocks & {"write", "read_only"}:
+        blocks = (self._open_manifest(route, op) or {}).get("blocks", [])
+        if {"write", "read_only"} & set(blocks):
             raise PermissionError(
                 f"{op}: index {route!r} is write-blocked "
-                f"({sorted(blocks)}) — the public index_blocked error"
-            )
-
-    def _check_metadata_block(self, route: str, op: str) -> None:
-        blocks = set(self._read_route_settings(route).get("blocks") or [])
-        if "read_only" in blocks:
-            raise PermissionError(
-                f"{op}: index {route!r} is read_only"
+                f"({blocks}) — the public index_blocked error"
             )
 
     def _resize_index(self, route: str, new_n: int) -> dict:
-        self._check_metadata_block(route, "resize")
-        current = self.read_index(route)
-        if current is None:
-            raise ValueError(f"resize: index {route!r} is not materialized")
-        self._publish(
-            route,
-            current.withColumn("_bucket", _bucket_of(new_n)),
-            n_buckets=new_n,
-        )
+        with self.store.lock(route):
+            m = self.store.manifest(route)
+            if m is not None and "read_only" in m["blocks"]:
+                raise PermissionError(f"resize: index {route!r} is read_only")
+            if m is None:
+                raise ValueError(
+                    f"resize: index {route!r} is not materialized")
+            self.store.publish(
+                route,
+                self.store.frame(route, m)
+                .withColumn("_bucket", _bucket_of(new_n)),
+                n_buckets=new_n,
+            )
         return {"acknowledged": True, "n_buckets": new_n}
 
     def split_index(self, route: str, factor: int = 2) -> dict:
@@ -896,9 +721,9 @@ class FlightsEtlPipeline:
         one record of it, so subsequent merges place rows by it."""
         if factor < 2:
             raise ValueError("split factor must be >= 2")
-        return self._resize_index(
-            route, self._route_n_buckets(route) * int(factor)
-        )
+        with self.store.lock(route):  # the count cannot change meanwhile
+            return self._resize_index(
+                route, self._route_n_buckets(route) * int(factor))
 
     def shrink_index(self, route: str, factor: int = 2) -> dict:
         """``_shrink`` analog: divide the bucket count. ``pmod(hash,
@@ -907,13 +732,14 @@ class FlightsEtlPipeline:
         the union of ``factor`` old buckets' files until the next
         :meth:`compact` coalesces them. The public API's same
         constraint applies: the target must divide the source count."""
-        nb = self._route_n_buckets(route)
-        if factor < 2 or nb % int(factor) != 0:
-            raise ValueError(
-                f"shrink factor must be >= 2 and divide the current "
-                f"bucket count {nb}"
-            )
-        return self._resize_index(route, nb // int(factor))
+        with self.store.lock(route):  # the count cannot change meanwhile
+            nb = self._route_n_buckets(route)
+            if factor < 2 or nb % int(factor) != 0:
+                raise ValueError(
+                    f"shrink factor must be >= 2 and divide the current "
+                    f"bucket count {nb}"
+                )
+            return self._resize_index(route, nb // int(factor))
 
     def compact(
         self, route: str, files_per_bucket: int = 1, purge_tombstones: bool = False
@@ -924,24 +750,24 @@ class FlightsEtlPipeline:
         streaming accumulates small files (the classic streaming-sink
         pathology: at scale, scan cost becomes file-count-bound, not
         byte-bound). Compaction is the same copy-on-write publish the
-        MERGE uses (:meth:`_publish`) over every bucket: one coalesced
-        file set per bucket, same data, run off the hot path. The new
-        manifest version replaces every bucket's files and GC deletes
-        the old ones (a bucket a purge empties leaves disk); concurrent
-        readers can still race that GC. ``purge_tombstones`` drops
-        ``_deleted`` rows (retention boundary: a stale upsert older than
-        the purged tombstone CAN resurrect after the purge — run purges
-        only past the source's maximum re-delivery horizon)."""
-        current = self.read_index(route)
-        if current is None:
-            return
-        if purge_tombstones and "_deleted" in current.columns:
-            current = current.filter(~F.col("_deleted"))
-        nb = self._route_n_buckets(route)
-        self._publish(
-            route, current.repartition(nb * files_per_bucket, "_bucket"),
-            n_buckets=nb,
-        )
+        MERGE uses, over every bucket and under the route's lock: one
+        coalesced file set per bucket, same data, run off the hot path.
+        ``purge_tombstones`` drops ``_deleted`` rows (retention
+        boundary: a stale upsert older than the purged tombstone CAN
+        resurrect after the purge — run purges only past the source's
+        maximum re-delivery horizon)."""
+        with self.store.lock(route):
+            m = self.store.manifest(route)
+            current = self.store.frame(route, m) if m else None
+            if current is None:
+                return
+            if purge_tombstones and "_deleted" in current.columns:
+                current = current.filter(~F.col("_deleted"))
+            nb = self._route_n_buckets(route, m)
+            self.store.publish(
+                route, current.repartition(nb * files_per_bucket, "_bucket"),
+                n_buckets=nb,
+            )
 
     # -- query surface over the materialized indexes -------------------------
 
@@ -1034,8 +860,8 @@ class FlightsEtlPipeline:
         layout means only matching buckets' row groups survive
         min/max pruning). Missing ids are simply absent, as the public
         response marks them found=false."""
-        self._check_closed(route, "mget")
-        idx = self._read_view(route)
+        m = self._open_manifest(route, "mget")
+        idx = self._read_view(route, lambda n: self.store.frame(n, m))
         if idx is None:
             return None
         return idx.filter(F.col("_id").isin(list(ids)))
@@ -1119,8 +945,8 @@ class FlightsEtlPipeline:
         route is materialized and readable, yellow when some are not
         yet bootstrapped — the operational liveness answer, one cheap
         listing + counts."""
-        names = self._all_index_names()
-        live = [n for n in names if self.read_index(n) is not None]
+        live = [n for n in self.store.names()
+                if self.read_index(n) is not None]
         status = "green" if set(self.cfg.routes) <= set(live) else "yellow"
         return {
             "status": status,
@@ -1136,10 +962,9 @@ class FlightsEtlPipeline:
         count. One aggregate per live index (bounded by index count,
         never corpus-shaped) plus a filesystem listing."""
         docs = tombstones = size = 0
-        names = [n for n in self._all_index_names()
-                 if self.read_index(n) is not None]
-        for name in names:
-            df = self.read_index(name)
+        frames = {n: df for n in self.store.names()
+                  if (df := self.read_index(n)) is not None}
+        for name, df in frames.items():
             agg = df.agg(
                 F.count(F.lit(1)).alias("n"),
                 F.sum(
@@ -1149,14 +974,10 @@ class FlightsEtlPipeline:
             ).collect()[0]
             docs += int(agg["n"]) - int(agg["t"] or 0)
             tombstones += int(agg["t"] or 0)
-            p = self._index_path(name)
-            for root, _dirs, files in os.walk(p):
-                size += sum(
-                    os.path.getsize(os.path.join(root, fn)) for fn in files
-                )
+            size += self.store.size(name)
         return {
             "indices": {
-                "count": len(names),
+                "count": len(frames),
                 "docs": {"count": docs, "deleted": tombstones},
                 "store": {"size_in_bytes": size},
             },
@@ -1188,7 +1009,8 @@ class FlightsEtlPipeline:
         aggregate per index; sizes from the filesystem listing."""
         out = []
         for route in self.cfg.routes:
-            df = self.read_index(route)
+            m = self.store.manifest(route)
+            df = self.store.frame(route, m) if m else None
             if df is None:
                 out.append({"index": route, "status": "missing",
                             "docs": 0, "tombstones": 0, "buckets": 0,
@@ -1201,20 +1023,14 @@ class FlightsEtlPipeline:
                  else F.lit(0)).alias("tombs"),
                 F.countDistinct("_bucket").alias("buckets"),
             ).head()
-            path = self._index_path(route)
-            nbytes = sum(
-                os.path.getsize(os.path.join(dp, f))
-                for dp, _, fs in os.walk(path) for f in fs
-            )
-            settings = self._read_route_settings(route)
             out.append({
                 "index": route,
-                "status": "close" if settings.get("closed") else "open",
+                "status": "close" if m["closed"] else "open",
                 "docs": int(row["rows"]) - int(row["tombs"] or 0),
                 "tombstones": int(row["tombs"] or 0),
                 "buckets": int(row["buckets"]),
-                "bytes": nbytes,
-                "blocks": sorted(settings.get("blocks") or []),
+                "bytes": self.store.size(route),
+                "blocks": m["blocks"],
             })
         return out
 
@@ -1410,10 +1226,7 @@ class FlightsEtlPipeline:
         readable under its own name and in wildcard patterns. The new
         name is the old one with its ``-NNNNNN`` suffix incremented
         (or ``new_index`` explicitly, as in the public API)."""
-        import re as _re
-
-        aliases = self.get_aliases()
-        target = aliases.get(alias)
+        target = self.get_aliases().get(alias)
         if target is None or "," in target or "*" in target:
             raise ValueError(
                 f"rollover: alias {alias!r} must point to exactly one "
@@ -1428,30 +1241,26 @@ class FlightsEtlPipeline:
         if "max_docs" in conds:
             met["max_docs"] = cur.count() >= int(conds["max_docs"])
         if "max_size_bytes" in conds:
-            root = self._index_path(target)
-            size = sum(
-                os.path.getsize(os.path.join(dp, f))
-                for dp, _, fs in os.walk(root) for f in fs
-            )
-            met["max_size_bytes"] = size >= int(conds["max_size_bytes"])
+            met["max_size_bytes"] = (self.store.size(target)
+                                     >= int(conds["max_size_bytes"]))
         rolled = (not conds) or any(met.values())
         if not rolled:
             return {"rolled_over": False, "old_index": target,
                     "new_index": None, "conditions": met}
 
         if new_index is None:
-            m = _re.match(r"^(.*)-(\d+)$", target)
+            m = re.match(r"^(.*)-(\d+)$", target)
             if not m:
                 raise ValueError(
                     f"rollover: index {target!r} has no -NNNNNN suffix; "
                     "pass new_index explicitly (the public API's rule)"
                 )
             new_index = f"{m.group(1)}-{int(m.group(2)) + 1:0{len(m.group(2))}d}"
-        if os.path.isdir(self._index_path(new_index)):
+        if self.store.exists(new_index):
             raise ValueError(f"rollover: {new_index!r} already exists")
         # same schema, zero rows: a manifest with no files carries the
         # schema for readers
-        self._publish(
+        self.store.publish(
             new_index,
             self.spark.createDataFrame([], self.read_index(target).schema),
         )
@@ -1534,7 +1343,7 @@ class FlightsEtlPipeline:
         rolled = work.groupBy("window", *groups).agg(*aggs)
         n = rolled.count()
         if n:
-            self._publish(dest, rolled, replace=())
+            self.store.publish(dest, rolled, replace=())
         return n
 
     def delete_index(self, name: str) -> bool:
@@ -1547,11 +1356,7 @@ class FlightsEtlPipeline:
             raise ValueError(
                 f"delete_index: {name!r} is a configured CDC route"
             )
-        p = self._index_path(name)
-        if not os.path.isdir(p):
-            return False
-        shutil.rmtree(p)
-        return True
+        return self.store.delete(name)
 
     def apply_ism_policy(self, alias: str, policy: dict) -> dict:
         """One maintenance tick of an ISM-style lifecycle policy over a
@@ -1571,56 +1376,43 @@ class FlightsEtlPipeline:
         Returns what the tick did. Deleting a generation is the
         retention boundary: snapshots (:meth:`snapshot`) are the
         recovery path, exactly as with tombstone purges."""
-        import re as _re
-
         out: dict = {"rolled_over": False, "deleted": [], "merged": []}
         if policy.get("rollover") is not None:
             r = self.rollover(alias, policy["rollover"] or None)
             out["rolled_over"] = r["rolled_over"]
         fm = policy.get("force_merge")
         if fm is not None:
-            target = self.get_aliases().get(alias)
-            m = _re.match(r"^(.*)-(\d+)$", target or "")
-            if m:
-                prefix = m.group(1)
-                for idx in sorted(
-                    n for n in self._all_index_names()
-                    if _re.fullmatch(_re.escape(prefix) + r"-\d+", n)
-                ):
-                    if idx == target:
-                        continue  # never the write index
-                    self.forcemerge(
-                        idx,
-                        max_num_segments=int(
-                            (fm or {}).get("max_num_segments", 1)
-                        ),
-                    )
+            target, gens = self._generations(alias)
+            for idx in gens or []:
+                if idx != target:  # never the write index
+                    self.forcemerge(idx, max_num_segments=int(
+                        (fm or {}).get("max_num_segments", 1)))
                     out["merged"].append(idx)
         keep = policy.get("keep_generations")
         if keep is not None:
-            keep = int(keep)
-            if keep < 1:
+            if int(keep) < 1:
                 raise ValueError("keep_generations must be >= 1")
-            target = self.get_aliases().get(alias)
-            m = _re.match(r"^(.*)-(\d+)$", target or "")
-            if not m:
+            target, gens = self._generations(alias)
+            if gens is None:
                 raise ValueError(
                     f"ism: alias {alias!r} does not point at a "
                     f"generation-suffixed index (got {target!r})"
                 )
-            prefix = m.group(1)
-            gens = sorted(
-                n for n in self._all_index_names()
-                if _re.fullmatch(
-                    _re.escape(prefix) + r"-\d+", n
-                )
-            )
-            for idx in gens[:-keep]:
-                if idx == target:
-                    continue  # never the write index
-                if self.delete_index(idx):
+            for idx in gens[:-int(keep)]:
+                # never the write index
+                if idx != target and self.delete_index(idx):
                     out["deleted"].append(idx)
         return out
+
+    def _generations(self, alias: str) -> tuple[str | None, list | None]:
+        """The alias's write index and every generation of it, sorted
+        (None when the write index has no ``-NNNNNN`` suffix)."""
+        target = self.get_aliases().get(alias)
+        m = re.match(r"^(.*)-(\d+)$", target or "")
+        if not m:
+            return target, None
+        gen = re.escape(m.group(1)) + r"-\d+"
+        return target, [n for n in self.store.names() if re.fullmatch(gen, n)]
 
     def get_mapping(self, route: str) -> dict:
         """``GET /<index>/_mapping`` analog: the index's Spark schema
@@ -1657,7 +1449,7 @@ class FlightsEtlPipeline:
         so the filtered alias costs exactly what writing the filter
         into every query would. The filter is validated by compiling it
         at PUT time — a bad body fails here, not at first search."""
-        if alias in self.cfg.routes or os.path.isdir(self._index_path(alias)):
+        if alias in self.cfg.routes or self.store.exists(alias):
             raise ValueError(
                 f"alias {alias!r} collides with an existing index name"
             )
@@ -1801,8 +1593,6 @@ class FlightsEtlPipeline:
         public API does at script compile. String params are quoted
         (with '' escaping), so a param value can never splice syntax
         into the guarded expression."""
-        import re as _re
-
         def sub_one(text: str) -> str:
             def repl(m):
                 name = m.group(1)
@@ -1811,7 +1601,7 @@ class FlightsEtlPipeline:
                         f"stored script references unbound param {name!r}"
                     )
                 return self._sql_param_literal(params[name])
-            return _re.sub(r"\bparams\.([A-Za-z_][A-Za-z0-9_]*)", repl,
+            return re.sub(r"\bparams\.([A-Za-z_][A-Za-z0-9_]*)", repl,
                            text)
 
         if isinstance(source, dict):
@@ -1907,8 +1697,6 @@ class FlightsEtlPipeline:
         the settings a new index with this name would get — matching
         templates by (priority desc, name) with the winner's settings,
         plus the resolved bucket count after engine defaults."""
-        import fnmatch
-
         matches = sorted(
             (
                 (tpl["priority"], name, tpl)
@@ -1930,89 +1718,28 @@ class FlightsEtlPipeline:
                 "settings": dict(winner["settings"]),
                 "n_buckets": int(n)}
 
-    def _all_index_names(self) -> list[str]:
-        """Every live index table under index_root — configured routes
-        plus tables created by :meth:`reindex` — in sorted order."""
-        names = set(self.cfg.routes)
-        if os.path.isdir(self.cfg.index_root):
-            for entry in os.listdir(self.cfg.index_root):
-                # "_"-prefixed dirs (_metrics) and the DLQ tree are
-                # side-channel tables, not searchable indexes
-                if entry.startswith("_") or entry == "dlq":
-                    continue
-                if os.path.isdir(os.path.join(self.cfg.index_root, entry)):
-                    names.add(entry)
-        return sorted(names)
-
-    @staticmethod
-    def _sync_tree(src: str, dst: str) -> tuple[int, int]:
-        """One-way incremental mirror of ``src`` into ``dst``: files
-        whose (size, mtime_ns) already match are SKIPPED — ``copy2``
-        preserves both, so a bucket file untouched since the last
-        snapshot never re-copies; stale destination files (rewritten
-        part-file names, dropped buckets) are removed so the mirror
-        stays byte-identical to the source. Returns (copied, skipped).
-        """
-        src_files: dict[str, str] = {}
-        for root, _dirs, files in os.walk(src):
-            rel = os.path.relpath(root, src)
-            for fn in files:
-                key = os.path.normpath(os.path.join(rel, fn))
-                src_files[key] = os.path.join(root, fn)
-        if os.path.isdir(dst):
-            for root, _dirs, files in os.walk(dst, topdown=False):
-                rel = os.path.relpath(root, dst)
-                for fn in files:
-                    key = os.path.normpath(os.path.join(rel, fn))
-                    if key not in src_files:
-                        os.remove(os.path.join(root, fn))
-                if root != dst and not os.listdir(root):
-                    os.rmdir(root)
-        copied = skipped = 0
-        for key, spath in src_files.items():
-            dpath = os.path.join(dst, key)
-            if os.path.isfile(dpath):
-                ss, ds = os.stat(spath), os.stat(dpath)
-                if (ss.st_size == ds.st_size
-                        and ss.st_mtime_ns == ds.st_mtime_ns):
-                    skipped += 1
-                    continue
-            os.makedirs(os.path.dirname(dpath), exist_ok=True)
-            shutil.copy2(spath, dpath)
-            copied += 1
-        return copied, skipped
-
     def snapshot(self, snapshot_dir: str, pattern: str = "*") -> list[str]:
         """``_snapshot`` analog: mirror the matching index tables
-        (parquet files + bucket layout, byte-for-byte) into
+        (parquet files, bucket layout and manifest, byte-for-byte) into
         ``snapshot_dir`` — EVERY live table, including ones
         :meth:`reindex` created outside the configured routes.
 
         INCREMENTAL at the file level, like the public ``_snapshot``
-        API is incremental at the segment level: bucket files unchanged
-        since the previous snapshot into the same directory are skipped
-        (size + mtime match — ``copy2`` preserves both), only rewritten
-        buckets re-copy, and stale part-files from the previous
-        snapshot are removed so the result is indistinguishable from a
-        full copy. Per-index copied/skipped counts land in
-        ``self.last_snapshot_stats``. Returns the snapshotted names.
-        File-level sync — no Spark job, no re-encode; at real scale
-        this is the storage layer's conditional object copy."""
-        import fnmatch
+        API is incremental at the segment level
+        (:meth:`~.store.IndexStore.mirror`: only files rewritten since
+        the previous snapshot into the same directory re-copy). Per-index
+        copied/skipped counts land in ``self.last_snapshot_stats``.
+        Returns the snapshotted names. No Spark job, no re-encode."""
         done = []
         self.last_snapshot_stats: dict[str, dict[str, int]] = {}
-        for route in self._all_index_names():
-            if not fnmatch.fnmatchcase(route, pattern):
-                continue
-            src = self._index_path(route)
-            if not os.path.isdir(src):
-                continue
-            dst = os.path.join(snapshot_dir, route)
-            copied, skipped = self._sync_tree(src, dst)
-            self.last_snapshot_stats[route] = {
-                "copied": copied, "skipped": skipped,
-            }
-            done.append(route)
+        for route in self.store.names():
+            if (fnmatch.fnmatchcase(route, pattern)
+                    and self.store.exists(route)):
+                copied, skipped = self.store.mirror(
+                    route, os.path.join(snapshot_dir, route))
+                self.last_snapshot_stats[route] = {
+                    "copied": copied, "skipped": skipped}
+                done.append(route)
         # OpenSearch snapshots include cluster state by default: carry
         # every registry alongside the tables. An empty registry is the
         # same as none, so its stale snapshot copy is dropped —
@@ -2045,8 +1772,6 @@ class FlightsEtlPipeline:
         snapshot's aliases point at the old names; silently retargeting
         them is exactly the surprise the public API avoids by erroring
         on alias conflicts)."""
-        import fnmatch
-        import re as _re
         renaming = rename_pattern is not None
         if renaming and rename_replacement is None:
             raise ValueError(
@@ -2060,7 +1785,7 @@ class FlightsEtlPipeline:
             if not os.path.isdir(src):
                 continue
             dest_name = (
-                _re.sub(rename_pattern, rename_replacement, route)
+                re.sub(rename_pattern, rename_replacement, route)
                 if renaming else route
             )
             plan.append((src, dest_name))
@@ -2076,7 +1801,7 @@ class FlightsEtlPipeline:
                         f"restore target {dest_name!r} collides with "
                         "an alias"
                     )
-                if os.path.isdir(self._index_path(dest_name)):
+                if self.store.exists(dest_name):
                     # public _snapshot restore errors when the target
                     # index already exists — a renamed restore recovers
                     # BESIDE the live index, never over it
@@ -2084,13 +1809,9 @@ class FlightsEtlPipeline:
                         f"restore target {dest_name!r} collides with "
                         "an existing index"
                     )
-        done = []
         for src, dest_name in plan:
-            dst = self._index_path(dest_name)
-            if os.path.isdir(dst):
-                shutil.rmtree(dst)
-            shutil.copytree(src, dst)
-            done.append(dest_name)
+            self.store.copy_in(src, dest_name)
+        done = [dest_name for _src, dest_name in plan]
         if renaming:
             return done
         snap = MetaStore(snapshot_dir)
@@ -2217,7 +1938,6 @@ class FlightsEtlPipeline:
         return entry[1] if entry else None
 
     def _check_role(self, action: str, index: str) -> None:
-        import fnmatch
 
         if self._active_role is None:
             return
@@ -2242,8 +1962,6 @@ class FlightsEtlPipeline:
         """The active role's document-level-security query for this
         index, or None (no role / role has no dls / index outside the
         role's patterns — the grant check itself runs elsewhere)."""
-        import fnmatch
-
         spec = self._active_role_spec
         if not spec or "dls" not in spec:
             return None
@@ -2384,11 +2102,12 @@ class FlightsEtlPipeline:
             raise ValueError(
                 f"aggregations on masked fields {bad} are rejected")
 
-    def _resolve_pattern(self, pattern: str) -> tuple[list, list]:
+    def _resolve_pattern(self, pattern: str) -> tuple[dict, list]:
         """Which indexes an index pattern reads: the one resolver
         behind every read surface. Returns ``(names, filtered)``:
-        index names (first-seen order, no duplicates) and one
-        ``(filter, (names, filtered))`` per filtered alias, whose
+        index name → its manifest (first-seen order; None = not
+        materialized), which :meth:`_union` reads the index from, and
+        one ``(filter, (names, filtered))`` per filtered alias, whose
         filter applies to the union of its own resolution. Comma lists
         split; aliases, plain or filtered, expand recursively (a cycle
         raises ``ValueError``); a wildcard matches index names, skipping
@@ -2397,14 +2116,12 @@ class FlightsEtlPipeline:
         closed index raises ``PermissionError``, an unknown name
         ``ValueError`` (OpenSearch 404). A literal the role cannot read
         raises in :meth:`_read_view`. One alias-registry read and one
-        index listing per call."""
-        import fnmatch
-
+        index listing per call, one manifest read per index."""
         aliases = self.meta.read("aliases")
-        indexes = self._all_index_names()  # routes + reindex-created
+        indexes = self.store.names()  # routes + reindex-created
 
-        def expand(pattern: str, seen: tuple) -> tuple[list, list]:
-            names: list[str] = []
+        def expand(pattern: str, seen: tuple) -> tuple[dict, list]:
+            names: dict[str, dict | None] = {}
             filtered: list = []
             for p in (q.strip() for q in pattern.split(",")):
                 if not p:
@@ -2420,21 +2137,21 @@ class FlightsEtlPipeline:
                     if spec.get("filter") is not None:
                         filtered.append((spec["filter"], sub))
                         continue
-                    new, more = sub
-                    filtered += more
+                    for n, m in sub[0].items():
+                        names.setdefault(n, m)
+                    filtered += sub[1]
                 elif "*" in p or "?" in p:
-                    new = [
-                        r for r in indexes
-                        if fnmatch.fnmatchcase(r, p) and r not in names
-                        and not self._read_route_settings(r).get("closed")
-                        and self._role_allows("read", r)
-                    ]
+                    for r in indexes:
+                        if (fnmatch.fnmatchcase(r, p) and r not in names
+                                and self._role_allows("read", r)):
+                            m = self.store.manifest(r)
+                            if not (m and m["closed"]):
+                                names[r] = m
                 elif p in indexes:
-                    self._check_closed(p, "search")
-                    new = [p]
+                    if p not in names:
+                        names[p] = self._open_manifest(p, "search")
                 else:
                     raise ValueError(f"no such index: {p!r}")
-                names += [n for n in new if n not in names]
             return names, filtered
 
         return expand(pattern, ())
@@ -2447,8 +2164,9 @@ class FlightsEtlPipeline:
         from ..operators.search import compile_query
 
         names, filtered = resolved
+        get = read or (lambda n: self.store.frame(n, names[n]))
         frames = [df.withColumn("_index", F.lit(n)) for n in names
-                  if (df := self._read_view(n, read)) is not None]
+                  if (df := self._read_view(n, get)) is not None]
         frames += [df.filter(compile_query(flt)) for flt, sub in filtered
                    if (df := self._union(sub, read)) is not None]
         out: DataFrame | None = None
@@ -2675,12 +2393,11 @@ class FlightsEtlPipeline:
         read-only too) and the script sandbox applies: JVM/UDF escape
         hatches (``reflect``/``java_method``/...) are rejected exactly
         as on the Painless surfaces."""
-        import re as _re
 
         from ..functions.scripts import validate_script
 
         q = _rewrite_sql_fulltext(query.strip().rstrip(";"))
-        head = _re.split(r"\s", q, 1)[0].lower()
+        head = re.split(r"\s", q, 1)[0].lower()
         if head not in ("select", "with", "show", "describe", "desc",
                         "explain"):
             raise ValueError(
@@ -2709,15 +2426,15 @@ class FlightsEtlPipeline:
                 view.createOrReplaceTempView(view_name)
 
         registered = False
-        for name in self._all_index_names():
+        for name in self.store.names():
             # a closed index is unreadable on EVERY surface, and under a
             # role only readable tables exist (the security plugin lists
             # only permitted tables): their views are dropped, so no
             # earlier call's registration leaks through
             view = None
-            if (not self._read_route_settings(name).get("closed")
-                    and self._role_allows("read", name)):
-                view = self._read_view(name)
+            m = self.store.manifest(name)
+            if not (m and m["closed"]) and self._role_allows("read", name):
+                view = self._read_view(name, lambda n: self.store.frame(n, m))
             register(re.sub(r"[^A-Za-z0-9_]", "_", f"{name}_index"), view)
             if name in self.cfg.routes:
                 register(name, view)
@@ -2851,7 +2568,7 @@ class FlightsEtlPipeline:
         if fired:
             alerts = self.spark.createDataFrame(
                 [Row(**f) for f in fired])
-            self._publish(".alerts", alerts, replace=())
+            self.store.publish(".alerts", alerts, replace=())
         return fired + errors
 
     def get_alerts(self) -> DataFrame | None:
@@ -3107,24 +2824,21 @@ class FlightsEtlPipeline:
             raise ValueError(
                 f"open_pit: {pattern!r} names a filtered alias, which a "
                 "point-in-time view cannot freeze")
-        names = [n for n in names if os.path.isdir(self._index_path(n))]
+        names = [n for n in names if self.store.exists(n)]
         if not names:
             raise ValueError(f"pattern {pattern!r} matches no index")
         pit_id = uuid.uuid4().hex
+        pit = self.store.child(os.path.join("_pits", pit_id))
         for name in names:
-            self._sync_tree(self._index_path(name),
-                            os.path.join(self._pit_dir(pit_id), name))
+            self.store.mirror(name, pit.path(name))
         return pit_id
 
-    def _pit_dir(self, pit_id: str) -> str:
-        return os.path.join(self.cfg.index_root, "_pits", pit_id)
-
-    def _pit_tables(self, pit_id: str) -> list[str]:
-        pit_dir = self._pit_dir(pit_id)
-        if not os.path.isdir(pit_dir):
+    def _pit(self, pit_id: str) -> IndexStore:
+        """The store of a PIT's frozen indexes."""
+        name = os.path.join("_pits", pit_id)
+        if not self.store.exists(name):
             raise ValueError(f"no such pit {pit_id!r}")
-        return sorted(n for n in os.listdir(pit_dir) if not n.startswith("_")
-                      and os.path.isdir(os.path.join(pit_dir, n)))
+        return self.store.child(name)
 
     def pit_view(self, pit_id: str) -> DataFrame | None:
         """The frozen multi-index view of a PIT: the union and
@@ -3132,9 +2846,8 @@ class FlightsEtlPipeline:
         tombstone drop, masking, ``_index``) over the frozen tables.
         Only the data is frozen: role and masking apply as they are
         at search time."""
-        pit_dir = self._pit_dir(pit_id)
-        return self._union((self._pit_tables(pit_id), []), lambda n: (
-            self._resolve(os.path.join(pit_dir, n))))
+        pit = self._pit(pit_id)
+        return self._union((pit.names(), []), pit.frame)
 
     def search_pit(self, pit_id: str, body: dict | None = None) -> dict:
         """``_search`` with a ``pit`` id: the DSL body runs against the
@@ -3147,18 +2860,12 @@ class FlightsEtlPipeline:
         if view is None:
             return {"hits": None, "aggregations": {}}
         body = body or {}
-        self._reject_masked_aggs(body, lambda: self._pit_tables(pit_id))
+        self._reject_masked_aggs(body, lambda: self._pit(pit_id).names())
         return execute_search(view, body)
 
     def close_pit(self, pit_id: str) -> bool:
         """``DELETE /_pit`` analog: drop the frozen copy."""
-        pit_dir = self._pit_dir(pit_id)
-        if not os.path.isdir(pit_dir):
-            return False
-        shutil.rmtree(pit_dir)
-        for key in [k for k in self._views if k.startswith(pit_dir + os.sep)]:
-            del self._views[key]
-        return True
+        return self.store.delete(os.path.join("_pits", pit_id))
 
     # -- data streams --------------------------------------------------------
 
@@ -3218,7 +2925,7 @@ class FlightsEtlPipeline:
                     f"data stream append schema drift: {sorted(missing)}"
                 )
             df = df.select(*existing.columns)
-        self._publish(backing, df, replace=())
+        self.store.publish(backing, df, replace=())
         self.meta.put("data_streams", name,
                       {**meta, "next_seq": base + len(docs)})
         return len(docs)
@@ -3240,7 +2947,7 @@ class FlightsEtlPipeline:
         out = {}
         for n, meta in reg.items():
             backing = [
-                i for i in self._all_index_names()
+                i for i in self.store.names()
                 if i.startswith(f".ds-{n}-")
             ]
             out[n] = {"generation": meta["generation"],
@@ -3254,9 +2961,7 @@ class FlightsEtlPipeline:
         if name not in self.meta.read("data_streams"):
             return False
         for idx in self.get_data_stream(name)[name]["indices"]:
-            p = self._index_path(idx)
-            if os.path.isdir(p):
-                shutil.rmtree(p)
+            self.store.delete(idx)
         return self.meta.pop("data_streams", name)
 
     def search_data_stream(self, name: str, body: dict | None = None) -> dict:

@@ -1,0 +1,286 @@
+"""The index store: the one place that knows how an index sits on disk.
+
+``<root>/<name>/_manifest.json`` is the index's single commit point,
+like Lucene's ``segments_N``: ``version``, ``files`` (the parquet files
+under ``<root>/<name>/_bucket=<b>/``, per bucket), ``schema``,
+``n_buckets`` (null = the pipeline default), ``blocks`` and ``closed``.
+Every change, a data publish or a settings update, replaces version N
+with N+1 atomically under the index's lock, so two writers in one
+process never lose each other's update (other processes are not
+serialized). Readers take no lock: a read opens the manifest once.
+
+Older layouts are adopted once, on first read: a directory of parquet
+files with no manifest is listed into version 1, and a manifest without
+the settings fields folds in the ``_settings.json`` beside it (where
+``blocks`` and ``closed`` used to live), which is then deleted.
+"""
+
+from __future__ import annotations
+
+import contextlib
+import json
+import os
+import shutil
+import threading
+import uuid
+
+from pyspark.sql import DataFrame
+from pyspark.sql import types as T
+
+from .meta import load_json, save_json
+
+MANIFEST = "_manifest.json"  # "_" keeps it invisible to parquet readers
+OLD_SETTINGS = "_settings.json"  # read only by the one-time adoption
+
+_LOCKS: dict[str, threading.RLock] = {}
+_LOCKS_GUARD = threading.Lock()
+
+
+def _list_files(root: str) -> dict[str, list[str]]:
+    """Visible data files under ``root`` (the parquet reader's
+    hidden-path rule), root-relative, grouped by ``_bucket`` value
+    ("" for files outside any bucket dir)."""
+    out: dict[str, list[str]] = {}
+    for d, dirs, fs in os.walk(root):
+        dirs[:] = [x for x in dirs
+                   if not x.startswith(("_", ".")) or "=" in x]
+        rel = os.path.relpath(d, root)
+        bucket = "" if rel == "." else rel.split("=", 1)[1]
+        for fn in sorted(fs):
+            if not fn.startswith(("_", ".")):
+                out.setdefault(bucket, []).append(
+                    fn if rel == "." else os.path.join(rel, fn))
+    return out
+
+
+def _walk(root: str) -> dict[str, str]:
+    return {os.path.relpath(os.path.join(d, f), root): os.path.join(d, f)
+            for d, _, fs in os.walk(root) for f in fs}
+
+
+class IndexStore:
+    """The indexes under one root. ``routes`` are names that exist
+    before their first write (the pipeline's configured routes)."""
+
+    def __init__(self, spark, root: str, routes=(), views=None):
+        self.spark = spark
+        self.root = root
+        self.routes = tuple(routes)
+        # resolved frames: index dir → (files + schema, frame)
+        self._views: dict[str, tuple[str, DataFrame]] = (
+            {} if views is None else views)
+
+    def path(self, name: str) -> str:
+        return os.path.join(self.root, name)
+
+    def child(self, name: str) -> IndexStore:
+        """The store rooted at ``name`` (a PIT's frozen indexes),
+        sharing this store's frame cache."""
+        return IndexStore(self.spark, self.path(name), views=self._views)
+
+    def exists(self, name: str) -> bool:
+        return os.path.isdir(self.path(name))
+
+    def names(self) -> list[str]:
+        """Every index, sorted: the configured routes plus each
+        directory under the root except "_"-prefixed side channels
+        (``_metrics``, ``_pits``, ``_staging``) and the DLQ tree."""
+        names = set(self.routes)
+        if os.path.isdir(self.root):
+            names.update(e for e in os.listdir(self.root)
+                         if not e.startswith("_") and e != "dlq"
+                         and os.path.isdir(self.path(e)))
+        return sorted(names)
+
+    def lock(self, name: str) -> threading.RLock:
+        """The index's write lock: one per absolute path, so every store
+        (and pipeline) in the process shares it."""
+        with _LOCKS_GUARD:
+            return _LOCKS.setdefault(os.path.abspath(self.path(name)),
+                                     threading.RLock())
+
+    def manifest(self, name: str) -> dict | None:
+        """The index's manifest, or None when it was never materialized
+        (no manifest and no data files). A current manifest costs one
+        open; an older layout is adopted first, once."""
+        root = self.path(name)
+        m = load_json(os.path.join(root, MANIFEST))
+        if "closed" in m:
+            return m
+        if not m and not _list_files(root):
+            return None
+        with self.lock(name):
+            m = load_json(os.path.join(root, MANIFEST))  # a racer won?
+            if "closed" in m:
+                return m
+            if not m:
+                schema = self.spark.read.parquet(root).schema.jsonValue()
+                m = {"version": 1, "files": _list_files(root),
+                     "n_buckets": None, "schema": schema}
+            old = load_json(os.path.join(root, OLD_SETTINGS))
+            m["blocks"] = sorted(old.get("blocks") or [])
+            m["closed"] = bool(old.get("closed"))
+            save_json(os.path.join(root, MANIFEST), m)
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(os.path.join(root, OLD_SETTINGS))
+            return m
+
+    def frame(self, name: str, m: dict | None = None) -> DataFrame | None:
+        """The index's rows as ``read.schema(s).parquet(*files)`` over
+        manifest ``m`` (read now when not given), or None when not
+        materialized. Built once per file set and schema, so a repeat
+        read of an unchanged index launches no Spark job."""
+        m = m or self.manifest(name)
+        if m is None:
+            return None
+        root = self.path(name)
+        key = json.dumps([m["files"], m["schema"]])
+        hit = self._views.get(root)
+        if hit is not None and hit[0] == key:
+            return hit[1]
+        schema = T.StructType.fromJson(m["schema"])
+        files = [os.path.join(root, f)
+                 for fs in m["files"].values() for f in fs]
+        df = (
+            self.spark.read.schema(schema).option("basePath", root)
+            .parquet(*files)
+            if files else self.spark.createDataFrame([], schema)
+        )
+        self._views[root] = (key, df)
+        return df
+
+    def size(self, name: str) -> int:
+        """Bytes on disk under the index's directory, every file counted."""
+        return sum(map(os.path.getsize, _walk(self.path(name)).values()))
+
+    def publish(self, name: str, df: DataFrame, replace=None,
+                n_buckets: int | None = None) -> None:
+        """Copy-on-write write of ``df`` into the index, the one write
+        path of every index table: Spark writes the rows to a private
+        staging dir (partitioned by ``_bucket`` when the frame has one),
+        then :meth:`commit` publishes them."""
+        stage = os.path.join(self.root, "_staging", uuid.uuid4().hex)
+        writer = df.write
+        if "_bucket" in df.columns:
+            writer = writer.partitionBy("_bucket")
+        writer.parquet(stage)
+        self.commit(name, stage, df.schema, replace, n_buckets)
+
+    def commit(self, name: str, stage: str, schema: T.StructType,
+               replace=None, n_buckets: int | None = None) -> None:
+        """Publish the part files staged under ``stage`` (moved in under
+        their unique names, so no file a reader holds is overwritten) as
+        manifest version N+1, under the index's lock. Buckets in
+        ``replace`` (``None`` = all, empty = a pure append) hold exactly
+        the new files, other buckets keep N's plus any new ones; the
+        schema is the union of N's and ``schema``; ``n_buckets``
+        defaults to N's; ``blocks`` and ``closed`` carry over. GC then
+        deletes the files only N referenced and any emptied bucket dir —
+        a reader still scanning N can race it (no version pinning)."""
+        root = self.path(name)
+        with self.lock(name):
+            prev = self.manifest(name) or {
+                "version": 0, "files": {}, "schema": None, "n_buckets": None,
+                "blocks": [], "closed": False}
+            new = _list_files(stage)
+            for f in (f for fs in new.values() for f in fs):
+                os.makedirs(os.path.dirname(os.path.join(root, f)),
+                            exist_ok=True)
+                os.rename(os.path.join(stage, f), os.path.join(root, f))
+            shutil.rmtree(stage)
+
+            old = prev["files"]
+            gone = ({str(b) for b in replace} if replace is not None
+                    else set(old))
+            files = {b: fs for b, fs in old.items() if b not in gone}
+            for b, fs in new.items():
+                files[b] = files.get(b, []) + fs
+            # union schema, the written frame's types winning; the bucket
+            # partition column last, typed as partition inference types it
+            cols = {f.name: f for f in T.StructType.fromJson(
+                prev["schema"] or {"fields": []})}
+            cols.update((f.name, f) for f in schema)
+            bucketed = cols.pop("_bucket", None) is not None
+            fields = list(cols.values())
+            if bucketed:
+                fields.append(T.StructField("_bucket", T.IntegerType()))
+            os.makedirs(root, exist_ok=True)  # a write of no rows has no files
+            save_json(os.path.join(root, MANIFEST), {
+                **prev,
+                "version": prev["version"] + 1,
+                "files": dict(sorted(files.items())),
+                "n_buckets": n_buckets or prev["n_buckets"],
+                "schema": T.StructType(fields).jsonValue(),
+            })
+
+            live = {f for fs in files.values() for f in fs}
+            for f in sorted({f for fs in old.values() for f in fs} - live):
+                d, fn = os.path.split(os.path.join(root, f))
+                for p in (os.path.join(d, fn), os.path.join(d, f".{fn}.crc")):
+                    with contextlib.suppress(FileNotFoundError):
+                        os.remove(p)
+                if d != root:  # rmdir only succeeds once the bucket is empty
+                    with contextlib.suppress(OSError):
+                        os.rmdir(d)
+
+    def update(self, name: str, change) -> dict:
+        """Publish and return the next manifest version with ``change``
+        (a function editing the manifest dict in place, e.g. its
+        ``blocks``) applied, under the index's lock; the file set is
+        untouched. ``ValueError`` when the index is not materialized."""
+        with self.lock(name):
+            m = self.manifest(name)
+            if m is None:
+                raise ValueError(f"no such index {name!r}")
+            change(m)
+            m["version"] += 1
+            save_json(os.path.join(self.path(name), MANIFEST), m)
+            return m
+
+    def delete(self, name: str) -> bool:
+        """Remove the index's directory (False when there is none) and
+        every cached frame under it."""
+        path = self.path(name)
+        with self.lock(name):
+            if not os.path.isdir(path):
+                return False
+            shutil.rmtree(path)
+        for key in [k for k in list(self._views)
+                    if (k + os.sep).startswith(path + os.sep)]:
+            self._views.pop(key, None)
+        return True
+
+    def mirror(self, name: str, dst: str) -> tuple[int, int]:
+        """Mirror the index's directory into ``dst`` (a snapshot's or a
+        PIT's copy), byte-identical: stale files there are removed, and
+        files whose (size, mtime_ns) match — ``copy2`` keeps both — are
+        not re-copied. Returns (copied, skipped)."""
+        src = _walk(self.path(name))
+        for d, _, fs in os.walk(dst, topdown=False):
+            for f in fs:
+                if os.path.relpath(os.path.join(d, f), dst) not in src:
+                    os.remove(os.path.join(d, f))
+            if d != dst and not os.listdir(d):
+                os.rmdir(d)
+        copied = skipped = 0
+        for rel, spath in src.items():
+            dpath = os.path.join(dst, rel)
+            if os.path.isfile(dpath):
+                ss, ds = os.stat(spath), os.stat(dpath)
+                if (ss.st_size, ss.st_mtime_ns) == (ds.st_size,
+                                                    ds.st_mtime_ns):
+                    skipped += 1
+                    continue
+            os.makedirs(os.path.dirname(dpath), exist_ok=True)
+            shutil.copy2(spath, dpath)
+            copied += 1
+        return copied, skipped
+
+    def copy_in(self, src: str, name: str) -> None:
+        """Replace the index with a copy of the index directory ``src``
+        (a snapshot's)."""
+        dst = self.path(name)
+        with self.lock(name):
+            if os.path.isdir(dst):
+                shutil.rmtree(dst)
+            shutil.copytree(src, dst)

@@ -101,13 +101,13 @@ def test_bootstrap_job_budget_and_one_shuffle_per_route_write(
     assert 0 < len(jobs) <= BOOTSTRAP_JOB_BUDGET
 
     plans = []
-    publish = pipeline._publish
+    publish = pipeline.store.publish
 
     def spy(route, df, *args, **kwargs):
         plans.append(df._jdf.queryExecution().executedPlan().toString())
         return publish(route, df, *args, **kwargs)
 
-    monkeypatch.setattr(pipeline, "_publish", spy)
+    monkeypatch.setattr(pipeline.store, "publish", spy)
     tail = [e for e in gen_cdc_events() if e["seq"] > 40]
     pipeline._apply_batch(
         pipeline.transform_cdc(spark.createDataFrame(tail, CDC_SCHEMA)), 0)

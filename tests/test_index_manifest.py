@@ -13,10 +13,10 @@ from pyspark.sql import functions as F
 
 from opensearch_dynamodb_etl_cdk_spark.sources.fixture_gen import gen_corpus
 from opensearch_dynamodb_etl_cdk_spark.streaming.pipeline import (
-    MANIFEST,
     FlightsEtlPipeline,
     PipelineConfig,
 )
+from opensearch_dynamodb_etl_cdk_spark.streaming.store import MANIFEST
 
 
 @pytest.fixture()
@@ -31,14 +31,14 @@ def pipe(spark, tmp_path):
 
 
 def _manifest(p, route):
-    with open(os.path.join(p._index_path(route), MANIFEST)) as f:
+    with open(os.path.join(p.store.path(route), MANIFEST)) as f:
         return json.load(f)
 
 
 def _assert_consistent(p, route):
     """The manifest's file set is exactly the parquet files on disk, and
     the manifest-resolved frame equals a plain directory read."""
-    root = p._index_path(route)
+    root = p.store.path(route)
     listed = {f for fs in _manifest(p, route)["files"].values() for f in fs}
     on_disk = {
         os.path.relpath(os.path.join(d, f), root)
@@ -87,7 +87,7 @@ def test_manifest_matches_disk_across_writes(spark, pipe, tmp_path):
     pipe.bulk("fare", [{"delete": {"_id": i}} for i in ids])
     m = _manifest(pipe, "fare")
     assert m["version"] == v + 1 and "0" not in m["files"]
-    assert not os.path.exists(os.path.join(pipe._index_path("fare"),
+    assert not os.path.exists(os.path.join(pipe.store.path("fare"),
                                            "_bucket=0"))
     _assert_consistent(pipe, "fare")
 
@@ -113,7 +113,7 @@ def test_manifest_matches_disk_across_writes(spark, pipe, tmp_path):
 
 def test_manifestless_directory_is_adopted_once(spark, pipe, tmp_path):
     legacy = str(tmp_path / "i" / "legacy")
-    shutil.copytree(pipe._index_path("flight"), legacy)
+    shutil.copytree(pipe.store.path("flight"), legacy)
     os.remove(os.path.join(legacy, MANIFEST))
     adopted = pipe.read_index("legacy")
     assert _manifest(pipe, "legacy")["version"] == 1

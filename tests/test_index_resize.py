@@ -36,7 +36,7 @@ def _snapshot(p, route):
 
 
 def _bucket_dirs(p, route):
-    root = p._index_path(route)
+    root = p.store.path(route)
     return sorted(
         int(d.split("=")[1]) for d in os.listdir(root)
         if d.startswith("_bucket=")

@@ -15,6 +15,7 @@ from opensearch_dynamodb_etl_cdk_spark.streaming.pipeline import (
     FlightsEtlPipeline,
     PipelineConfig,
 )
+from opensearch_dynamodb_etl_cdk_spark.streaming.store import OLD_SETTINGS
 
 
 def _pipeline(spark, tmp_path, **kw):
@@ -76,9 +77,10 @@ def test_bucket_count_lives_in_the_manifest(spark, tmp_path):
     p.add_block("fare", "write")
     p.remove_block("fare", "write")
     assert p.split_index("fare", 2)["n_buckets"] == 8
-    settings = os.path.join(p._index_path("fare"), "_settings.json")
-    with open(settings) as f:
-        assert "n_buckets" not in json.load(f)
+    # blocks and the bucket count share the route's one manifest
+    m = p.store.manifest("fare")
+    assert m["n_buckets"] == 8 and m["blocks"] == []
+    assert not os.path.exists(os.path.join(p.store.path("fare"), OLD_SETTINGS))
     assert p._route_n_buckets("fare") == 8
 
     p.bulk("fare", [{"index": {"_id": f"new-{i}", "doc": {"pk": "NEW"}}}
@@ -103,7 +105,7 @@ def test_bucket_count_lives_in_the_manifest(spark, tmp_path):
     q.bootstrap(fares)
     assert q._route_n_buckets("fare") == 2
     assert q.read_index("fare").select("_bucket").distinct().count() <= 2
-    assert not os.path.exists(q._index_path("flight"))
+    assert not os.path.exists(q.store.path("flight"))
     assert q.read_index("flight") is None
 
 
