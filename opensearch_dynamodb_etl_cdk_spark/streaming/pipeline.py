@@ -13,7 +13,7 @@ Shape:
                  · route predicates (operators/routing.py)
                  · per-key latest (operators/upsert.py)
           foreachBatch: MERGE into parquet index table per route
-          failures → dlq/<route>/ parquet side-output (W3)
+          failures → dlq/<route> store table, re-driven by replay_dlq (W3)
 
 Delivery semantics: Structured Streaming checkpointing gives
 at-least-once re-delivery of a failed micro-batch; the MERGE is
@@ -47,7 +47,6 @@ import fnmatch
 import json
 import os
 import re
-import shutil
 import uuid
 from dataclasses import dataclass, field
 
@@ -306,7 +305,8 @@ class FlightsEtlPipeline:
         the same ``index_root`` shows on the next read."""
         return self.store.frame(route)
 
-    def _merge_route(self, route_df: DataFrame, route: str) -> None:
+    def _merge_route(self, route_df: DataFrame, route: str,
+                     admin: bool = False) -> None:
         """MERGE one route's slice of a micro-batch into its index table.
 
         Only the hash buckets present in the batch are rewritten — merge
@@ -315,7 +315,10 @@ class FlightsEtlPipeline:
         so a bucket whose deletes wiped every doc drops out of the
         manifest and off disk. The whole read-merge-publish holds the
         route's lock: a concurrent writer (a client bulk racing a
-        micro-batch) waits instead of publishing over it.
+        micro-batch) waits instead of publishing over it. An ``admin``
+        batch's ``_seq`` values are offsets from the next admin sequence
+        (:meth:`_next_synth_seq`), added inside that lock hold, so two
+        admin writes to one route never share a sequence.
 
         Spark work per route: one global ``collect_set`` brings the
         touched buckets (at most ``n_buckets`` values) to the driver,
@@ -327,6 +330,10 @@ class FlightsEtlPipeline:
         """
         with self.store.lock(route):
             m = self.store.manifest(route)
+            current = self.store.frame(route, m)
+            if admin:
+                route_df = route_df.withColumn(
+                    "_seq", F.col("_seq") + self._next_synth_seq(current))
             # the route's LIVE bucket count governs placement — a resized
             # index (_split/_shrink) differs from cfg.n_buckets — so
             # incoming rows are bucketed here, at write time
@@ -337,7 +344,6 @@ class FlightsEtlPipeline:
                 touched = batch.agg(F.collect_set("_bucket")).first()[0]
                 if not touched:
                     return
-                current = self.store.frame(route, m)
                 if current is not None:
                     current = current.filter(F.col("_bucket").isin(touched))
                 merged = apply_cdc_batch(
@@ -349,20 +355,20 @@ class FlightsEtlPipeline:
                 batch.unpersist()
 
     def _write_dlq(self, failed: DataFrame, route: str, error: str) -> None:
-        (
+        """Park ``failed`` with its ``_error`` and ``_route`` as an append
+        to the store table ``dlq/<route>`` (the next manifest version)."""
+        self.store.publish(
+            f"dlq/{route}",
             failed.withColumn("_error", F.lit(error))
-            .withColumn("_route", F.lit(route))
-            .write.mode("append")
-            .parquet(os.path.join(self.cfg.index_root, "dlq", route))
-        )
+            .withColumn("_route", F.lit(route)),
+            replace=())
 
     def replay_dlq(self, route: str, epoch_id: int = -2) -> int:
         """Recover dead-lettered writes — the reason the reference keeps
         a DLQ at all (custom_resource.py:358-363,378-383 parks failed
         bulk payloads so an operator can re-drive them once the sink
-        heals): re-read the route's DLQ slices and push them through
-        the SAME ``sink.write_route`` as live traffic. Safe to run any
-        time:
+        heals): re-read the route's DLQ table and push it through the
+        SAME ``sink.write_route`` as live traffic. Safe to run any time:
 
         - idempotent effect: actions are keyed by ``_id`` and merged
           LWW by ``_seq``, so replayed rows already superseded by newer
@@ -370,13 +376,13 @@ class FlightsEtlPipeline:
           re-delivers the same terminal actions (at-least-once
           delivery, exactly-once effect — the parquet MERGE and the
           bulk sinks share the rule);
-        - snapshot-exact clearing: the slice FILES present when the
-          replay starts are enumerated up front, read explicitly, and
-          deleted individually only AFTER ``write_route`` returns —
-          slices parked by a still-failing concurrent stream while the
-          replay runs are neither replayed nor deleted, and a replay
-          that fails leaves every slice parked for the next attempt
-          (and raises);
+        - snapshot-exact clearing: the replay reads ONE manifest version
+          of ``dlq/<route>`` and, only AFTER ``write_route`` returns,
+          drops exactly that version's files
+          (:meth:`~.store.IndexStore.drop`) — slices parked by a
+          still-failing concurrent stream while the replay runs are
+          neither replayed nor dropped, and a replay that fails leaves
+          every slice parked for the next attempt (and raises);
         - a metrics row (epoch ``epoch_id``, default -2) is APPENDED, as
           its own uniquely named file, so consecutive replays of
           different routes (or repeated replays of one route after
@@ -384,74 +390,22 @@ class FlightsEtlPipeline:
           shared replay epoch's file would erase the earlier one.
 
         Returns the number of replayed rows (0 = empty DLQ, a no-op).
-        Only a genuinely absent DLQ directory is treated as "nothing
-        parked"; read failures (corrupt slices, permissions) propagate
-        — silently skipping recovery must not look like a clean no-op.
+        Read failures (corrupt slices, permissions) propagate — silently
+        skipping recovery must not look like a clean no-op.
         """
-        path = os.path.join(self.cfg.index_root, "dlq", route)
-        jvm = self.spark._jvm
-        conf = self.spark._jsc.hadoopConfiguration()
-        hpath = jvm.org.apache.hadoop.fs.Path
-        p = hpath(path)
-        fs = p.getFileSystem(conf)
-        if not fs.exists(p):
-            return 0  # nothing ever parked for this route
-        # snapshot the slice listing FIRST (Hadoop FS API — portable
-        # across local/HDFS/object stores); everything appended after
-        # this point stays parked for the next replay
-        it = fs.listFiles(p, True)
-        files = []
-        # qualify the base the same way listFiles qualifies its results:
-        # a RELATIVE index_root would otherwise yield a relative
-        # base_uri that never prefix-matches the fully-qualified listed
-        # paths, making every hidden ANCESTOR of the cwd (e.g. a
-        # /root/.cache segment) look like a hidden DLQ segment and
-        # silently skipping the whole slice — dead letters parked
-        # forever while replay reports a clean 0.
-        base_uri = fs.makeQualified(p).toUri().getPath()
-        while it.hasNext():
-            name_path = it.next().getPath()
-            # exclude hidden SEGMENTS anywhere under the DLQ dir, not
-            # just hidden basenames: a concurrent writer's in-flight
-            # attempt files live under _temporary/.../part-*.parquet —
-            # visible basename, uncommitted data. Reading them would
-            # replay torn/duplicate rows and deleting them would break
-            # the writer's task commit (parquet readers skip hidden
-            # path segments for the same reason).
-            rel = name_path.toUri().getPath()
-            if not rel.startswith(base_uri):
-                raise RuntimeError(
-                    f"replay_dlq: listed file {rel!r} is not under the "
-                    f"qualified DLQ base {base_uri!r}; refusing to "
-                    "hidden-filter against an ambiguous absolute path"
-                )
-            rel = rel[len(base_uri):]
-            if any(seg and seg[0] in "_." for seg in rel.split("/")):
-                continue
-            files.append(name_path.toString())
-        if not files:
-            return 0
-        dead = self.spark.read.parquet(*files)
-        # break lineage off the files about to be deleted, so clearing
+        name = f"dlq/{route}"
+        m = self.store.manifest(name)
+        if m is None:
+            return 0  # nothing parked for this route
+        # break lineage off the files about to be dropped, so clearing
         # the DLQ never races a lazy re-read of its own input
-        dead = dead.drop("_error", "_route").localCheckpoint(eager=True)
+        dead = self.store.frame(name, m).drop(
+            "_error", "_route").localCheckpoint(eager=True)
         n = dead.count()
         if n:
             self.sink.write_route(self, route, dead, epoch_id)
             n_delete = dead.filter(F.col("_action") == "delete").count()
-        # clear EXACTLY the replayed slice files
-        for f in files:
-            fs.delete(hpath(f), False)
-        # best-effort tidy: drop writer markers and the dir itself only
-        # if nothing new was parked meanwhile (non-recursive delete
-        # refuses a non-empty dir, so a concurrent append survives)
-        try:
-            for st in fs.listStatus(p):
-                if st.getPath().getName().startswith(("_", ".")):
-                    fs.delete(st.getPath(), False)
-            fs.delete(p, False)
-        except Exception:
-            pass
+        self.store.drop(name, [f for fs in m["files"].values() for f in fs])
         if n:
             self._put_metrics(
                 epoch_id, [(route, n, n, n, n_delete, 0)], append=True)
@@ -1061,6 +1015,62 @@ class FlightsEtlPipeline:
             if col_name not in cols:
                 raise ValueError(f"{op}: no field {col_name!r}")
 
+    def _script_map(self, script, cols, op: str, what: str) -> dict:
+        """A write ``script`` as a column → expression map over ``cols``.
+        A public script envelope (stored-script reference, or inline
+        source + params) resolves through :meth:`resolve_script`; the
+        sniff is column-aware — a bare map whose keys ALL name real data
+        columns (an index CAN have columns called id/source/lang) is a
+        column map, never an envelope — otherwise such columns would be
+        un-updatable. Internal and unknown columns are rejected."""
+        if isinstance(script, dict) and set(script) <= {
+            "id", "source", "params", "lang"
+        } and ("id" in script or "source" in script) \
+                and not set(script) <= set(cols):
+            script = self.resolve_script(script)
+            if not isinstance(script, dict):
+                raise ValueError(
+                    f"{what} script must resolve to a column→expression map"
+                )
+        self._validate_set_fields(cols, dict(script), op)
+        return script
+
+    def _write_by_query(self, route: str, query: dict, op: str,
+                        action: str, set_fields=None) -> int:
+        """The shared body of :meth:`delete_by_query` and
+        :meth:`update_by_query`: the live documents matching ``query``
+        (scanned once, persisted for the count), with ``set_fields``
+        applied, re-enter the index as one ``action`` batch at the next
+        admin sequence through the SAME CDC merge as streamed events.
+        Returns the matched count."""
+        from ..operators.search import compile_query
+
+        self._check_write_block(route, op)
+        self._check_masked_write(route, op)
+        self._check_dls_write(route, op)
+        idx = self.index_view(route)
+        if idx is None:
+            return 0
+        if set_fields is not None:
+            set_fields = self._script_map(set_fields, idx.columns, op, op)
+        matches = idx.filter(compile_query(query)).persist()
+        try:
+            n = matches.count()
+            if n == 0:
+                return 0
+            batch = matches
+            for col_name, expr in (set_fields or {}).items():
+                # script dialect with the JVM/UDF escape hatches blocked
+                # (functions/scripts.py); wrap in unsafe_scripts_allowed()
+                # for a trusted administrative caller needing them.
+                batch = batch.withColumn(col_name, safe_expr(expr))
+            batch = batch.withColumn("_seq", F.lit(0).cast("long")) \
+                .withColumn("_action", F.lit(action))
+            self._merge_route(batch, route, admin=True)
+            return n
+        finally:
+            matches.unpersist()
+
     def delete_by_query(self, route: str, query: dict) -> int:
         """``_delete_by_query`` analog: documents matching a DSL query
         body are deleted through the SAME CDC merge path as streamed
@@ -1068,28 +1078,10 @@ class FlightsEtlPipeline:
         sequence number, so last-write-wins ordering, emptied-bucket
         removal, and tombstone mode all apply unchanged. Returns the
         deleted count (the public response's ``deleted`` field). The
-        index is scanned once for the match+max-seq (persisted), then
-        merge cost ∝ touched buckets like a streamed micro-batch."""
-        from ..operators.search import compile_query
-
-        self._check_write_block(route, "delete_by_query")
-        self._check_masked_write(route, "delete_by_query")
-        self._check_dls_write(route, "delete_by_query")
-        idx = self.index_view(route)
-        if idx is None:
-            return 0
-        matches = idx.filter(compile_query(query)).persist()
-        try:
-            n = matches.count()
-            if n == 0:
-                return 0
-            batch = matches.withColumn(
-                "_seq", F.lit(self._next_synth_seq(idx)).cast("long")
-            ).withColumn("_action", F.lit("delete"))
-            self._merge_route(batch, route)
-            return n
-        finally:
-            matches.unpersist()
+        index is scanned once for the match (persisted), then merge
+        cost ∝ touched buckets like a streamed micro-batch."""
+        return self._write_by_query(route, query, "delete_by_query",
+                                    "delete")
 
     def update_by_query(
         self, route: str, query: dict, set_fields: dict[str, str]
@@ -1102,47 +1094,8 @@ class FlightsEtlPipeline:
         count. A stream event arriving after the update carries a higher
         effective sequence and wins, exactly like a subsequent index op
         after a public update_by_query."""
-        from ..operators.search import compile_query
-
-        self._check_write_block(route, "update_by_query")
-        self._check_masked_write(route, "update_by_query")
-        self._check_dls_write(route, "update_by_query")
-        idx = self.index_view(route)
-        if idx is None:
-            return 0
-        if isinstance(set_fields, dict) and set(set_fields) <= {
-            "id", "source", "params", "lang"
-        } and ("id" in set_fields or "source" in set_fields) \
-                and not set(set_fields) <= set(idx.columns):
-            # envelope sniff is column-aware: a bare map whose keys ALL
-            # name real data columns (an index CAN have columns called
-            # id/source/lang) is a column map, never an envelope —
-            # otherwise such columns would be un-updatable
-            set_fields = self.resolve_script(set_fields)
-            if not isinstance(set_fields, dict):
-                raise ValueError(
-                    "update_by_query script must resolve to a "
-                    "column→expression map"
-                )
-        self._validate_set_fields(idx.columns, set_fields, "update_by_query")
-        matches = idx.filter(compile_query(query)).persist()
-        try:
-            n = matches.count()
-            if n == 0:
-                return 0
-            batch = matches
-            for col_name, expr in set_fields.items():
-                # script dialect with the JVM/UDF escape hatches blocked
-                # (functions/scripts.py); wrap in unsafe_scripts_allowed()
-                # for a trusted administrative caller needing them.
-                batch = batch.withColumn(col_name, safe_expr(expr))
-            batch = batch.withColumn(
-                "_seq", F.lit(self._next_synth_seq(idx)).cast("long")
-            ).withColumn("_action", F.lit("upsert"))
-            self._merge_route(batch, route)
-            return n
-        finally:
-            matches.unpersist()
+        return self._write_by_query(route, query, "update_by_query",
+                                    "upsert", set_fields)
 
     def reindex(
         self,
@@ -1205,10 +1158,9 @@ class FlightsEtlPipeline:
         n = batch.count()
         if n == 0:
             return 0
-        batch = batch.withColumn(
-            "_seq", F.lit(self._next_synth_seq(self.read_index(dest))).cast("long")
-        ).withColumn("_action", F.lit("index"))
-        self._merge_route(batch, dest)
+        batch = batch.withColumn("_seq", F.lit(0).cast("long")).withColumn(
+            "_action", F.lit("index"))
+        self._merge_route(batch, dest, admin=True)
         return n
 
     def rollover(
@@ -2582,14 +2534,15 @@ class FlightsEtlPipeline:
     def submit_async_search(self, pattern: str,
                             body: dict | None = None) -> str:
         """``POST /_plugins/_asynchronous_search`` analog: run the
-        search on a background thread, persisting completed hits as a
-        parquet result set plus a status document — the long-query
-        pattern (submit, poll, fetch) for dashboards that cannot hold a
-        connection open. The worker thread shares the SparkSession
-        (Spark's scheduler interleaves concurrent job groups); the
-        status file is written atomically, so a poller never reads a
-        half-state. Results persist until :meth:`delete_async_search`
-        (the public keep_on_completion=true behavior)."""
+        search on a background thread, persisting completed hits as the
+        store table ``_async/<id>/hits`` plus a status document — the
+        long-query pattern (submit, poll, fetch) for dashboards that
+        cannot hold a connection open. The worker thread shares the
+        SparkSession (Spark's scheduler interleaves concurrent job
+        groups); the status file is written atomically, so a poller
+        never reads a half-state. Results persist until
+        :meth:`delete_async_search` (the public keep_on_completion=true
+        behavior)."""
         import threading
         aid = uuid.uuid4().hex
         adir = self._async_dir(aid)
@@ -2603,10 +2556,8 @@ class FlightsEtlPipeline:
                 hits = res["hits"]
                 n = 0
                 if hits is not None:
-                    hits.write.mode("overwrite").parquet(
-                        os.path.join(adir, "hits"))
-                    n = self.spark.read.parquet(
-                        os.path.join(adir, "hits")).count()
+                    self.store.publish(f"_async/{aid}/hits", hits)
+                    n = self.store.frame(f"_async/{aid}/hits").count()
                 save_json(status, {
                     "id": aid, "state": "SUCCEEDED", "pattern": pattern,
                     "n_hits": n,
@@ -2625,19 +2576,16 @@ class FlightsEtlPipeline:
         st = load_json(os.path.join(self._async_dir(aid), "status.json"))
         if not st:
             raise ValueError(f"no such async search {aid!r}")
-        hits_dir = os.path.join(self._async_dir(aid), "hits")
-        if st["state"] == "SUCCEEDED" and os.path.isdir(hits_dir):
+        if st["state"] == "SUCCEEDED":
             # empty result sets attach too (schema-bearing empty frame
             # — the public API returns empty hits, not a missing field)
-            st["hits"] = self.spark.read.parquet(hits_dir)
+            hits = self.store.frame(f"_async/{aid}/hits")
+            if hits is not None:
+                st["hits"] = hits
         return st
 
     def delete_async_search(self, aid: str) -> bool:
-        adir = self._async_dir(aid)
-        if not os.path.isdir(adir):
-            return False
-        shutil.rmtree(adir)
-        return True
+        return self.store.delete(f"_async/{aid}")
 
     def create_scroll(
         self, pattern: str, body: dict | None = None, size: int = 100
@@ -2984,21 +2932,7 @@ class FlightsEtlPipeline:
         index's own column types, the script columns rewritten through
         :func:`safe_expr`, collected back to a dict. One tiny local job
         per call — bounded by the bulk's action count."""
-        if isinstance(script, dict) and set(script) <= {
-            "id", "source", "params", "lang"
-        } and ("id" in script or "source" in script) \
-                and not set(script) <= set(data_cols):
-            # public script envelope (stored-script reference or inline
-            # source + params) rather than the bare column map; the
-            # sniff is column-aware — keys that ALL name real data
-            # columns are a column map (see update_by_query)
-            script = self.resolve_script(script)
-            if not isinstance(script, dict):
-                raise ValueError(
-                    "update script must resolve to a column→expression map"
-                )
-        self._validate_set_fields(data_cols, dict(script), "bulk")
-        from pyspark.sql import types as T
+        script = self._script_map(script, data_cols, "bulk", "update")
 
         def _coerce(v, dt):
             # benign Python-type looseness (int for a double column,
@@ -3083,7 +3017,6 @@ class FlightsEtlPipeline:
             )
         data_cols = [c for c in idx.columns if c not in ("_seq", "_bucket",
                                                          "_deleted")]
-        base_seq = self._next_synth_seq(self.read_index(route))
         upserts: list[tuple] = []
         deletes: list[tuple] = []
         counts = {"indexed": 0, "created": 0, "updated": 0, "deleted": 0}
@@ -3104,7 +3037,7 @@ class FlightsEtlPipeline:
             }
         for i, action in enumerate(actions):
             (op, body), = action.items()
-            seq = base_seq + 2 * i  # stays in the odd admin half
+            seq = 2 * i  # offset from the admin base (_merge_route)
             _id = str(body["_id"])
             if op == "delete":
                 deletes.append((_id, seq))
@@ -3181,8 +3114,6 @@ class FlightsEtlPipeline:
 
         schema_fields = [f for f in idx.schema.fields
                          if f.name in data_cols and f.name != "_id"]
-        from pyspark.sql import types as T
-
         schema = T.StructType(
             [T.StructField("_id", T.StringType()),
              T.StructField("_seq", T.LongType())] + schema_fields
@@ -3207,5 +3138,5 @@ class FlightsEtlPipeline:
         batch = frames[0]
         for f in frames[1:]:
             batch = batch.unionByName(f)
-        self._merge_route(batch, route)
+        self._merge_route(batch, route, admin=True)
         return {"items": len(actions), **counts}

@@ -9,6 +9,11 @@ with N+1 atomically under the index's lock, so two writers in one
 process never lose each other's update (other processes are not
 serialized). Readers take no lock: a read opens the manifest once.
 
+Side tables use the same commit: each route's dead letters are the
+table ``dlq/<route>`` (parked by a publish, cleared by
+:meth:`IndexStore.drop`) and an async search's hits are
+``_async/<id>/hits``; :meth:`IndexStore.names` lists neither.
+
 Older layouts are adopted once, on first read: a directory of parquet
 files with no manifest is listed into version 1, and a manifest without
 the settings fields folds in the ``_settings.json`` beside it (where
@@ -53,6 +58,19 @@ def _list_files(root: str) -> dict[str, list[str]]:
     return out
 
 
+def _gc(root: str, files) -> None:
+    """Delete ``files`` (root-relative) with their checksum siblings,
+    and each bucket dir they leave empty."""
+    for f in sorted(files):
+        d, fn = os.path.split(os.path.join(root, f))
+        for p in (os.path.join(d, fn), os.path.join(d, f".{fn}.crc")):
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(p)
+        if d != root:  # rmdir only succeeds once the bucket is empty
+            with contextlib.suppress(OSError):
+                os.rmdir(d)
+
+
 def _walk(root: str) -> dict[str, str]:
     return {os.path.relpath(os.path.join(d, f), root): os.path.join(d, f)
             for d, _, fs in os.walk(root) for f in fs}
@@ -84,7 +102,8 @@ class IndexStore:
     def names(self) -> list[str]:
         """Every index, sorted: the configured routes plus each
         directory under the root except "_"-prefixed side channels
-        (``_metrics``, ``_pits``, ``_staging``) and the DLQ tree."""
+        (``_metrics``, ``_pits``, ``_staging``, ``_async``) and the
+        ``dlq/<route>`` tables."""
         names = set(self.routes)
         if os.path.isdir(self.root):
             names.update(e for e in os.listdir(self.root)
@@ -214,14 +233,30 @@ class IndexStore:
             })
 
             live = {f for fs in files.values() for f in fs}
-            for f in sorted({f for fs in old.values() for f in fs} - live):
-                d, fn = os.path.split(os.path.join(root, f))
-                for p in (os.path.join(d, fn), os.path.join(d, f".{fn}.crc")):
-                    with contextlib.suppress(FileNotFoundError):
-                        os.remove(p)
-                if d != root:  # rmdir only succeeds once the bucket is empty
-                    with contextlib.suppress(OSError):
-                        os.rmdir(d)
+            _gc(root, {f for fs in old.values() for f in fs} - live)
+
+    def drop(self, name: str, files) -> None:
+        """Publish the next version without ``files`` (root-relative, as
+        a manifest lists them), under the index's lock; files committed
+        since the caller read its version stay. A table left with no
+        files loses its manifest, and its directory when nothing else is
+        in it. A missing table is a no-op."""
+        root = self.path(name)
+        with self.lock(name):
+            m = self.manifest(name)
+            if m is None:
+                return
+            gone = set(files) & {f for fs in m["files"].values() for f in fs}
+            m["files"] = {b: keep for b, fs in m["files"].items()
+                          if (keep := [f for f in fs if f not in gone])}
+            m["version"] += 1
+            if m["files"]:
+                save_json(os.path.join(root, MANIFEST), m)
+            else:
+                os.remove(os.path.join(root, MANIFEST))
+            _gc(root, gone)
+            with contextlib.suppress(OSError):  # kept while anything is in it
+                os.rmdir(root)
 
     def update(self, name: str, change) -> dict:
         """Publish and return the next manifest version with ``change``

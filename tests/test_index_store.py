@@ -1,6 +1,7 @@
-"""The index store: commit and GC of staged files, settings in the
+"""The index store: commit, drop and GC of staged files, settings in the
 manifest, the per-route write lock, and the one-time adoption of a
-route's old ``_settings.json``. The commit tests need no Spark session."""
+route's old ``_settings.json``. The commit and drop tests need no Spark
+session."""
 
 from __future__ import annotations
 
@@ -11,6 +12,7 @@ import threading
 import uuid
 
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.readwriter import DataFrameWriter
 
@@ -131,6 +133,72 @@ def test_concurrent_commits_and_settings_updates_lose_nothing(store):
     assert _on_disk(store) == {f for fs in m["files"].values() for f in fs}
 
 
+def _files(m):
+    return [f for fs in m["files"].values() for f in fs]
+
+
+def test_drop_keeps_files_committed_after_the_version_read(store):
+    read = _commit(store, [0, 1])
+    later = set(_files(_commit(store, [1], replace=()))) - set(_files(read))
+    store.drop("idx", _files(read))
+    m = store.manifest("idx")
+    assert m["version"] == 3 and set(_files(m)) == later
+    assert _on_disk(store) == later
+    assert not os.path.exists(os.path.join(store.path("idx"), "_bucket=0"))
+
+
+def test_drop_that_empties_the_table_removes_manifest_and_dir(store):
+    store.drop("idx", _files(_commit(store, [0, 1])))
+    assert store.manifest("idx") is None
+    assert not os.path.exists(store.path("idx"))
+
+
+def test_drop_leaves_a_file_outside_the_manifest_and_its_dir(store):
+    m = _commit(store, [0])
+    stray = os.path.join("_temporary", "0", "part-00000.parquet")
+    os.makedirs(os.path.dirname(os.path.join(store.path("idx"), stray)))
+    with open(os.path.join(store.path("idx"), stray), "w") as f:
+        f.write("x")
+    store.drop("idx", _files(m) + [stray])
+    assert store.manifest("idx") is None
+    assert _on_disk(store) == {stray}
+
+
+def test_concurrent_commits_and_drops_lose_nothing(store):
+    """More threads than cores: odd threads append, even threads append
+    and then drop their own bucket's files. The last manifest holds
+    exactly the odd threads' files, and the disk matches it."""
+    _commit(store, [0])
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        def work(k):
+            for _ in range(10):
+                m = _commit(store, [k], replace=())
+                if k % 2 == 0:
+                    store.drop("idx", m["files"][str(k)])
+
+        threads = [threading.Thread(target=work, args=(k,))
+                   for k in range(1, 9)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(switch)
+    m = store.manifest("idx")
+    assert m["version"] == 121
+    assert sorted(m["files"]) == ["0", "1", "3", "5", "7"]
+    assert sum(len(m["files"][str(k)]) for k in range(1, 9, 2)) == 40
+    assert _on_disk(store) == set(_files(m))
+
+
+def test_drop_from_a_missing_table_is_a_noop(store):
+    store.drop("idx", ["part-00000.parquet"])
+    assert not os.path.exists(store.path("idx"))
+
+
 def _pipeline(spark, root):
     p = FlightsEtlPipeline(spark, PipelineConfig(
         index_root=str(root / "i"), checkpoint_root=str(root / "c")))
@@ -177,6 +245,48 @@ def test_concurrent_bulks_into_one_route_lose_no_update(
     ids = [f"{t}-{i}" for t in "AB" for i in range(40)]
     assert p.mget("fare", ids).count() == 80
     assert p.count("fare") == before + 80
+
+
+def test_concurrent_admin_writes_to_one_id_take_distinct_sequences(
+        spark, tmp_path, monkeypatch):
+    """Two single-document writes to one id each reach their staging
+    write together. The second reads its sequence under the route lock,
+    after the first commit, so it stamps the next admin sequence and its
+    image is the stored one."""
+    p = _pipeline(spark, tmp_path)
+    first = p._next_synth_seq(p.read_index("fare"))
+    barrier = threading.Barrier(2, timeout=5)
+    order = []
+    real = DataFrameWriter.parquet
+
+    def held(self, path, *args, **kwargs):
+        if f"{os.sep}_staging{os.sep}" in path:
+            order.append(threading.current_thread().name)
+            try:
+                barrier.wait()
+            except threading.BrokenBarrierError:
+                pass  # the other writer is waiting on the route lock
+        return real(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", held)
+    errors = []
+
+    def writer():
+        try:
+            p.index_doc("fare", "race",
+                        {"pk": threading.current_thread().name})
+        except Exception as exc:  # noqa: BLE001 — reported below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=writer, name=t) for t in "AB"]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == [] and len(order) == 2
+    rows = p.read_index("fare").filter(F.col("_id") == "race").collect()
+    assert [(r["_seq"], r["pk"]) for r in rows] == [(first + 2, order[1])]
 
 
 def _to_old_layout(route_dir, settings):
