@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import uuid
 
 # registry name → its file under the index root (the "_" prefix keeps
@@ -28,6 +29,16 @@ REGISTRIES = {
     "monitors": "_monitors.json",
     "data_streams": "_data_streams.json",
 }
+
+
+_LOCKS: dict[str, threading.RLock] = {}
+_LOCKS_GUARD = threading.Lock()
+
+
+def path_lock(path: str) -> threading.RLock:
+    """The in-process write lock of ``path``, one per absolute path."""
+    with _LOCKS_GUARD:
+        return _LOCKS.setdefault(os.path.abspath(path), threading.RLock())
 
 
 def load_json(path: str) -> dict:
@@ -63,19 +74,21 @@ class MetaStore:
         return load_json(self.path(name))
 
     def put(self, name: str, key: str, value) -> None:
-        reg = self.read(name)
-        reg[key] = value
-        os.makedirs(self.root, exist_ok=True)
-        save_json(self.path(name), reg)
+        with path_lock(self.path(name)):
+            reg = self.read(name)
+            reg[key] = value
+            os.makedirs(self.root, exist_ok=True)
+            save_json(self.path(name), reg)
 
     def pop(self, name: str, key: str) -> bool:
         """Remove ``key``; False, and no write, when it was absent."""
-        reg = self.read(name)
-        if key not in reg:
-            return False
-        del reg[key]
-        save_json(self.path(name), reg)
-        return True
+        with path_lock(self.path(name)):
+            reg = self.read(name)
+            if key not in reg:
+                return False
+            del reg[key]
+            save_json(self.path(name), reg)
+            return True
 
     def get(self, name: str, key: str):
         """``key``'s entry, else ``ValueError`` naming the entry kind

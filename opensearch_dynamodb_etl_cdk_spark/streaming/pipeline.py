@@ -264,6 +264,10 @@ class FlightsEtlPipeline:
         self._role_token = object()
         self.meta = MetaStore(config.index_root)
         self.store = IndexStore(spark, config.index_root, config.routes)
+        # open PITs and scroll cursors, each with the index versions it
+        # holds (index name → manifest); they live in this instance only
+        self._pits: dict[str, dict] = {}
+        self._scrolls: dict[str, dict] = {}
 
     # -- shared transform (one code path for bootstrap and tail, ST2) -------
 
@@ -762,8 +766,8 @@ class FlightsEtlPipeline:
 
     def _read_view(self, name: str, read=None) -> DataFrame | None:
         """The per-index step of every public read: :meth:`index_view`
-        over ``read`` (default :meth:`read_index`; a PIT passes its
-        frozen tables), then field masking."""
+        over ``read`` (default :meth:`read_index`; a PIT or scroll
+        passes its held versions), then field masking."""
         return self._apply_field_masking(
             self._live(name, read or self.read_index), name)
 
@@ -1048,28 +1052,30 @@ class FlightsEtlPipeline:
         self._check_write_block(route, op)
         self._check_masked_write(route, op)
         self._check_dls_write(route, op)
-        idx = self.index_view(route)
-        if idx is None:
-            return 0
-        if set_fields is not None:
-            set_fields = self._script_map(set_fields, idx.columns, op, op)
-        matches = idx.filter(compile_query(query)).persist()
-        try:
-            n = matches.count()
-            if n == 0:
+        # the match and the merge read one version (the lock is an RLock)
+        with self.store.lock(route):
+            idx = self.index_view(route)
+            if idx is None:
                 return 0
-            batch = matches
-            for col_name, expr in (set_fields or {}).items():
-                # script dialect with the JVM/UDF escape hatches blocked
-                # (functions/scripts.py); wrap in unsafe_scripts_allowed()
-                # for a trusted administrative caller needing them.
-                batch = batch.withColumn(col_name, safe_expr(expr))
-            batch = batch.withColumn("_seq", F.lit(0).cast("long")) \
-                .withColumn("_action", F.lit(action))
-            self._merge_route(batch, route, admin=True)
-            return n
-        finally:
-            matches.unpersist()
+            if set_fields is not None:
+                set_fields = self._script_map(set_fields, idx.columns, op, op)
+            matches = idx.filter(compile_query(query)).persist()
+            try:
+                n = matches.count()
+                if n == 0:
+                    return 0
+                batch = matches
+                for col_name, expr in (set_fields or {}).items():
+                    # script dialect with the JVM/UDF escape hatches blocked
+                    # (functions/scripts.py); wrap in unsafe_scripts_allowed()
+                    # for a trusted administrative caller needing them.
+                    batch = batch.withColumn(col_name, safe_expr(expr))
+                batch = batch.withColumn("_seq", F.lit(0).cast("long")) \
+                    .withColumn("_action", F.lit(action))
+                self._merge_route(batch, route, admin=True)
+                return n
+            finally:
+                matches.unpersist()
 
     def delete_by_query(self, route: str, query: dict) -> int:
         """``_delete_by_query`` analog: documents matching a DSL query
@@ -1671,10 +1677,13 @@ class FlightsEtlPipeline:
                 "n_buckets": int(n)}
 
     def snapshot(self, snapshot_dir: str, pattern: str = "*") -> list[str]:
-        """``_snapshot`` analog: mirror the matching index tables
-        (parquet files, bucket layout and manifest, byte-for-byte) into
-        ``snapshot_dir`` — EVERY live table, including ones
-        :meth:`reindex` created outside the configured routes.
+        """``_snapshot`` analog: copy one version of each matching
+        index table (its manifest and exactly the parquet files it
+        lists, byte-for-byte) into ``snapshot_dir`` — EVERY live table,
+        including ones :meth:`reindex` created outside the configured
+        routes. The version is held for the copy, so a concurrent merge
+        neither deletes a file mid-copy nor mixes two versions, and
+        files a PIT or scroll still holds are left out.
 
         INCREMENTAL at the file level, like the public ``_snapshot``
         API is incremental at the segment level
@@ -2598,21 +2607,21 @@ class FlightsEtlPipeline:
         at the scan). The sort defaults to `_id asc` (a unique key) so
         the cursor is total. Returns (scroll_id, first page frame).
 
-        Divergence from the public contract, documented: OpenSearch
-        scroll pins a point-in-time snapshot via segment refs; this
-        engine's pages still read LIVE data — each page re-resolves the
-        pattern through :meth:`multi_index_view`, so a concurrent merge
-        between pages may surface/hide rows, and each page sees the
-        closed flags, role and masking current when it runs. Use
-        :meth:`open_pit` / :meth:`search_pit` when frozen iteration
-        matters."""
+        Like OpenSearch's scroll context, the cursor reads one point in
+        time: the pattern resolves once and each index's current
+        version is held (:meth:`~.store.IndexStore.hold`), so merges
+        between pages neither surface nor hide rows. Role and masking
+        apply as they are when each page runs. The holds end when the
+        scan is exhausted or at :meth:`clear_scroll`; the cursor lives
+        in this pipeline instance only."""
         body = dict(body or {})
         body.setdefault("sort", [{"_id": {"order": "asc"}}])
         body["size"] = int(size)
         body.pop("from", None)
+        resolved = self._resolve_pattern(pattern)
         sid = uuid.uuid4().hex
-        self._scrolls = getattr(self, "_scrolls", {})
-        self._scrolls[sid] = {"pattern": pattern, "body": body}
+        self._scrolls[sid] = {"resolved": resolved, "body": body,
+                              "held": self._hold(resolved)}
         return sid, self._scroll_page(sid, after=None)
 
     def _scroll_page(self, sid: str, after) -> DataFrame | None:
@@ -2622,7 +2631,9 @@ class FlightsEtlPipeline:
         body = dict(st["body"])
         if after is not None:
             body["search_after"] = after
-        view = self.multi_index_view(st["pattern"])
+        held = st["held"]
+        view = self._union(st["resolved"], lambda n: (
+            self.store.frame(n, held[n]) if n in held else None))
         if view is None:
             return None
         page = execute_search(view, body)["hits"]
@@ -2632,32 +2643,44 @@ class FlightsEtlPipeline:
         rows = page.collect()
         fields = [f for f, _ in _sort_fields(body["sort"])]
         st["after"] = [rows[-1][f] for f in fields] if rows else None
-        st["exhausted"] = len(rows) < int(body["size"])
-        return self.spark.createDataFrame(rows, page.schema) if rows else (
-            self.spark.createDataFrame([], page.schema)
-        )
+        st["schema"] = page.schema
+        if len(rows) < int(body["size"]):  # exhausted: no more reads
+            self._release(st.pop("held"))
+        return self.spark.createDataFrame(rows, page.schema)
 
     def scroll(self, scroll_id: str) -> DataFrame | None:
         """``GET /_search/scroll`` analog: the next page for a cursor
         from :meth:`create_scroll`. Returns an empty-schema frame once
         the scan is exhausted (the public API's empty-hits signal)."""
-        st = self._scrolls.get(scroll_id) if hasattr(self, "_scrolls") else None
+        st = self._scrolls.get(scroll_id)
         if st is None:
             raise ValueError(f"no such scroll {scroll_id!r}")
-        if st.get("exhausted"):
-            view = self.multi_index_view(st["pattern"])
-            from ..operators.search import execute_search
-
-            empty_body = dict(st["body"], size=0)
-            page = execute_search(view, empty_body)["hits"]
-            return page.limit(0)
+        if "held" not in st:
+            return self.spark.createDataFrame([], st["schema"])
         return self._scroll_page(scroll_id, after=st.get("after"))
 
     def clear_scroll(self, scroll_id: str) -> bool:
-        """``DELETE /_search/scroll`` analog: drop the cursor state."""
-        return (
-            getattr(self, "_scrolls", {}).pop(scroll_id, None) is not None
-        )
+        """``DELETE /_search/scroll`` analog: drop the cursor state and
+        release the index versions it holds."""
+        st = self._scrolls.pop(scroll_id, None)
+        if st is None:
+            return False
+        self._release(st.get("held", {}))
+        return True
+
+    def _hold(self, resolved: tuple) -> dict:
+        """Hold the current version of every materialized index a
+        :meth:`_resolve_pattern` result reads, filtered aliases'
+        included: index name → held manifest."""
+        def names(res):
+            return [*res[0], *(n for _, sub in res[1] for n in names(sub))]
+
+        return {n: m for n in dict.fromkeys(names(resolved))
+                if (m := self.store.hold(n))}
+
+    def _release(self, held: dict) -> None:
+        for n, m in held.items():
+            self.store.release(n, m)
 
     def terms_enum(
         self,
@@ -2757,45 +2780,42 @@ class FlightsEtlPipeline:
         ]}
 
     def open_pit(self, pattern: str = "*") -> str:
-        """``POST /<pattern>/_pit`` analog: freeze a point-in-time view
-        of the indexes ``pattern`` resolves to (as for :meth:`search`).
-        Implementation = a file-level copy (no Spark job) of just those
-        index tables; searches
-        through :meth:`search_pit` read the frozen files, so concurrent
-        merges never change a PIT reader's results — the consistency
-        guarantee scroll alone does not give on this engine (see
-        :meth:`create_scroll`). At real scale the copy is the storage
-        layer's cheap object clone. A filtered alias in the pattern
-        raises ``ValueError``: alias filters are not frozen."""
+        """``POST /<pattern>/_pit`` analog: a point-in-time view of the
+        indexes ``pattern`` resolves to (as for :meth:`search`). Each
+        index's current manifest version is held
+        (:meth:`~.store.IndexStore.hold`): nothing is copied and no
+        Spark job runs, and searches through :meth:`search_pit` read
+        those versions, so later merges never change a PIT reader's
+        results. The id lives in this pipeline instance until
+        :meth:`close_pit` (an OpenSearch PIT does not survive a cluster
+        restart either); deleting or restoring an index removes its held
+        files too. A filtered alias in the pattern raises ``ValueError``:
+        alias filters are not frozen."""
         names, filtered = self._resolve_pattern(pattern)
         if filtered:
             raise ValueError(
                 f"open_pit: {pattern!r} names a filtered alias, which a "
                 "point-in-time view cannot freeze")
-        names = [n for n in names if self.store.exists(n)]
-        if not names:
+        held = self._hold((names, []))
+        if not held:
             raise ValueError(f"pattern {pattern!r} matches no index")
         pit_id = uuid.uuid4().hex
-        pit = self.store.child(os.path.join("_pits", pit_id))
-        for name in names:
-            self.store.mirror(name, pit.path(name))
+        self._pits[pit_id] = held
         return pit_id
 
-    def _pit(self, pit_id: str) -> IndexStore:
-        """The store of a PIT's frozen indexes."""
-        name = os.path.join("_pits", pit_id)
-        if not self.store.exists(name):
+    def _pit(self, pit_id: str) -> dict:
+        """A PIT's held versions: index name → manifest."""
+        if pit_id not in self._pits:
             raise ValueError(f"no such pit {pit_id!r}")
-        return self.store.child(name)
+        return self._pits[pit_id]
 
     def pit_view(self, pit_id: str) -> DataFrame | None:
         """The frozen multi-index view of a PIT: the union and
         per-index step of :meth:`multi_index_view` (role check, DLS,
-        tombstone drop, masking, ``_index``) over the frozen tables.
+        tombstone drop, masking, ``_index``) over the held versions.
         Only the data is frozen: role and masking apply as they are
         at search time."""
-        pit = self._pit(pit_id)
-        return self._union((pit.names(), []), pit.frame)
+        return self._union((self._pit(pit_id), []))
 
     def search_pit(self, pit_id: str, body: dict | None = None) -> dict:
         """``_search`` with a ``pit`` id: the DSL body runs against the
@@ -2808,12 +2828,17 @@ class FlightsEtlPipeline:
         if view is None:
             return {"hits": None, "aggregations": {}}
         body = body or {}
-        self._reject_masked_aggs(body, lambda: self._pit(pit_id).names())
+        self._reject_masked_aggs(body, self._pit(pit_id).keys)
         return execute_search(view, body)
 
     def close_pit(self, pit_id: str) -> bool:
-        """``DELETE /_pit`` analog: drop the frozen copy."""
-        return self.store.delete(os.path.join("_pits", pit_id))
+        """``DELETE /_pit`` analog: release the PIT's held versions;
+        files no current manifest lists are deleted then."""
+        held = self._pits.pop(pit_id, None)
+        if held is None:
+            return False
+        self._release(held)
+        return True
 
     # -- data streams --------------------------------------------------------
 
@@ -3005,138 +3030,140 @@ class FlightsEtlPipeline:
             # masked column could be copied into an unmasked one
             self._check_masked_write(route, "bulk (scripted update)")
             self._check_dls_write(route, "bulk (scripted update)")
-        # SYSTEM read: the current-image fetch for by-id merges runs
-        # with the engine's authority — a write-only role can ingest
-        # (the public plugin's write permission), and the image must be
-        # the RAW stored document: fetching through the masked mget
-        # would merge hashed values back into storage on update
-        idx = self.index_view(route, _system=True)
-        if idx is None:
-            raise ValueError(
-                f"bulk: index {route!r} is not materialized (bootstrap first)"
-            )
-        data_cols = [c for c in idx.columns if c not in ("_seq", "_bucket",
-                                                         "_deleted")]
-        upserts: list[tuple] = []
-        deletes: list[tuple] = []
-        counts = {"indexed": 0, "created": 0, "updated": 0, "deleted": 0}
+        # the image fetch and the merge read one version (an RLock)
+        with self.store.lock(route):
+            # SYSTEM read: the current-image fetch for by-id merges runs
+            # with the engine's authority — a write-only role can ingest
+            # (the public plugin's write permission), and the image must
+            # be the RAW stored document: fetching through the masked
+            # mget would merge hashed values back into storage on update
+            idx = self.index_view(route, _system=True)
+            if idx is None:
+                raise ValueError(
+                    f"bulk: index {route!r} is not materialized (bootstrap first)"
+                )
+            data_cols = [c for c in idx.columns if c not in ("_seq", "_bucket",
+                                                             "_deleted")]
+            upserts: list[tuple] = []
+            deletes: list[tuple] = []
+            counts = {"indexed": 0, "created": 0, "updated": 0, "deleted": 0}
 
-        fetch_ids = [
-            str(a[op]["_id"]) for a in actions for op in a
-            if op in ("update", "create")
-        ]
-        current: dict[str, dict] = {}
-        if fetch_ids:
-            # same system/raw discipline as idx above (never the
-            # public mget, which is role-checked and masked)
-            fetched = idx.filter(F.col("_id").isin(fetch_ids))
-            # bounded: <= len(fetch_ids) rows — the bulk request's own
-            # update/create id list
-            current = {
-                r["_id"]: r.asDict() for r in fetched.collect()
-            }
-        for i, action in enumerate(actions):
-            (op, body), = action.items()
-            seq = 2 * i  # offset from the admin base (_merge_route)
-            _id = str(body["_id"])
-            if op == "delete":
-                deletes.append((_id, seq))
-                counts["deleted"] += 1
-                # later updates on this id in the same bulk must fail,
-                # exactly as the public API reports document_missing
-                current.pop(_id, None)
-                continue
-            doc = dict(body.get("doc") or {})
-            self._validate_set_fields(data_cols, doc, "bulk")
-            if op == "update":
-                script = body.get("script")
-                upsert_doc = body.get("upsert")
-                if upsert_doc is not None:
-                    self._validate_set_fields(
-                        data_cols, dict(upsert_doc), "bulk"
-                    )
-                exists = _id in current
-                if script is not None:
-                    if doc:
-                        raise ValueError(
-                            "bulk update: 'doc' and 'script' are "
-                            "mutually exclusive (public contract)"
+            fetch_ids = [
+                str(a[op]["_id"]) for a in actions for op in a
+                if op in ("update", "create")
+            ]
+            current: dict[str, dict] = {}
+            if fetch_ids:
+                # same system/raw discipline as idx above (never the
+                # public mget, which is role-checked and masked)
+                fetched = idx.filter(F.col("_id").isin(fetch_ids))
+                # bounded: <= len(fetch_ids) rows — the bulk request's own
+                # update/create id list
+                current = {
+                    r["_id"]: r.asDict() for r in fetched.collect()
+                }
+            for i, action in enumerate(actions):
+                (op, body), = action.items()
+                seq = 2 * i  # offset from the admin base (_merge_route)
+                _id = str(body["_id"])
+                if op == "delete":
+                    deletes.append((_id, seq))
+                    counts["deleted"] += 1
+                    # later updates on this id in the same bulk must fail,
+                    # exactly as the public API reports document_missing
+                    current.pop(_id, None)
+                    continue
+                doc = dict(body.get("doc") or {})
+                self._validate_set_fields(data_cols, doc, "bulk")
+                if op == "update":
+                    script = body.get("script")
+                    upsert_doc = body.get("upsert")
+                    if upsert_doc is not None:
+                        self._validate_set_fields(
+                            data_cols, dict(upsert_doc), "bulk"
                         )
-                    if exists:
-                        merged = self._eval_update_script(
-                            idx, data_cols, current[_id], script
-                        )
-                    elif body.get("scripted_upsert"):
-                        base = {"_id": _id, **dict(upsert_doc or {})}
-                        merged = self._eval_update_script(
-                            idx, data_cols, base, script
-                        )
+                    exists = _id in current
+                    if script is not None:
+                        if doc:
+                            raise ValueError(
+                                "bulk update: 'doc' and 'script' are "
+                                "mutually exclusive (public contract)"
+                            )
+                        if exists:
+                            merged = self._eval_update_script(
+                                idx, data_cols, current[_id], script
+                            )
+                        elif body.get("scripted_upsert"):
+                            base = {"_id": _id, **dict(upsert_doc or {})}
+                            merged = self._eval_update_script(
+                                idx, data_cols, base, script
+                            )
+                        elif upsert_doc is not None:
+                            merged = dict(upsert_doc)
+                        else:
+                            raise ValueError(
+                                f"bulk update: no document {_id!r}"
+                            )
+                    elif exists:
+                        merged = {**current[_id], **doc}
+                    elif body.get("doc_as_upsert"):
+                        merged = doc
                     elif upsert_doc is not None:
+                        # first write: the upsert document verbatim, the
+                        # partial doc does NOT also apply (public semantics)
                         merged = dict(upsert_doc)
                     else:
+                        raise ValueError(f"bulk update: no document {_id!r}")
+                    counts["updated"] += 1
+                elif op == "create":
+                    if _id in current:
                         raise ValueError(
-                            f"bulk update: no document {_id!r}"
+                            f"bulk create: document {_id!r} already exists "
+                            "(version_conflict)"
                         )
-                elif exists:
-                    merged = {**current[_id], **doc}
-                elif body.get("doc_as_upsert"):
                     merged = doc
-                elif upsert_doc is not None:
-                    # first write: the upsert document verbatim, the
-                    # partial doc does NOT also apply (public semantics)
-                    merged = dict(upsert_doc)
+                    counts["created"] += 1
+                elif op == "index":
+                    merged = doc
+                    counts["indexed"] += 1
                 else:
-                    raise ValueError(f"bulk update: no document {_id!r}")
-                counts["updated"] += 1
-            elif op == "create":
-                if _id in current:
-                    raise ValueError(
-                        f"bulk create: document {_id!r} already exists "
-                        "(version_conflict)"
-                    )
-                merged = doc
-                counts["created"] += 1
-            elif op == "index":
-                merged = doc
-                counts["indexed"] += 1
-            else:
-                raise ValueError(f"unsupported bulk action {op!r}")
-            # overlay the in-flight image so later same-id actions in
-            # this bulk merge against THIS result, not the pre-bulk one
-            current[_id] = {
-                "_id": _id,
-                **{c: merged.get(c) for c in data_cols if c != "_id"},
-            }
-            upserts.append(
-                tuple([_id, seq] + [merged.get(c) for c in data_cols
-                                    if c != "_id"])
-            )
-
-        schema_fields = [f for f in idx.schema.fields
-                         if f.name in data_cols and f.name != "_id"]
-        schema = T.StructType(
-            [T.StructField("_id", T.StringType()),
-             T.StructField("_seq", T.LongType())] + schema_fields
-        )
-        frames = []
-        if upserts:
-            frames.append(
-                self.spark.createDataFrame(upserts, schema)
-                .withColumn("_action", F.lit("upsert"))
-            )
-        if deletes:
-            del_df = self.spark.createDataFrame(
-                deletes, "  _id string, _seq long"
-            )
-            for f in schema_fields:
-                del_df = del_df.withColumn(
-                    f.name, F.lit(None).cast(f.dataType)
+                    raise ValueError(f"unsupported bulk action {op!r}")
+                # overlay the in-flight image so later same-id actions in
+                # this bulk merge against THIS result, not the pre-bulk one
+                current[_id] = {
+                    "_id": _id,
+                    **{c: merged.get(c) for c in data_cols if c != "_id"},
+                }
+                upserts.append(
+                    tuple([_id, seq] + [merged.get(c) for c in data_cols
+                                        if c != "_id"])
                 )
-            frames.append(del_df.withColumn("_action", F.lit("delete")))
-        if not frames:
-            return {"items": 0, **counts}
-        batch = frames[0]
-        for f in frames[1:]:
-            batch = batch.unionByName(f)
-        self._merge_route(batch, route, admin=True)
-        return {"items": len(actions), **counts}
+
+            schema_fields = [f for f in idx.schema.fields
+                             if f.name in data_cols and f.name != "_id"]
+            schema = T.StructType(
+                [T.StructField("_id", T.StringType()),
+                 T.StructField("_seq", T.LongType())] + schema_fields
+            )
+            frames = []
+            if upserts:
+                frames.append(
+                    self.spark.createDataFrame(upserts, schema)
+                    .withColumn("_action", F.lit("upsert"))
+                )
+            if deletes:
+                del_df = self.spark.createDataFrame(
+                    deletes, "  _id string, _seq long"
+                )
+                for f in schema_fields:
+                    del_df = del_df.withColumn(
+                        f.name, F.lit(None).cast(f.dataType)
+                    )
+                frames.append(del_df.withColumn("_action", F.lit("delete")))
+            if not frames:
+                return {"items": 0, **counts}
+            batch = frames[0]
+            for f in frames[1:]:
+                batch = batch.unionByName(f)
+            self._merge_route(batch, route, admin=True)
+            return {"items": len(actions), **counts}

@@ -9,6 +9,14 @@ with N+1 atomically under the index's lock, so two writers in one
 process never lose each other's update (other processes are not
 serialized). Readers take no lock: a read opens the manifest once.
 
+A reader that must see one version beyond a call (a PIT, a scroll, a
+snapshot's copy) *holds* it, as Lucene's ``SnapshotDeletionPolicy``
+holds a commit point: GC of later commits and drops leaves held files on
+disk until :meth:`IndexStore.release`. Holds live in this process only;
+deleting or restoring the index removes its held files with it, a
+process that dies holding a version leaves that version's replaced files
+on disk, and :meth:`IndexStore.size` counts held files until release.
+
 Side tables use the same commit: each route's dead letters are the
 table ``dlq/<route>`` (parked by a publish, cleared by
 :meth:`IndexStore.drop`) and an async search's hits are
@@ -22,6 +30,7 @@ the settings fields folds in the ``_settings.json`` beside it (where
 
 from __future__ import annotations
 
+import collections
 import contextlib
 import json
 import os
@@ -32,13 +41,13 @@ import uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from .meta import load_json, save_json
+from .meta import load_json, path_lock, save_json
 
 MANIFEST = "_manifest.json"  # "_" keeps it invisible to parquet readers
 OLD_SETTINGS = "_settings.json"  # read only by the one-time adoption
 
-_LOCKS: dict[str, threading.RLock] = {}
-_LOCKS_GUARD = threading.Lock()
+# held versions: absolute table dir → file → how many holds list it
+_HOLDS: dict[str, collections.Counter] = {}
 
 
 def _list_files(root: str) -> dict[str, list[str]]:
@@ -76,25 +85,23 @@ def _walk(root: str) -> dict[str, str]:
             for d, _, fs in os.walk(root) for f in fs}
 
 
+def _files(m: dict) -> list[str]:
+    return [f for fs in m["files"].values() for f in fs]
+
+
 class IndexStore:
     """The indexes under one root. ``routes`` are names that exist
     before their first write (the pipeline's configured routes)."""
 
-    def __init__(self, spark, root: str, routes=(), views=None):
+    def __init__(self, spark, root: str, routes=()):
         self.spark = spark
         self.root = root
         self.routes = tuple(routes)
         # resolved frames: index dir → (files + schema, frame)
-        self._views: dict[str, tuple[str, DataFrame]] = (
-            {} if views is None else views)
+        self._views: dict[str, tuple[str, DataFrame]] = {}
 
     def path(self, name: str) -> str:
         return os.path.join(self.root, name)
-
-    def child(self, name: str) -> IndexStore:
-        """The store rooted at ``name`` (a PIT's frozen indexes),
-        sharing this store's frame cache."""
-        return IndexStore(self.spark, self.path(name), views=self._views)
 
     def exists(self, name: str) -> bool:
         return os.path.isdir(self.path(name))
@@ -102,7 +109,7 @@ class IndexStore:
     def names(self) -> list[str]:
         """Every index, sorted: the configured routes plus each
         directory under the root except "_"-prefixed side channels
-        (``_metrics``, ``_pits``, ``_staging``, ``_async``) and the
+        (``_metrics``, ``_staging``, ``_async``) and the
         ``dlq/<route>`` tables."""
         names = set(self.routes)
         if os.path.isdir(self.root):
@@ -114,9 +121,10 @@ class IndexStore:
     def lock(self, name: str) -> threading.RLock:
         """The index's write lock: one per absolute path, so every store
         (and pipeline) in the process shares it."""
-        with _LOCKS_GUARD:
-            return _LOCKS.setdefault(os.path.abspath(self.path(name)),
-                                     threading.RLock())
+        return path_lock(self.path(name))
+
+    def _held(self, name: str) -> set[str]:
+        return set(_HOLDS.get(os.path.abspath(self.path(name)), ()))
 
     def manifest(self, name: str) -> dict | None:
         """The index's manifest, or None when it was never materialized
@@ -169,7 +177,8 @@ class IndexStore:
         return df
 
     def size(self, name: str) -> int:
-        """Bytes on disk under the index's directory, every file counted."""
+        """Bytes on disk under the index's directory, every file counted
+        (held files too, until their release)."""
         return sum(map(os.path.getsize, _walk(self.path(name)).values()))
 
     def publish(self, name: str, df: DataFrame, replace=None,
@@ -194,8 +203,9 @@ class IndexStore:
         the new files, other buckets keep N's plus any new ones; the
         schema is the union of N's and ``schema``; ``n_buckets``
         defaults to N's; ``blocks`` and ``closed`` carry over. GC then
-        deletes the files only N referenced and any emptied bucket dir —
-        a reader still scanning N can race it (no version pinning)."""
+        deletes the files only N referenced, unless a hold lists them,
+        and any emptied bucket dir — a reader scanning N without a hold
+        can race it."""
         root = self.path(name)
         with self.lock(name):
             prev = self.manifest(name) or {
@@ -233,20 +243,22 @@ class IndexStore:
             })
 
             live = {f for fs in files.values() for f in fs}
-            _gc(root, {f for fs in old.values() for f in fs} - live)
+            _gc(root, {f for fs in old.values() for f in fs} - live
+                - self._held(name))
 
     def drop(self, name: str, files) -> None:
         """Publish the next version without ``files`` (root-relative, as
         a manifest lists them), under the index's lock; files committed
-        since the caller read its version stay. A table left with no
-        files loses its manifest, and its directory when nothing else is
-        in it. A missing table is a no-op."""
+        since the caller read its version stay, and held files stay on
+        disk until their release. A table left with no files loses its
+        manifest, and its directory when nothing else is in it. A
+        missing table is a no-op."""
         root = self.path(name)
         with self.lock(name):
             m = self.manifest(name)
             if m is None:
                 return
-            gone = set(files) & {f for fs in m["files"].values() for f in fs}
+            gone = set(files) & set(_files(m))
             m["files"] = {b: keep for b, fs in m["files"].items()
                           if (keep := [f for f in fs if f not in gone])}
             m["version"] += 1
@@ -254,7 +266,7 @@ class IndexStore:
                 save_json(os.path.join(root, MANIFEST), m)
             else:
                 os.remove(os.path.join(root, MANIFEST))
-            _gc(root, gone)
+            _gc(root, gone - self._held(name))
             with contextlib.suppress(OSError):  # kept while anything is in it
                 os.rmdir(root)
 
@@ -272,9 +284,34 @@ class IndexStore:
             save_json(os.path.join(self.path(name), MANIFEST), m)
             return m
 
+    def hold(self, name: str) -> dict | None:
+        """The index's manifest, read under its lock, with its files
+        held: no commit or drop deletes them until :meth:`release`.
+        None (and nothing held) when the index is not materialized.
+        Each hold needs its own release."""
+        with self.lock(name):
+            m = self.manifest(name)
+            if m is not None:
+                _HOLDS.setdefault(os.path.abspath(self.path(name)),
+                                  collections.Counter()).update(_files(m))
+            return m
+
+    def release(self, name: str, m: dict) -> None:
+        """End one :meth:`hold` of manifest ``m``, then delete the files
+        no other hold and no current manifest lists."""
+        root = self.path(name)
+        with self.lock(name):
+            held = _HOLDS.get(os.path.abspath(root))
+            if held is None:
+                return
+            held -= collections.Counter(_files(m))
+            current = load_json(os.path.join(root, MANIFEST))
+            _gc(root, set(_files(m)) - set(held)
+                - set(_files(current) if current else []))
+
     def delete(self, name: str) -> bool:
         """Remove the index's directory (False when there is none) and
-        every cached frame under it."""
+        every cached frame under it; held files go with it."""
         path = self.path(name)
         with self.lock(name):
             if not os.path.isdir(path):
@@ -286,29 +323,41 @@ class IndexStore:
         return True
 
     def mirror(self, name: str, dst: str) -> tuple[int, int]:
-        """Mirror the index's directory into ``dst`` (a snapshot's or a
-        PIT's copy), byte-identical: stale files there are removed, and
-        files whose (size, mtime_ns) match — ``copy2`` keeps both — are
-        not re-copied. Returns (copied, skipped)."""
-        src = _walk(self.path(name))
+        """Copy one version of the index into ``dst`` (a snapshot's
+        directory): the version is held for the copy, its files are
+        copied and its manifest written, then files in ``dst`` that
+        version does not list are removed. Incremental: a file whose
+        (size, mtime_ns) matches — ``copy2`` keeps both — is not
+        re-copied. Returns (copied, skipped) data-file counts; (0, 0)
+        when the index is not materialized."""
+        m = self.hold(name)
+        if m is None:
+            return 0, 0
+        try:
+            src = {f: os.path.join(self.path(name), f) for f in _files(m)}
+            copied = skipped = 0
+            for rel, spath in src.items():
+                dpath = os.path.join(dst, rel)
+                if os.path.isfile(dpath):
+                    ss, ds = os.stat(spath), os.stat(dpath)
+                    if (ss.st_size, ss.st_mtime_ns) == (ds.st_size,
+                                                        ds.st_mtime_ns):
+                        skipped += 1
+                        continue
+                os.makedirs(os.path.dirname(dpath), exist_ok=True)
+                shutil.copy2(spath, dpath)
+                copied += 1
+            os.makedirs(dst, exist_ok=True)
+            save_json(os.path.join(dst, MANIFEST), m)
+        finally:
+            self.release(name, m)
         for d, _, fs in os.walk(dst, topdown=False):
             for f in fs:
-                if os.path.relpath(os.path.join(d, f), dst) not in src:
+                rel = os.path.relpath(os.path.join(d, f), dst)
+                if rel != MANIFEST and rel not in src:
                     os.remove(os.path.join(d, f))
             if d != dst and not os.listdir(d):
                 os.rmdir(d)
-        copied = skipped = 0
-        for rel, spath in src.items():
-            dpath = os.path.join(dst, rel)
-            if os.path.isfile(dpath):
-                ss, ds = os.stat(spath), os.stat(dpath)
-                if (ss.st_size, ss.st_mtime_ns) == (ds.st_size,
-                                                    ds.st_mtime_ns):
-                    skipped += 1
-                    continue
-            os.makedirs(os.path.dirname(dpath), exist_ok=True)
-            shutil.copy2(spath, dpath)
-            copied += 1
         return copied, skipped
 
     def copy_in(self, src: str, name: str) -> None:

@@ -1,7 +1,7 @@
-"""The index store: commit, drop and GC of staged files, settings in the
-manifest, the per-route write lock, and the one-time adoption of a
-route's old ``_settings.json``. The commit and drop tests need no Spark
-session."""
+"""The index store: commit, drop and GC of staged files, held versions,
+settings in the manifest, the per-route write lock, and the one-time
+adoption of a route's old ``_settings.json``. The commit, drop and hold
+tests need no Spark session."""
 
 from __future__ import annotations
 
@@ -199,6 +199,53 @@ def test_drop_from_a_missing_table_is_a_noop(store):
     assert not os.path.exists(store.path("idx"))
 
 
+def test_held_files_survive_commit_and_drop(store):
+    _commit(store, [0, 1])
+    held = store.hold("idx")
+    assert held == store.manifest("idx")
+    store.drop("idx", held["files"]["0"])
+    m = _commit(store, [1])  # replaces the other held file
+    assert sorted(m["files"]) == ["1"]
+    assert _on_disk(store) == set(_files(held)) | set(_files(m))
+
+
+def test_release_deletes_exactly_the_files_nothing_lists_or_holds(store):
+    _commit(store, [0, 1])
+    first = store.hold("idx")
+    _commit(store, [1], replace={1})
+    second = store.hold("idx")
+    m = _commit(store, [0, 1], replace={0, 1})
+    store.release("idx", first)  # its bucket-0 file is still held
+    assert _on_disk(store) == set(_files(second)) | set(_files(m))
+    store.release("idx", second)
+    assert _on_disk(store) == set(_files(m))
+    assert store.manifest("idx") == m
+
+
+def test_two_holds_of_one_version_need_two_releases(store):
+    _commit(store, [0])
+    a, b = store.hold("idx"), store.hold("idx")
+    assert a == b
+    m = _commit(store, [0])
+    store.release("idx", a)
+    assert _on_disk(store) == set(_files(b)) | set(_files(m))
+    store.release("idx", b)
+    assert _on_disk(store) == set(_files(m))
+
+
+def test_release_after_delete_is_a_noop(store):
+    _commit(store, [0])
+    held = store.hold("idx")
+    _commit(store, [0])
+    assert store.delete("idx")
+    store.release("idx", held)
+    assert not os.path.exists(store.path("idx"))
+    # the recreated index carries no hold from before the delete
+    _commit(store, [0])
+    m = _commit(store, [0])
+    assert _on_disk(store) == set(_files(m))
+
+
 def _pipeline(spark, root):
     p = FlightsEtlPipeline(spark, PipelineConfig(
         index_root=str(root / "i"), checkpoint_root=str(root / "c")))
@@ -287,6 +334,47 @@ def test_concurrent_admin_writes_to_one_id_take_distinct_sequences(
     assert errors == [] and len(order) == 2
     rows = p.read_index("fare").filter(F.col("_id") == "race").collect()
     assert [(r["_seq"], r["pk"]) for r in rows] == [(first + 2, order[1])]
+
+
+def test_concurrent_updates_to_one_id_keep_both_fields(
+        spark, tmp_path, monkeypatch):
+    """Two partial updates of one document, on different fields, each
+    reach their staging write together. The second fetches its image
+    under the route lock, after the first commit, so the stored row
+    carries both changes."""
+    p = _pipeline(spark, tmp_path)
+    doc_id = "DEN|ATL#2021-08-01T00:01:00#nonstop"
+    barrier = threading.Barrier(2, timeout=5)
+    real = DataFrameWriter.parquet
+
+    def held(self, path, *args, **kwargs):
+        if f"{os.sep}_staging{os.sep}" in path:
+            try:
+                barrier.wait()
+            except threading.BrokenBarrierError:
+                pass  # the other writer is waiting on the route lock
+        return real(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", held)
+    errors = []
+
+    def writer(doc):
+        try:
+            p.update_doc("fare", doc_id, doc)
+        except Exception as exc:  # noqa: BLE001 — reported below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=writer, args=(d,))
+               for d in ({"origin": "AAA"}, {"dest": "BBB"})]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    doc = p.get_doc("fare", doc_id)
+    assert (doc["origin"], doc["dest"], doc["fare_class"]) == \
+        ("AAA", "BBB", "nonstop")
 
 
 def _to_old_layout(route_dir, settings):

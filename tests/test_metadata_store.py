@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import json
 import os
+import sys
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -143,3 +145,31 @@ def test_failed_metadata_write_leaves_nothing_behind(tmp_path):
     assert store.read("aliases") == {"a": "fare"}
     save_json(str(tmp_path / "status.json"), {"n": object()}, default=str)
     assert sorted(os.listdir(tmp_path)) == ["_aliases.json", "status.json"]
+
+
+def test_concurrent_registry_puts_lose_no_entry(tmp_path):
+    """More threads than cores put distinct keys into one registry:
+    every entry reaches the file."""
+    from opensearch_dynamodb_etl_cdk_spark.streaming.meta import MetaStore
+
+    store = MetaStore(str(tmp_path))
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        def work(k):
+            for i in range(50):
+                store.put("aliases", f"a{k}-{i}", "fare")
+
+        threads = [threading.Thread(target=work, args=(k,))
+                   for k in range(4)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(switch)
+    assert len(store.read("aliases")) == 200
+    for k in range(4):
+        assert store.pop("aliases", f"a{k}-0")
+    assert len(store.read("aliases")) == 196
