@@ -73,8 +73,13 @@ class MetaStore:
     def read(self, name: str) -> dict:
         return load_json(self.path(name))
 
+    def lock(self, name: str) -> threading.RLock:
+        """The registry's write lock; hold it across a read and the
+        writes that depend on it."""
+        return path_lock(self.path(name))
+
     def put(self, name: str, key: str, value) -> None:
-        with path_lock(self.path(name)):
+        with self.lock(name):
             reg = self.read(name)
             reg[key] = value
             os.makedirs(self.root, exist_ok=True)
@@ -82,7 +87,7 @@ class MetaStore:
 
     def pop(self, name: str, key: str) -> bool:
         """Remove ``key``; False, and no write, when it was absent."""
-        with path_lock(self.path(name)):
+        with self.lock(name):
             reg = self.read(name)
             if key not in reg:
                 return False

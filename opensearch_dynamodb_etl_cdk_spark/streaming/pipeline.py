@@ -1141,7 +1141,8 @@ class FlightsEtlPipeline:
         # _reindex runs with the reader's DLS/FLS/masking scope) —
         # copying originals out of a masked index would be the obvious
         # bypass channel
-        src = self._read_view(source)
+        src = self._read_view(source, lambda n: self.store.frame(
+            n, self._open_manifest(n, "reindex")))
         if src is None:
             raise ValueError(f"no such index: {source!r}")
         self._validate_set_fields(src.columns, set_fields or {}, "reindex")
@@ -1688,9 +1689,10 @@ class FlightsEtlPipeline:
         INCREMENTAL at the file level, like the public ``_snapshot``
         API is incremental at the segment level
         (:meth:`~.store.IndexStore.mirror`: only files rewritten since
-        the previous snapshot into the same directory re-copy). Per-index
-        copied/skipped counts land in ``self.last_snapshot_stats``.
-        Returns the snapshotted names. No Spark job, no re-encode."""
+        the previous snapshot into the same directory re-copy).
+        :meth:`restore` copies back the same way. Per-index copied/skipped
+        counts land in ``self.last_snapshot_stats``. Returns the
+        snapshotted names. No Spark job, no re-encode."""
         done = []
         self.last_snapshot_stats: dict[str, dict[str, int]] = {}
         for route in self.store.names():
@@ -1720,7 +1722,11 @@ class FlightsEtlPipeline:
                 rename_replacement: str | None = None) -> list[str]:
         """Restore snapshotted index tables over the live ones (the
         public restore contract: the index returns to the snapshot
-        state; writes after the snapshot are gone). Each registry the
+        state; writes after the snapshot are gone). Each index restores
+        as its next manifest version (:meth:`~.store.IndexStore.restore`):
+        only snapshot files it lacks are copied in, readers see the old
+        or the new version and never a mix, and files a PIT or scroll
+        holds stay until released. Each registry the
         snapshot carries (aliases — the ``include_aliases`` public
         default — and the rest of :data:`~.meta.REGISTRIES`) replaces
         the live one wholesale.
@@ -1771,7 +1777,7 @@ class FlightsEtlPipeline:
                         "an existing index"
                     )
         for src, dest_name in plan:
-            self.store.copy_in(src, dest_name)
+            self.store.restore(src, dest_name)
         done = [dest_name for _src, dest_name in plan]
         if renaming:
             return done
@@ -2338,9 +2344,10 @@ class FlightsEtlPipeline:
         temp views a statement can name — each configured route by its
         bare name, every index under ``index_root`` as ``<name>_index``
         (other than ``[A-Za-z0-9_]`` becomes ``_``), each alias via
-        :meth:`multi_index_view` — masked and DLS-scoped like any read,
-        and drops those closed, unreadable under the role or not
-        materialized. The statement then runs
+        :meth:`multi_index_view` — masked and DLS-scoped like any read.
+        The indexes are those :meth:`_resolve_pattern` matches for
+        ``*``; views of the others (closed, unreadable under the role)
+        and of indexes not materialized are dropped. The statement runs
         through Spark SQL — the engine's dialect is Spark's ANSI-ish
         SQL, a superset of the plugin's. The plugin's full-text
         functions are supported by textual rewrite into the SAME
@@ -2387,15 +2394,14 @@ class FlightsEtlPipeline:
                 view.createOrReplaceTempView(view_name)
 
         registered = False
+        # the wildcard's indexes; every other index's views are dropped,
+        # so no earlier call's registration leaks through
+        names, _ = self._resolve_pattern("*")
         for name in self.store.names():
-            # a closed index is unreadable on EVERY surface, and under a
-            # role only readable tables exist (the security plugin lists
-            # only permitted tables): their views are dropped, so no
-            # earlier call's registration leaks through
             view = None
-            m = self.store.manifest(name)
-            if not (m and m["closed"]) and self._role_allows("read", name):
-                view = self._read_view(name, lambda n: self.store.frame(n, m))
+            if name in names:
+                view = self._read_view(
+                    name, lambda n: self.store.frame(n, names[n]))
             register(re.sub(r"[^A-Za-z0-9_]", "_", f"{name}_index"), view)
             if name in self.cfg.routes:
                 register(name, view)
@@ -2788,9 +2794,10 @@ class FlightsEtlPipeline:
         those versions, so later merges never change a PIT reader's
         results. The id lives in this pipeline instance until
         :meth:`close_pit` (an OpenSearch PIT does not survive a cluster
-        restart either); deleting or restoring an index removes its held
-        files too. A filtered alias in the pattern raises ``ValueError``:
-        alias filters are not frozen."""
+        restart either); deleting an index removes its held files too,
+        while a restore is an ordinary publish and leaves them. A
+        filtered alias in the pattern raises ``ValueError``: alias
+        filters are not frozen."""
         names, filtered = self._resolve_pattern(pattern)
         if filtered:
             raise ValueError(
@@ -2858,9 +2865,11 @@ class FlightsEtlPipeline:
             # path separators / leading dots would nest or escape the
             # backing-index layout under index_root
             raise ValueError(f"invalid data stream name {name!r}")
-        if name in self.meta.read("data_streams"):
-            raise ValueError(f"data stream {name!r} already exists")
-        self.meta.put("data_streams", name, {"generation": 1, "next_seq": 0})
+        with self.meta.lock("data_streams"):
+            if name in self.meta.read("data_streams"):
+                raise ValueError(f"data stream {name!r} already exists")
+            self.meta.put("data_streams", name,
+                          {"generation": 1, "next_seq": 0})
         return {"acknowledged": True}
 
     def data_stream_append(self, name: str, docs: list[dict]) -> int:
@@ -2870,46 +2879,51 @@ class FlightsEtlPipeline:
         append-only contract is exactly what makes data streams cheap:
         rollover bounds any file-count growth per generation). ``_id``s
         are synthesized from a persisted monotonic sequence."""
-        meta = self.meta.get("data_streams", name)
-        if not docs:
-            return 0
-        for d in docs:
-            if "@timestamp" not in d:
-                raise ValueError(
-                    "data stream documents must carry @timestamp"
-                )
-        gen = meta["generation"]
-        base = meta["next_seq"]
-        backing = self._ds_backing(name, gen)
-        rows = [
-            {"_id": f"{name}-{base + i}",
-             **{k: v for k, v in d.items()}}
-            for i, d in enumerate(docs)
-        ]
-        df = self.spark.createDataFrame(rows)
-        df = df.withColumn(
-            "@timestamp", F.col("`@timestamp`").cast("timestamp")
-        )
-        existing = self.read_index(backing)
-        if existing is not None:
-            missing = set(existing.columns) ^ set(df.columns)
-            if missing:
-                raise ValueError(
-                    f"data stream append schema drift: {sorted(missing)}"
-                )
-            df = df.select(*existing.columns)
-        self.store.publish(backing, df, replace=())
-        self.meta.put("data_streams", name,
-                      {**meta, "next_seq": base + len(docs)})
+        # one registry lock hold from the sequence read to its put: a
+        # concurrent append or rollover waits instead of reusing it
+        with self.meta.lock("data_streams"):
+            meta = self.meta.get("data_streams", name)
+            if not docs:
+                return 0
+            for d in docs:
+                if "@timestamp" not in d:
+                    raise ValueError(
+                        "data stream documents must carry @timestamp"
+                    )
+            gen = meta["generation"]
+            base = meta["next_seq"]
+            backing = self._ds_backing(name, gen)
+            rows = [
+                {"_id": f"{name}-{base + i}",
+                 **{k: v for k, v in d.items()}}
+                for i, d in enumerate(docs)
+            ]
+            df = self.spark.createDataFrame(rows)
+            df = df.withColumn(
+                "@timestamp", F.col("`@timestamp`").cast("timestamp")
+            )
+            existing = self.read_index(backing)
+            if existing is not None:
+                missing = set(existing.columns) ^ set(df.columns)
+                if missing:
+                    raise ValueError(
+                        f"data stream append schema drift: {sorted(missing)}"
+                    )
+                df = df.select(*existing.columns)
+            self.store.publish(backing, df, replace=())
+            self.meta.put("data_streams", name,
+                          {**meta, "next_seq": base + len(docs)})
         return len(docs)
 
     def rollover_data_stream(self, name: str) -> dict:
         """``POST /<stream>/_rollover``: bump the write generation; the
         next append materializes the new backing index. Old generations
         stay readable through the stream's search pattern."""
-        meta = self.meta.get("data_streams", name)
-        old = meta["generation"]
-        self.meta.put("data_streams", name, {**meta, "generation": old + 1})
+        with self.meta.lock("data_streams"):
+            meta = self.meta.get("data_streams", name)
+            old = meta["generation"]
+            self.meta.put("data_streams", name,
+                          {**meta, "generation": old + 1})
         return {"rolled_over": True,
                 "old_index": self._ds_backing(name, old),
                 "new_index": self._ds_backing(name, old + 1)}

@@ -5,6 +5,7 @@ tests need no Spark session."""
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import sys
@@ -246,6 +247,53 @@ def test_release_after_delete_is_a_noop(store):
     assert _on_disk(store) == set(_files(m))
 
 
+
+@pytest.fixture()
+def snap(tmp_path_factory):
+    return str(tmp_path_factory.mktemp("snap") / "idx")
+
+
+def _inodes(store, m):
+    return {f: os.stat(os.path.join(store.path("idx"), f)).st_ino
+            for f in _files(m)}
+
+
+def test_restore_publishes_the_snapshots_files_as_the_next_version(
+        store, snap):
+    first = _commit(store, [0, 1])
+    store.update("idx", lambda m: m.update(blocks=["write"]))
+    store.mirror("idx", snap)
+    _commit(store, [1, 2])
+    store.update("idx", lambda m: m.update(blocks=[], closed=True))
+    m = store.restore(snap, "idx")
+    assert m["version"] == 5 and m["files"] == first["files"]
+    assert m["blocks"] == ["write"] and not m["closed"]
+    assert store.manifest("idx") == m
+    assert _on_disk(store) == set(_files(first))
+
+
+def test_restore_deletes_the_replaced_files_except_held_ones(store, snap):
+    first = _commit(store, [0, 1])
+    store.mirror("idx", snap)
+    held = _commit(store, [0, 1])
+    assert store.hold("idx") == held
+    _commit(store, [1], replace={1})
+    store.restore(snap, "idx")
+    assert _on_disk(store) == set(_files(first)) | set(_files(held))
+    store.release("idx", held)
+    assert _on_disk(store) == set(_files(first))
+
+
+def test_restoring_an_unchanged_snapshot_copies_no_file(store, snap):
+    m = _commit(store, [0, 1, 2])
+    store.mirror("idx", snap)
+    before = _inodes(store, m)
+    restored = store.restore(snap, "idx")
+    assert restored["version"] == m["version"] + 1
+    assert restored["files"] == m["files"]
+    assert _inodes(store, restored) == before
+    assert _on_disk(store) == set(_files(m))
+
 def _pipeline(spark, root):
     p = FlightsEtlPipeline(spark, PipelineConfig(
         index_root=str(root / "i"), checkpoint_root=str(root / "c")))
@@ -416,3 +464,30 @@ def test_restored_old_snapshot_keeps_its_settings(spark, tmp_path):
                    {"blocks": ["write"], "closed": True})
     assert p.restore(snap, "fare") == ["fare"]
     _assert_adopted(p, p.store.path("fare"))
+
+
+def _tree_digest(root):
+    h = hashlib.sha256()
+    for d, _, fs in sorted(os.walk(root)):
+        for fn in sorted(fs):
+            h.update(os.path.relpath(os.path.join(d, fn), root).encode())
+            with open(os.path.join(d, fn), "rb") as f:
+                h.update(f.read())
+    return h.hexdigest()
+
+
+@pytest.mark.parametrize("layout", ["settings_file", "no_manifest"])
+def test_restoring_an_old_snapshot_writes_nothing_into_it(
+        spark, tmp_path, layout):
+    p = _pipeline(spark, tmp_path)
+    snap = str(tmp_path / "snap")
+    p.snapshot(snap, "fare")
+    src = os.path.join(snap, "fare")
+    if layout == "settings_file":
+        _to_old_layout(src, {"blocks": ["write"]})
+    else:
+        os.remove(os.path.join(src, MANIFEST))
+    before = _tree_digest(snap)
+    assert p.restore(snap, "fare") == ["fare"]
+    assert _tree_digest(snap) == before
+    assert p.count("fare") == 22

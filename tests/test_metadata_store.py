@@ -11,6 +11,7 @@ import threading
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.readwriter import DataFrameWriter
 
 from opensearch_dynamodb_etl_cdk_spark.sources.fixture_gen import gen_corpus
 from opensearch_dynamodb_etl_cdk_spark.streaming.pipeline import (
@@ -72,6 +73,48 @@ def test_data_stream_survives_snapshot_delete_restore(spark, tmp_path):
            p.search_data_stream("logs", {})["hits"].collect()]
     assert sorted(ids) == ["logs-0", "logs-1", "logs-2"]
 
+
+
+def test_concurrent_appends_to_one_stream_take_distinct_ids(
+        spark, tmp_path, monkeypatch):
+    """Two appends to one data stream each reach their staging write
+    together. The second reads the stream's sequence under the registry
+    lock, after the first put, so no ``_id`` repeats."""
+    p = _pipeline(spark, tmp_path)
+    p.create_data_stream("logs")
+    barrier = threading.Barrier(2, timeout=5)
+    real = DataFrameWriter.parquet
+
+    def held(self, path, *args, **kwargs):
+        if f"{os.sep}_staging{os.sep}" in path:
+            try:
+                barrier.wait()
+            except threading.BrokenBarrierError:
+                pass  # the other append is waiting on the registry lock
+        return real(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", held)
+    errors = []
+
+    def writer(tag):
+        try:
+            p.data_stream_append("logs", [
+                {"@timestamp": "2026-01-01T00:00:00", "msg": f"{tag}{i}"}
+                for i in range(5)])
+        except Exception as exc:  # noqa: BLE001 — reported below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=writer, args=(t,)) for t in "AB"]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    ids = [r["_id"] for r in
+           p.search_data_stream("logs", {"size": 100})["hits"].collect()]
+    assert len(ids) == len(set(ids)) == 10
+    assert p.meta.get("data_streams", "logs")["next_seq"] == 10
 
 def test_bucket_count_lives_in_the_manifest(spark, tmp_path):
     p = _pipeline(spark, tmp_path / "split", n_buckets=4)

@@ -6,6 +6,8 @@ disk at exactly the manifests' files once they end."""
 from __future__ import annotations
 
 import os
+import threading
+import time
 
 import pytest
 
@@ -105,7 +107,66 @@ def test_snapshot_copies_only_the_manifests_files(p, tmp_path):
     assert _files_on_disk(os.path.join(snap, "fare")) == \
         {f for fs in m["files"].values() for f in fs} | {MANIFEST}
     assert p.restore(snap, "fare") == ["fare"]
-    # the restore replaced the held files; closing the PIT is a no-op
+    # the restore left the held files; closing the PIT deletes them
     assert p.close_pit(pit)
     assert _outside_manifests(p) == set()
     assert p.count("fare") == FARES
+
+
+def test_counts_while_a_snapshot_is_restored_never_fail(p, tmp_path):
+    """One thread counts in a loop while the main thread restores an
+    unchanged snapshot over and over: a restore is one manifest
+    publish, so no read sees a missing file or an empty index."""
+    snap = str(tmp_path / "snap")
+    p.snapshot(snap, "fare")
+    stop = threading.Event()
+    seen = []
+
+    def reader():
+        while not stop.is_set():
+            try:
+                seen.append(p.count("fare"))
+            except Exception as exc:  # noqa: BLE001 — asserted below
+                seen.append(exc)
+
+    t = threading.Thread(target=reader)
+    t.start()
+    try:
+        deadline = time.monotonic() + 8
+        while time.monotonic() < deadline:
+            p.restore(snap, "fare")
+            time.sleep(0.05)
+    finally:
+        stop.set()
+        t.join(timeout=60)
+    assert not t.is_alive() and seen
+    assert [x for x in seen if x != FARES] == []
+
+
+def test_restore_publishes_the_next_version(p, tmp_path):
+    snap = str(tmp_path / "snap")
+    p.snapshot(snap, "fare")
+    _replace_every_fare_file(p)
+    v = p.store.manifest("fare")["version"]
+    assert p.restore(snap, "fare") == ["fare"]
+    assert p.store.manifest("fare")["version"] == v + 1
+    assert p.count("fare") == FARES
+    assert _outside_manifests(p) == set()
+
+
+def test_pit_keeps_its_version_across_a_restore(p, tmp_path):
+    """An update rewrites one bucket file; a PIT opened after it holds
+    that file, which the restore then replaces."""
+    doc_id = "DEN|ATL#2021-08-01T00:01:00#nonstop"
+    snap = str(tmp_path / "snap")
+    p.snapshot(snap, "fare")
+    p.update_doc("fare", doc_id, {"origin": "AAA"})
+    pit = p.open_pit("fare")
+    p.restore(snap, "fare")
+    assert p.get_doc("fare", doc_id)["origin"] != "AAA"
+    hits = p.search_pit(pit, {"size": 100})["hits"].collect()
+    assert len(hits) == FARES
+    assert [r["origin"] for r in hits if r["_id"] == doc_id] == ["AAA"]
+    assert _outside_manifests(p)
+    assert p.close_pit(pit)
+    assert _outside_manifests(p) == set()

@@ -66,6 +66,16 @@ def test_sql_drops_view_of_closed_index(p):
     assert _sql_count(p, "fare_index") == FARES
 
 
+
+def test_reindex_refuses_a_closed_source(p):
+    p.close_index("fare")
+    try:
+        with pytest.raises(PermissionError, match="closed"):
+            p.reindex("fare", "fare_closed_copy")
+    finally:
+        p.open_index("fare")
+    assert not p.store.exists("fare_closed_copy")
+
 def test_sql_view_follows_masking_added_later(p):
     p.search("fare_copy", {"size": 1})
     p.put_field_masking("fare_copy", ["origin"], mode="redact")
