@@ -57,7 +57,7 @@ from pyspark.sql import types as T
 from ..functions.ddb import parse_item, unmarshal
 from ..functions.scripts import safe_expr
 from ..operators.routing import UNROUTED, Router, type_route
-from ..operators.upsert import apply_cdc_batch, derive_action, latest_by_key
+from ..operators.upsert import apply_cdc_batch, derive_action
 from ..sources.flights import ALIASES, SUPERSET_ATTRS
 from .meta import REGISTRIES, MetaStore, load_json, save_json
 from .store import IndexStore
@@ -230,14 +230,33 @@ def _field_mapping(dt) -> dict:
     return {"type": _SCALAR_TYPES.get(s, "keyword")}
 
 
-def _resolved_names(resolved) -> list[str]:
-    """Every index name in a :meth:`FlightsEtlPipeline._resolve_pattern`
-    result, filtered-alias members included, first-seen order."""
+def _resolved_names(resolved) -> dict:
+    """Every index in a :meth:`FlightsEtlPipeline._resolve_pattern`
+    result → its manifest, filtered-alias members included, first-seen
+    order."""
     names, filtered = resolved
-    out = list(names)
+    out = dict(names)
     for _flt, sub in filtered:
-        out += [n for n in _resolved_names(sub) if n not in out]
+        for n, m in _resolved_names(sub).items():
+            out.setdefault(n, m)
     return out
+
+
+def _short_aggs(node):
+    """A body or aggregation spec with ``aggregations`` (the public long
+    spelling) renamed to ``aggs`` at every level of its aggregation
+    tree: the interpreter reads only ``aggs``."""
+    if not isinstance(node, dict):
+        return node
+    if "aggregations" in node:
+        if "aggs" in node:
+            raise ValueError("give 'aggs' or 'aggregations', not both")
+        node = {"aggs" if k == "aggregations" else k: v
+                for k, v in node.items()}
+    if not isinstance(node.get("aggs"), dict):
+        return node
+    return {**node, "aggs": {n: _short_aggs(s)
+                             for n, s in node["aggs"].items()}}
 
 
 class FlightsEtlPipeline:
@@ -265,8 +284,8 @@ class FlightsEtlPipeline:
         self.meta = MetaStore(config.index_root)
         self.store = IndexStore(spark, config.index_root, config.routes)
         # open PITs and scroll cursors, each with the index versions it
-        # holds (index name → manifest); they live in this instance only
-        self._pits: dict[str, dict] = {}
+        # holds (a _hold resolution); they live in this instance only
+        self._pits: dict[str, tuple] = {}
         self._scrolls: dict[str, dict] = {}
 
     # -- shared transform (one code path for bootstrap and tail, ST2) -------
@@ -741,17 +760,18 @@ class FlightsEtlPipeline:
         engine's authority like the public plugin's system reads, so a
         write-only role can ingest. No side effect: only :meth:`sql`
         registers SQL views."""
-        return self._live(route, self.read_index, _system)
+        return self._live(route, self.store.manifest(route), _system)
 
-    def _live(self, name: str, read, system: bool = False):
-        """:meth:`index_view` over ``read(name)``."""
+    def _live(self, name: str, m: dict | None, system: bool = False):
+        """:meth:`index_view` over manifest ``m`` of index ``name``; None
+        (after the role check) when ``m`` is None."""
         dls = None
         if not system:
             self._check_role("read", name)
             dls = self._active_dls_query(name)
-        df = read(name)
-        if df is None:
+        if m is None:
             return None
+        df = self.store.frame(name, m)
         if "_deleted" in df.columns:
             df = df.filter(~F.col("_deleted")).drop("_deleted")
         if dls is not None:
@@ -764,26 +784,26 @@ class FlightsEtlPipeline:
             df = df.filter(compile_query(dls))
         return df
 
-    def _read_view(self, name: str, read=None) -> DataFrame | None:
+    def _read_view(self, name: str, m: dict | None) -> DataFrame | None:
         """The per-index step of every public read: :meth:`index_view`
-        over ``read`` (default :meth:`read_index`; a PIT or scroll
-        passes its held versions), then field masking."""
-        return self._apply_field_masking(
-            self._live(name, read or self.read_index), name)
+        over manifest ``m`` (a resolved version, or one a PIT or scroll
+        holds), then field masking."""
+        return self._apply_field_masking(self._live(name, m), name)
 
     def count(self, pattern: str, query: dict | None = None) -> int:
         """``GET /<index>/_count`` analog: documents matching a DSL
         query body across an index pattern (aliases and wildcards
-        resolve as in :meth:`multi_index_view`). The predicate pushes
-        into each route's scan; the count aggregate is map-side
-        partial — no document ever leaves the executors."""
+        resolve as in :meth:`multi_index_view`; lookups and stored
+        scripts as in :meth:`search`). The predicate pushes into each
+        route's scan; the count aggregate is map-side partial — no
+        document ever leaves the executors."""
         from ..operators.search import compile_query
 
         view = self.multi_index_view(pattern)
         if view is None:
             return 0
         q = (query or {}).get("query", query) or {"match_all": {}}
-        return view.filter(compile_query(q)).count()
+        return view.filter(compile_query(self._resolve_refs(q))).count()
 
     # -- single-document CRUD (thin wrappers over bulk/mget: same LWW
     # merge path, same admin-sequence semantics) ----------------------------
@@ -818,8 +838,7 @@ class FlightsEtlPipeline:
         layout means only matching buckets' row groups survive
         min/max pruning). Missing ids are simply absent, as the public
         response marks them found=false."""
-        m = self._open_manifest(route, "mget")
-        idx = self._read_view(route, lambda n: self.store.frame(n, m))
+        idx = self._read_view(route, self._open_manifest(route, "mget"))
         if idx is None:
             return None
         return idx.filter(F.col("_id").isin(list(ids)))
@@ -904,7 +923,7 @@ class FlightsEtlPipeline:
         yet bootstrapped — the operational liveness answer, one cheap
         listing + counts."""
         live = [n for n in self.store.names()
-                if self.read_index(n) is not None]
+                if self.store.manifest(n) is not None]
         status = "green" if set(self.cfg.routes) <= set(live) else "yellow"
         return {
             "status": status,
@@ -1141,8 +1160,8 @@ class FlightsEtlPipeline:
         # _reindex runs with the reader's DLS/FLS/masking scope) —
         # copying originals out of a masked index would be the obvious
         # bypass channel
-        src = self._read_view(source, lambda n: self.store.frame(
-            n, self._open_manifest(n, "reindex")))
+        src = self._read_view(source,
+                              self._open_manifest(source, "reindex"))
         if src is None:
             raise ValueError(f"no such index: {source!r}")
         self._validate_set_fields(src.columns, set_fields or {}, "reindex")
@@ -1591,32 +1610,6 @@ class FlightsEtlPipeline:
         # surface later as an unresolvable column in the analyzer
         return self._substitute_params(source, params)
 
-    def _resolve_stored_scripts(self, body: dict) -> dict:
-        """Search-body walk (same shape as the terms-lookup resolver):
-        every ``"script"``-keyed dict carrying an ``id`` (and no
-        inline ``source``) is replaced by its resolved source before
-        the body reaches the interpreter, so stored scripts work
-        anywhere an inline script does — script query, script_fields,
-        script_score, rescore — without the interpreter knowing the
-        registry exists."""
-        def walk(node):
-            if isinstance(node, list):
-                return [walk(x) for x in node]
-            if not isinstance(node, dict):
-                return node
-            out = {}
-            for k, v in node.items():
-                if (
-                    k == "script" and isinstance(v, dict)
-                    and "id" in v and "source" not in v
-                ):
-                    out[k] = {"source": self.resolve_script(v)}
-                else:
-                    out[k] = walk(v)
-            return out
-
-        return walk(body)
-
     # -- index templates ----------------------------------------------------
 
     def put_index_template(self, name: str, body: dict) -> dict:
@@ -1797,7 +1790,8 @@ class FlightsEtlPipeline:
     #    read funnels through index_view and every mutating surface
     #    through _check_write_block, so one check each covers
     #    search/count/mget/sql/ppl/msearch/reindex-source (reads) and
-    #    bulk/delete_by_query/update_by_query/reindex-dest (writes).
+    #    bulk/delete_by_query/update_by_query/reindex-dest/
+    #    data_stream_append (writes).
     #    Admin/maintenance ops (snapshots, aliases, role CRUD) stay
     #    unscoped — this models DATA access, like the reference's
     #    policies. No active role = the admin caller (everything
@@ -2054,16 +2048,15 @@ class FlightsEtlPipeline:
             )
         return df
 
-    def _reject_masked_aggs(self, body: dict, names) -> None:
+    def _reject_masked_aggs(self, body: dict, resolve) -> None:
         """Aggregating a masked field enumerates its values: reject it.
-        ``names()`` (the indexes read) runs only when an aggregation
-        names a field some policy masks."""
-        refs = _agg_field_refs(
-            body.get("aggs") or body.get("aggregations") or {})
+        ``resolve()`` (the resolution read) runs only when an
+        aggregation names a field some policy masks."""
+        refs = _agg_field_refs(body.get("aggs") or {})
         reg = self.get_field_masking() if refs else {}
         if not refs & {f for p in reg.values() for f in p.get("fields", [])}:
             return
-        bad = sorted(refs & {f for n in names()
+        bad = sorted(refs & {f for n in _resolved_names(resolve())
                              for f in reg.get(n, {}).get("fields", [])})
         if bad:
             raise ValueError(
@@ -2123,19 +2116,18 @@ class FlightsEtlPipeline:
 
         return expand(pattern, ())
 
-    def _union(self, resolved: tuple, read=None) -> DataFrame | None:
-        """A :meth:`_resolve_pattern` result as one frame: each index
-        through :meth:`_read_view` plus an ``_index`` column, then each
-        filtered alias's own union, filtered; unioned by name (missing
-        columns null)."""
+    def _union(self, resolved: tuple) -> DataFrame | None:
+        """A :meth:`_resolve_pattern` result (or a :meth:`_hold` of one)
+        as one frame: each index's manifest through :meth:`_read_view`
+        plus an ``_index`` column, then each filtered alias's own union,
+        filtered; unioned by name (missing columns null)."""
         from ..operators.search import compile_query
 
         names, filtered = resolved
-        get = read or (lambda n: self.store.frame(n, names[n]))
-        frames = [df.withColumn("_index", F.lit(n)) for n in names
-                  if (df := self._read_view(n, get)) is not None]
+        frames = [df.withColumn("_index", F.lit(n)) for n, m in names.items()
+                  if (df := self._read_view(n, m)) is not None]
         frames += [df.filter(compile_query(flt)) for flt, sub in filtered
-                   if (df := self._union(sub, read)) is not None]
+                   if (df := self._union(sub)) is not None]
         out: DataFrame | None = None
         for df in frames:
             out = df if out is None else out.unionByName(
@@ -2163,8 +2155,8 @@ class FlightsEtlPipeline:
                search_pipeline: str | dict | None = None) -> dict:
         """``GET /<pattern>/_search`` analog: resolve the index pattern
         (aliases/wildcards, per :meth:`multi_index_view`) and run the
-        DSL body through the interpreter. Hits stay a distributed
-        frame; per-route predicates still push into each scan.
+        DSL body, after :meth:`_request`, through the interpreter. Hits
+        stay a distributed frame; predicates push into each scan.
 
         ``search_pipeline`` (id or inline dict, the public
         ``?search_pipeline=`` parameter) attaches a registered search
@@ -2175,22 +2167,26 @@ class FlightsEtlPipeline:
         view = self.multi_index_view(pattern)
         if view is None:
             return {"hits": None, "aggregations": {}}
-        body = self._resolve_terms_lookup(body or {})
-        body = self._resolve_stored_scripts(body)
+        return execute_search(view, self._request(
+            body, lambda: self._resolve_pattern(pattern), search_pipeline))
+
+    def _request(self, body: dict | None, resolve,
+                 search_pipeline: str | dict | None = None) -> dict:
+        """The one request step of :meth:`search`, :meth:`search_pit`
+        and :meth:`create_scroll`, returning a new body:
+        :meth:`_resolve_refs`, the search pipeline attached,
+        ``aggregations`` spelled ``aggs``, then masked-field aggs
+        rejected on this FINAL body, so no earlier step can add one
+        past the check. ``resolve()`` gives the resolution read."""
+        body = self._resolve_refs(body or {})
         if search_pipeline is not None:
-            body = dict(body)
             body["search_pipeline"] = (
                 search_pipeline if isinstance(search_pipeline, dict)
                 else self.get_search_pipeline(search_pipeline)
             )
-        # The masked-field agg rejection runs on the FINAL body — after
-        # terms-lookup/stored-script resolution and search-pipeline
-        # attachment — so an agg spec introduced by those steps cannot
-        # bypass it. (The only supported request processor,
-        # filter_query, cannot add aggs.)
-        self._reject_masked_aggs(
-            body, lambda: _resolved_names(self._resolve_pattern(pattern)))
-        return execute_search(view, body)
+        body = _short_aggs(body)
+        self._reject_masked_aggs(body, resolve)
+        return body
 
     # -- search pipelines ---------------------------------------------------
 
@@ -2248,29 +2244,26 @@ class FlightsEtlPipeline:
     def delete_search_pipeline(self, pipeline_id: str) -> bool:
         return self.meta.pop("search_pipelines", pipeline_id)
 
-    def _resolve_terms_lookup(self, body: dict) -> dict:
-        """Terms-lookup pre-resolve: a ``terms`` query whose spec is
+    def _resolve_refs(self, body: dict) -> dict:
+        """The coordinator-side rewrite of a DSL body, one walk over the
+        whole tree into a new one: a ``terms`` query whose field spec is
         ``{"index", "id", "path"}`` fetches that ONE document (bounded
-        mget, never a scan) and inlines its ``path`` value(s) as the
-        terms list — the coordinator-side resolution the public API
-        performs before fanning the query out. Walks the whole body so
-        lookups nest under bool/dis_max/function_score like any other
-        clause."""
+        mget) and inlines its ``path`` value(s) as the terms list; a
+        ``"script"``-keyed dict with an ``id`` and no ``source`` becomes
+        its stored source (:meth:`resolve_script`). So lookups and
+        stored scripts work anywhere inline ones do, nested under
+        bool/dis_max/function_score, script_fields or rescore."""
         def walk(node):
             if isinstance(node, list):
                 return [walk(x) for x in node]
             if not isinstance(node, dict):
                 return node
-            if len(node) == 1 and "terms" in node \
-                    and isinstance(node["terms"], dict):
+            if len(node) == 1 and isinstance(node.get("terms"), dict):
                 spec = node["terms"]
-                lookup_fields = [
-                    f for f, v in spec.items()
-                    if isinstance(v, dict) and {"index", "id", "path"}
-                    <= set(v)
-                ]
-                if lookup_fields:
-                    (field,) = lookup_fields
+                lookups = [f for f, v in spec.items() if isinstance(v, dict)
+                           and {"index", "id", "path"} <= set(v)]
+                if lookups:
+                    (field,) = lookups
                     lk = spec[field]
                     got = self.mget(lk["index"], [str(lk["id"])])
                     # bounded: mget of ONE lookup id — at most one row
@@ -2281,10 +2274,12 @@ class FlightsEtlPipeline:
                             f"in {lk['index']!r}"
                         )
                     val = rows[0][lk["path"]]
-                    values = (list(val) if isinstance(val, (list, tuple))
-                              else [val])
-                    return {"terms": {field: values}}
-            return {k: walk(v) for k, v in node.items()}
+                    return {"terms": {field: list(val) if isinstance(
+                        val, (list, tuple)) else [val]}}
+            return {k: {"source": self.resolve_script(v)}
+                    if k == "script" and isinstance(v, dict)
+                    and "id" in v and "source" not in v else walk(v)
+                    for k, v in node.items()}
 
         return walk(body)
 
@@ -2325,18 +2320,11 @@ class FlightsEtlPipeline:
         self, requests: list[tuple[str, dict, dict]]
     ) -> list[dict]:
         """``_msearch/template`` analog: each entry is (index pattern,
-        template, params) — render then run through :meth:`search`,
-        results in request order (the multi-search contract). Templates
-        may be inline or stored-by-id."""
-        from ..operators.search import render_search_template
-
-        out = []
-        for pattern, template, params in requests:
-            body = render_search_template(
-                self._template_source(template), params
-            )
-            out.append(self.search(pattern, body))
-        return out
+        template, params) — :meth:`render_template` then
+        :meth:`search`, results in request order (the multi-search
+        contract). Templates may be inline or stored-by-id."""
+        return [self.search(pattern, self.render_template(template, params))
+                for pattern, template, params in requests]
 
     def sql(self, query: str) -> DataFrame:
         """``POST /_plugins/_sql`` analog: read-only SQL over the live
@@ -2400,8 +2388,7 @@ class FlightsEtlPipeline:
         for name in self.store.names():
             view = None
             if name in names:
-                view = self._read_view(
-                    name, lambda n: self.store.frame(n, names[n]))
+                view = self._read_view(name, names[name])
             register(re.sub(r"[^A-Za-z0-9_]", "_", f"{name}_index"), view)
             if name in self.cfg.routes:
                 register(name, view)
@@ -2613,6 +2600,9 @@ class FlightsEtlPipeline:
         at the scan). The sort defaults to `_id asc` (a unique key) so
         the cursor is total. Returns (scroll_id, first page frame).
 
+        The body goes through :meth:`_request` once, here; pages return
+        hits only, so it keeps no ``aggs`` or ``suggest``.
+
         Like OpenSearch's scroll context, the cursor reads one point in
         time: the pattern resolves once and each index's current
         version is held (:meth:`~.store.IndexStore.hold`), so merges
@@ -2620,26 +2610,23 @@ class FlightsEtlPipeline:
         apply as they are when each page runs. The holds end when the
         scan is exhausted or at :meth:`clear_scroll`; the cursor lives
         in this pipeline instance only."""
-        body = dict(body or {})
+        resolved = self._resolve_pattern(pattern)
+        body = self._request(body, lambda: resolved)
         body.setdefault("sort", [{"_id": {"order": "asc"}}])
         body["size"] = int(size)
-        body.pop("from", None)
-        resolved = self._resolve_pattern(pattern)
+        for key in ("from", "aggs", "suggest"):
+            body.pop(key, None)
         sid = uuid.uuid4().hex
-        self._scrolls[sid] = {"resolved": resolved, "body": body,
-                              "held": self._hold(resolved)}
+        self._scrolls[sid] = {"body": body, "held": self._hold(resolved)}
         return sid, self._scroll_page(sid, after=None)
 
     def _scroll_page(self, sid: str, after) -> DataFrame | None:
         from ..operators.search import _sort_fields, execute_search
 
         st = self._scrolls[sid]
-        body = dict(st["body"])
-        if after is not None:
-            body["search_after"] = after
-        held = st["held"]
-        view = self._union(st["resolved"], lambda n: (
-            self.store.frame(n, held[n]) if n in held else None))
+        body = st["body"] if after is None else {
+            **st["body"], "search_after": after}
+        view = self._union(st["held"])
         if view is None:
             return None
         page = execute_search(view, body)["hits"]
@@ -2671,22 +2658,26 @@ class FlightsEtlPipeline:
         st = self._scrolls.pop(scroll_id, None)
         if st is None:
             return False
-        self._release(st.get("held", {}))
+        if "held" in st:
+            self._release(st["held"])
         return True
 
-    def _hold(self, resolved: tuple) -> dict:
-        """Hold the current version of every materialized index a
-        :meth:`_resolve_pattern` result reads, filtered aliases'
-        included: index name → held manifest."""
-        def names(res):
-            return [*res[0], *(n for _, sub in res[1] for n in names(sub))]
+    def _hold(self, resolved: tuple) -> tuple:
+        """A :meth:`_resolve_pattern` result with each index's current
+        version held (:meth:`~.store.IndexStore.hold`) in place of its
+        manifest, filtered aliases' included; None where the index is
+        not materialized. :meth:`_release` ends the holds."""
+        names, filtered = resolved
+        return ({n: self.store.hold(n) for n in names},
+                [(flt, self._hold(sub)) for flt, sub in filtered])
 
-        return {n: m for n in dict.fromkeys(names(resolved))
-                if (m := self.store.hold(n))}
-
-    def _release(self, held: dict) -> None:
-        for n, m in held.items():
-            self.store.release(n, m)
+    def _release(self, held: tuple) -> None:
+        names, filtered = held
+        for n, m in names.items():
+            if m is not None:
+                self.store.release(n, m)
+        for _flt, sub in filtered:
+            self._release(sub)
 
     def terms_enum(
         self,
@@ -2752,10 +2743,11 @@ class FlightsEtlPipeline:
         the index list per type so type CONFLICTS across indices are
         visible exactly as the public response shapes them. Pure schema
         metadata: no data is read."""
-        names = sorted(_resolved_names(self._resolve_pattern(pattern)))
+        resolved = _resolved_names(self._resolve_pattern(pattern))
+        names = sorted(resolved)
         fields: dict[str, dict[str, dict]] = {}
         for idx_name in names:
-            df = self.index_view(idx_name)
+            df = self._live(idx_name, resolved[idx_name])
             if df is None:
                 continue
             for f in df.schema.fields:
@@ -2803,15 +2795,15 @@ class FlightsEtlPipeline:
             raise ValueError(
                 f"open_pit: {pattern!r} names a filtered alias, which a "
                 "point-in-time view cannot freeze")
-        held = self._hold((names, []))
-        if not held:
+        names = {n: m for n, m in names.items() if m is not None}
+        if not names:
             raise ValueError(f"pattern {pattern!r} matches no index")
         pit_id = uuid.uuid4().hex
-        self._pits[pit_id] = held
+        self._pits[pit_id] = self._hold((names, []))
         return pit_id
 
-    def _pit(self, pit_id: str) -> dict:
-        """A PIT's held versions: index name → manifest."""
+    def _pit(self, pit_id: str) -> tuple:
+        """A PIT's held resolution (:meth:`_hold`)."""
         if pit_id not in self._pits:
             raise ValueError(f"no such pit {pit_id!r}")
         return self._pits[pit_id]
@@ -2822,21 +2814,20 @@ class FlightsEtlPipeline:
         tombstone drop, masking, ``_index``) over the held versions.
         Only the data is frozen: role and masking apply as they are
         at search time."""
-        return self._union((self._pit(pit_id), []))
+        return self._union(self._pit(pit_id))
 
     def search_pit(self, pit_id: str, body: dict | None = None) -> dict:
         """``_search`` with a ``pit`` id: the DSL body runs against the
-        frozen view — repeatable pages under a changing live index.
-        Aggregations on masked fields are rejected, as in
-        :meth:`search`."""
+        frozen view — repeatable pages under a changing live index. The
+        body goes through :meth:`search`'s :meth:`_request` step (no
+        search pipeline)."""
         from ..operators.search import execute_search
 
-        view = self.pit_view(pit_id)
+        held = self._pit(pit_id)
+        view = self._union(held)
         if view is None:
             return {"hits": None, "aggregations": {}}
-        body = body or {}
-        self._reject_masked_aggs(body, self._pit(pit_id).keys)
-        return execute_search(view, body)
+        return execute_search(view, self._request(body, lambda: held))
 
     def close_pit(self, pit_id: str) -> bool:
         """``DELETE /_pit`` analog: release the PIT's held versions;
@@ -2878,7 +2869,8 @@ class FlightsEtlPipeline:
         index — a plain parquet append, no merge, no shuffle (the
         append-only contract is exactly what makes data streams cheap:
         rollover bounds any file-count growth per generation). ``_id``s
-        are synthesized from a persisted monotonic sequence."""
+        are synthesized from a persisted monotonic sequence. Gated like
+        every write (:meth:`_check_write_block`) on the backing index."""
         # one registry lock hold from the sequence read to its put: a
         # concurrent append or rollover waits instead of reusing it
         with self.meta.lock("data_streams"):
@@ -2893,6 +2885,7 @@ class FlightsEtlPipeline:
             gen = meta["generation"]
             base = meta["next_seq"]
             backing = self._ds_backing(name, gen)
+            self._check_write_block(backing, "data_stream_append")
             rows = [
                 {"_id": f"{name}-{base + i}",
                  **{k: v for k, v in d.items()}}

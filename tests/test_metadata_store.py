@@ -116,6 +116,29 @@ def test_concurrent_appends_to_one_stream_take_distinct_ids(
     assert len(ids) == len(set(ids)) == 10
     assert p.meta.get("data_streams", "logs")["next_seq"] == 10
 
+
+def test_data_stream_append_passes_the_write_gate(spark, tmp_path):
+    """An append is a write to the stream's current backing index: a
+    read-only role and a write block on that index both refuse it, as
+    they refuse ``index_doc`` and ``bulk``."""
+    p = _pipeline(spark, tmp_path)
+    p.create_data_stream("logs")
+    doc = {"@timestamp": "2026-01-01T00:00:00", "msg": "a"}
+    assert p.data_stream_append("logs", [doc]) == 1
+    p.put_role("reader", ["*"], actions=("read",))
+    with p.as_role("reader"):
+        with pytest.raises(PermissionError, match="no 'write'"):
+            p.data_stream_append("logs", [doc])
+    p.add_block(".ds-logs-000001", "write")
+    with pytest.raises(PermissionError, match="write-blocked"):
+        p.bulk(".ds-logs-000001", [{"index": {"_id": "x", "doc": doc}}])
+    with pytest.raises(PermissionError, match="write-blocked"):
+        p.data_stream_append("logs", [doc])
+    p.remove_block(".ds-logs-000001", "write")
+    assert p.data_stream_append("logs", [doc]) == 1
+    assert p.search_data_stream("logs", {})["hits"].count() == 2
+    assert p.meta.get("data_streams", "logs")["next_seq"] == 2
+
 def test_bucket_count_lives_in_the_manifest(spark, tmp_path):
     p = _pipeline(spark, tmp_path / "split", n_buckets=4)
     p.bootstrap(_items(spark))

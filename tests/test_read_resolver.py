@@ -12,6 +12,7 @@ cases where the surfaces used to disagree.
 from __future__ import annotations
 
 import contextlib
+import uuid
 
 import pytest
 
@@ -206,3 +207,93 @@ def test_filtered_alias_filter_applies_after_union(p):
         assert {r["_index"] for r in got.select("_index").collect()} \
             == {"flight_gated"}
         assert got.count() == FLIGHTS
+
+
+STORED_SCRIPT = {"script": {"script": {"id": "class_is",
+                                       "params": {"cls": "nonstop"}}}}
+TERMS_LOOKUP = {"terms": {"pk": {
+    "index": "fare", "id": "DEN|ATL#2021-08-01T00:01:00#nonstop",
+    "path": "pk"}}}
+
+
+def _scroll_ids(p, pattern, body, size=3):
+    sid, page = p.create_scroll(pattern, body, size=size)
+    ids = []
+    try:
+        while rows := page.collect():
+            ids += [r["_id"] for r in rows]
+            page = p.scroll(sid)
+    finally:
+        p.clear_scroll(sid)
+    return ids
+
+
+@pytest.mark.parametrize("query", [STORED_SCRIPT, TERMS_LOOKUP],
+                         ids=["stored_script", "terms_lookup"])
+def test_pit_count_and_scroll_answer_like_search(p, query):
+    """Every search-shaped read prepares its body in the same step, so
+    a stored script or a terms lookup means the same on each."""
+    p.put_script("class_is", {"script": {
+        "source": "fare_class = params.cls"}})
+    try:
+        body = {"query": query, "size": 100}
+        want = sorted(r["_id"] for r in
+                      p.search("fare", body)["hits"].collect())
+        assert 0 < len(want) < FARES
+        pit = p.open_pit("fare")
+        try:
+            got = sorted(r["_id"] for r in
+                         p.search_pit(pit, body)["hits"].collect())
+        finally:
+            p.close_pit(pit)
+        assert got == want
+        assert p.count("fare", {"query": query}) == len(want)
+        assert sorted(_scroll_ids(p, "fare", {"query": query})) == want
+    finally:
+        p.delete_script("class_is")
+
+
+def test_scroll_rejects_masked_field_aggregation(p):
+    p.put_field_masking("fare", ["fare_class"])
+    try:
+        with pytest.raises(ValueError, match="masked"):
+            p.create_scroll("fare", {"aggs": {"by": {"terms": {
+                "field": "fare_class"}}}})
+    finally:
+        p.delete_field_masking("fare")
+
+
+def test_scroll_pages_compute_no_aggregations(p, spark):
+    """A scroll page returns hits only: an aggregation in the body adds
+    no Spark job to a page."""
+    sc = spark.sparkContext
+
+    def page_jobs(body):
+        sid, _ = p.create_scroll("fare", body, size=5)
+        group = f"scroll-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "scroll page jobs")
+        try:
+            p.scroll(sid)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            p.clear_scroll(sid)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    plain = page_jobs({})
+    assert 0 < plain
+    assert page_jobs({"aggs": {"by": {"terms": {"field": "pk"}}}}) <= plain
+
+
+@pytest.mark.parametrize("outer,inner", [
+    ("aggregations", "aggs"), ("aggs", "aggregations"),
+    ("aggregations", "aggregations")])
+def test_aggregations_spelling_answers_like_aggs(p, outer, inner):
+    def aggs(outer, inner):
+        return p.search("fare", {"size": 0, outer: {"by": {
+            "terms": {"field": "pk"},
+            inner: {"to": {"terms": {"field": "dest"}}}}}})["aggregations"]
+
+    want = aggs("aggs", "aggs")
+    assert want["by"]["buckets"][0]["to"]["buckets"]
+    assert aggs(outer, inner) == want

@@ -1921,7 +1921,7 @@ def test_masked_agg_rejection_runs_on_resolved_body(
     # simulate a resolution step (stored template / script expansion)
     # that introduces an agg on the masked field AFTER the raw body
     # was built — the rejection must still fire
-    orig = FlightsEtlPipeline._resolve_stored_scripts
+    orig = FlightsEtlPipeline._resolve_refs
 
     def inject(self, body):
         body = dict(orig(self, body))
@@ -1929,7 +1929,7 @@ def test_masked_agg_rejection_runs_on_resolved_body(
         return body
 
     monkeypatch.setattr(
-        FlightsEtlPipeline, "_resolve_stored_scripts", inject)
+        FlightsEtlPipeline, "_resolve_refs", inject)
     with pytest.raises(ValueError, match="masked"):
         p.search("fare", {"query": {"match_all": {}}})
     monkeypatch.undo()
